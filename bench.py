@@ -241,20 +241,6 @@ def main() -> None:
         )
     )
 
-    # PRODUCTION twin of x_winnow_fingerprints (r12 optimization round):
-    # same (id, n_chars, n_kgrams, n_fps, fps) output, BIT-IDENTICAL
-    # (pinned by test_winnow_fingerprints_arrow_twin_bit_exact), but the
-    # normalize -> k-gram hash -> rightmost-min chain runs as one
-    # Arrow-batched numpy pass instead of the interpreted JVM
-    # higher-order-function chain the oracle-portable lane keeps.
-    from snowflake_data_pipeline_demo_spark.operators.text import (
-        winnow_fingerprints_arrow,
-    )
-
-    extras["x_winnow_fingerprints_prod"] = lambda: winnow_fingerprints_arrow(
-        load(spark, SF_DIR, "documents"), k=4, w=3
-    )
-
     def _host_steal_sec() -> float | None:
         """Cumulative hypervisor steal time (seconds) from the
         aggregate cpu line of /proc/stat — field 8, in clock ticks.

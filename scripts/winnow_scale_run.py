@@ -14,7 +14,7 @@ posting-list join's behavior on a corpus with a REALISTIC vocabulary:
 - sweeps 5k / 20k / 80k docs, winnow_overlap_pairs with and without
   the max_df kill-switch, recording wall time, pair counts,
   planted-pair recall, fingerprint density vs the 2/(w+1) claim
-  (text.py winnow_codes docstring), and posting-list skew (max/p99
+  (text.py winnow_fingerprints docstring), and posting-list skew (max/p99
   document frequency).
 
 Results are recorded in SCALE.md. Run:  python scripts/winnow_scale_run.py
@@ -31,8 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from snowflake_data_pipeline_demo_spark.operators.text import (  # noqa: E402
-    ROLLING_MOD, _winnow_code_frame, winnow_fingerprints,
-    winnow_overlap_pairs,
+    winnow_fingerprints, winnow_hash_sets, winnow_overlap_pairs,
 )
 from snowflake_data_pipeline_demo_spark.caching import (  # noqa: E402
     release_lane_caches,
@@ -104,12 +103,9 @@ def main() -> None:
         ).first()
 
         # posting-list document frequency: the skew the join must eat
-        mod = F.lit(ROLLING_MOD).cast("long")
         post = (
-            _winnow_code_frame(docs, "text", "gid", K, W)
-            .select("gid", F.explode(F.array_distinct(
-                F.transform("_codes", lambda c: F.pmod(c, mod))
-            )).alias("h"))
+            winnow_hash_sets(docs, "text", "gid", K, W)
+            .select("gid", F.explode("hv").alias("h"))
             .groupBy("h").agg(F.count("*").alias("df"))
         )
         skew = post.agg(

@@ -40,7 +40,7 @@ from snowflake_data_pipeline_demo_spark.caching import (  # noqa: E402
     release_lane_caches,
 )
 from snowflake_data_pipeline_demo_spark.operators.text import (  # noqa: E402
-    ROLLING_MOD, _winnow_code_frame, winnow_overlap_pairs,
+    winnow_hash_sets, winnow_overlap_pairs,
 )
 from snowflake_data_pipeline_demo_spark.session import get_spark  # noqa: E402
 
@@ -65,12 +65,9 @@ def main() -> None:
         docs.count()
 
         # posting-list document frequency under the planted skew
-        mod = F.lit(ROLLING_MOD).cast("long")
         post = (
-            _winnow_code_frame(docs, "text", "gid", K, W)
-            .select("gid", F.explode(F.array_distinct(
-                F.transform("_codes", lambda c: F.pmod(c, mod))
-            )).alias("h"))
+            winnow_hash_sets(docs, "text", "gid", K, W)
+            .select("gid", F.explode("hv").alias("h"))
             .groupBy("h").agg(F.count("*").alias("df"))
         )
         skew = post.agg(

@@ -1,16 +1,17 @@
 """Text analysis for large-scale training-data pipelines: tokenization,
 language-ID heuristic, quality scoring, token counting, fingerprinting.
 
-These go beyond the reference's surface (BASELINE.json north star). All
-hot-path computation is built-in ``pyspark.sql.functions`` expressions —
-JVM-side, codegen'd, no Python in the data path — and every construct is
-chosen to be bit-reproducible in ANSI SQL so the DuckDB oracle can
-verify it (md5-based hashing, integer polynomial arithmetic, fixed
-stopword tables).
+These go beyond the reference's surface (BASELINE.json north star).
+Hot-path computation is built-in ``pyspark.sql.functions`` expressions —
+JVM-side, codegen'd, no Python in the data path — except winnowing,
+whose numpy kernel runs behind one Arrow-batched pandas UDF; every
+construct is chosen to be bit-reproducible in ANSI SQL so the DuckDB
+oracle can verify it (md5-based hashing, integer polynomial arithmetic,
+fixed stopword tables).
 
-Scale notes: everything here is a narrow per-row projection — no
-shuffle, no UDF serialization; at 100 TB it runs at parquet-scan speed
-and pairs with dedup.py's LSH for the shuffle-bearing stages.
+Scale notes: the per-row operators are narrow projections — no
+shuffle; at 100 TB they run at parquet-scan speed and pair with
+dedup.py's LSH for the shuffle-bearing stages.
 """
 
 from __future__ import annotations
@@ -1098,172 +1099,19 @@ def histogram_merge_quantiles(hists, group_col: str = "source",
     )
 
 
-def winnow_codes(c: Column | str, k: int = 4, w: int = 3) -> Column:
-    """Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken,
-    "Winnowing: Local Algorithms for Document Fingerprinting",
-    SIGMOD'03 — the MOSS algorithm) over the normalized character
-    stream, as one shuffle-free JVM expression.
-
-    Every k-gram of the normalized text gets the portable polynomial
-    hash (same ``(acc*131 + ascii) % 1e9+7`` arithmetic as
-    :func:`rolling_hash`, so DuckDB replays it bit-for-bit); a window
-    of ``w`` consecutive k-gram hashes slides over the stream and the
-    RIGHTMOST minimum of each window is selected. The guarantee that
-    makes this the standard document fingerprint: any substring match
-    of length >= w + k - 1 between two documents is caught by at least
-    one shared selected hash, while expected density is only 2/(w+1).
-    At 100 TB that bounded per-doc set is what you can afford to
-    invert: overlap detection is a (hash -> doc) posting-list
-    equi-join over the exploded codes — the same banded-join shape as
-    MinHash LSH — never a text-to-text comparison.
-
-    Each selection is encoded as ``pos * ROLLING_MOD + hash`` — hash
-    is strictly below ROLLING_MOD so the code is collision-free and
-    decodes by div/mod, and it stays int64-safe for any document under
-    ~9.2e9 chars. Sorting codes therefore sorts by (pos, hash) = by
-    position, identically in Spark and DuckDB. (Rightmost-min
-    selection is monotone non-decreasing in pos as the window slides,
-    so the distinct picks are already position-ordered; the explicit
-    array_sort just pins the contract rather than relying on
-    array_distinct's order preservation.)
-
-    Degenerate inputs: n < k yields zero k-grams and an empty code
-    array; 1 <= #hashes < w winnows a single window over all hashes.
-    Both lanes are F.when-guarded because ``sequence(1, 0)`` DESCENDS
-    in Spark (the documented repo hazard — see bpe_train, shingles).
-    """
-    return _winnow_select(_kgram_hashes(_norm_chars(c), k), w)
-
-
-def _norm_chars(c: Column | str) -> Column:
-    """Normalized text as ``array<string>`` of single characters."""
-    return F.filter(F.split(normalize(c), ""), lambda x: x != "")
-
-
-def _kgram_hashes(chars: Column, k: int) -> Column:
-    """``array<long>`` of polynomial k-gram hashes over a character
-    array (empty when the doc has fewer than ``k`` chars).
-
-    NOTE: ``chars`` sits inside the transform lambda, so it is
-    re-evaluated per k-gram position — pass a bound column reference
-    (winnow_fingerprints stages one), or accept O(n^2) splitting for
-    row-scale use (winnow_codes)."""
-    m = F.size(chars) - F.lit(k) + F.lit(1)  # number of k-grams
-    return F.when(
-        m >= 1,
-        F.transform(
-            F.sequence(F.lit(1), m),
-            lambda i: F.aggregate(
-                F.slice(chars, i, k),
-                F.lit(0).cast("long"),
-                lambda acc, ch: (acc * ROLLING_BASE + F.ascii(ch))
-                % ROLLING_MOD,
-            ),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
-
-
-def _winnow_select(hashes: Column, w: int) -> Column:
-    """Rightmost-min w-window selection over a k-gram-hash array,
-    encoded as sorted distinct ``pos * ROLLING_MOD + hash`` codes.
-
-    NOTE: ``hashes`` is re-evaluated per window inside the transform
-    lambda (higher-order functions are interpreted, no subexpression
-    caching) — callers MUST pass a bound column reference, not the
-    hashing expression itself, or the cost goes O(n_windows * n * k).
-    winnow_fingerprints stages the hash array through a projection for
-    exactly this reason; winnow_codes is the convenience composition
-    for row-scale use (tests, ad-hoc exprs)."""
-
-    def pick(j: Column) -> Column:
-        win = F.slice(hashes, j, w)
-        mn = F.array_min(win)
-        right = F.size(win) - F.array_position(F.reverse(win), mn) + 1
-        pos = (j + right - F.lit(1)).cast("long")
-        return pos * F.lit(ROLLING_MOD).cast("long") + mn
-
-    picks = F.when(
-        F.size(hashes) >= 1,
-        F.transform(
-            F.sequence(
-                F.lit(1), F.greatest(F.size(hashes) - F.lit(w) + 1, F.lit(1))
-            ),
-            pick,
-        ),
-    ).otherwise(F.array().cast("array<long>"))
-    return F.array_sort(F.array_distinct(picks))
-
-
-def winnow_fingerprints(df, text_col: str = "text", id_col: str = "doc_id",
-                        k: int = 4, w: int = 3):
-    """Per-document winnowing fingerprints as a pure projection:
-    ``(id, n_chars, n_kgrams, n_fps, fps)`` with ``fps`` serializing
-    each selection as ``pos:hash`` in position order (atomic column —
-    the driver's canonicalizer cannot hash arrays).
-
-    NO shuffle (pinned by the plan-shape sweep) — the fingerprint step
-    composes into any scan for free; the shuffle only appears in the
-    downstream posting-list join when two corpora are compared.
-
-    Staged as chained projections so the char array, the O(n*k) hash
-    array, and the code array are each computed ONCE per row and every
-    higher-order-function lambda reads a bound column reference
-    (lambdas re-evaluate their whole subtree per element — unstaged,
-    the split alone goes O(n^2) per doc); CollapseProject leaves the
-    stages alone because the intermediates are non-cheap and
-    multiply-referenced."""
-    mod = F.lit(ROLLING_MOD).cast("long")
-    coded = _winnow_code_frame(df, text_col, id_col, k, w)
-    return coded.select(
-        id_col, "n_chars", "n_kgrams",
-        F.size("_codes").cast("long").alias("n_fps"),
-        F.array_join(
-            F.transform(
-                "_codes",
-                lambda cd: F.concat_ws(
-                    ":", F.floor(cd / mod).cast("long"), F.pmod(cd, mod)
-                ),
-            ),
-            ",",
-        ).alias("fps"),
-    )
-
-
-def _winnow_code_frame(df, text_col: str, id_col: str, k: int, w: int):
-    """``(id, n_chars, n_kgrams, _codes)`` staged projection chain —
-    the shared core of winnow_fingerprints / winnow_overlap_pairs (see
-    winnow_fingerprints for why the stages must not be fused)."""
-    ch = df.select(
-        F.col(id_col),
-        _norm_chars(text_col).alias("_chars"),
-    )
-    hs = ch.select(
-        id_col,
-        F.size("_chars").cast("long").alias("n_chars"),
-        _kgram_hashes(F.col("_chars"), k).alias("_hs"),
-    )
-    return hs.select(
-        id_col, "n_chars",
-        F.size("_hs").cast("long").alias("n_kgrams"),
-        _winnow_select(F.col("_hs"), w).alias("_codes"),
-    )
-
-
 def _winnow_numpy_kernel(k: int, w: int):
-    """Per-document numpy replay of the staged JVM winnow chain — the
-    shared core of both Arrow production arms
-    (:func:`winnow_fingerprints_arrow`,
-    :func:`winnow_overlap_pairs` ``engine='arrow'``).
+    """Per-document winnowing kernel, shared by :func:`winnow_fingerprints`
+    and :func:`winnow_hash_sets`.
 
     Returns ``one(t) -> (n_chars, n_kgrams, codes)`` with ``codes`` a
     sorted-distinct int64 ndarray of ``pos*MOD+hash`` selections
-    (empty for n_kgrams == 0; ``(None, 0, empty)`` for null text, the
-    JVM form's null lanes). Bit-exactness seams are spelled out where
-    a naive Python port diverges from the JVM semantics: Java's
-    ``\\s`` is the ASCII class (Python's is Unicode-aware), Spark
-    ``trim`` strips ' ' only, and codepoints come from UTF-32 so an
-    astral char is ONE element, matching Spark ``split``/``ascii``
-    (the r06-verified codepoint contract)."""
+    (empty for n_kgrams == 0; ``(None, 0, empty)`` for null text).
+    The semantics are the engine's JVM ones, spelled out where a naive
+    Python port diverges: Java's ``\\s`` is the ASCII class
+    ``[ \\t\\n\\x0b\\f\\r]`` (Python's is Unicode-aware), Spark ``trim``
+    strips ' ' only, and codepoints come from UTF-32 so an astral char
+    is ONE element, matching Spark ``split``/``ascii`` and DuckDB
+    ``substr``/``ascii``."""
     import re
 
     import numpy as np
@@ -1297,40 +1145,44 @@ def _winnow_numpy_kernel(k: int, w: int):
         right0 = (wins.shape[1] - 1
                   - np.argmax(wins[:, ::-1] == mn[:, None], axis=1))
         pos = np.arange(1, wins.shape[0] + 1, dtype=np.int64) + right0
-        # sorted distinct, like the JVM form's array_sort(array_distinct)
         return n, m, np.unique(pos * mod + mn)
 
     return one
 
 
-def winnow_fingerprints_arrow(df, text_col: str = "text",
-                              id_col: str = "doc_id",
-                              k: int = 4, w: int = 3):
-    """PRODUCTION twin of :func:`winnow_fingerprints`: one Arrow-batched
-    pandas UDF runs the whole normalize -> k-gram poly-hash ->
-    rightmost-min chain in numpy per document, replacing the staged
-    JVM higher-order-function chain (interpreted CodegenFallback
-    lambdas, one fold per k-gram and one slice/min/position per window)
-    with k vectorized passes over the codepoint array plus one
-    sliding-window min.
+def winnow_fingerprints(df, text_col: str = "text", id_col: str = "doc_id",
+                        k: int = 4, w: int = 3):
+    """Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken,
+    "Winnowing: Local Algorithms for Document Fingerprinting",
+    SIGMOD'03 — the MOSS algorithm) over the normalized character
+    stream: ``(id, n_chars, n_kgrams, n_fps, fps)`` with ``fps``
+    serializing each selection as ``pos:hash`` in position order
+    (atomic column — the driver's canonicalizer cannot hash arrays).
 
-    BIT-EXACT by construction, unlike the float LSH twin
-    (:func:`~..similarity.lsh_signatures_pandas`): every step is int64
-    arithmetic with the same mod-at-each-step order, and the JVM/Python
-    codepoint contract is already pinned (Spark ``ascii()``/``split``
-    and Python ``ord()`` agree on codepoints incl. astral plane —
-    verified r06, tests/test_extensions.py). The one subtle seam is
-    NORMALIZATION: Java's ``\\s`` (regexp_replace) is the ASCII class
-    ``[ \\t\\n\\x0b\\f\\r]`` while Python's ``re`` ``\\s`` is
-    Unicode-aware — this twin spells out the Java class, and Spark
-    ``trim`` strips ' ' only, so ``.strip(' ')`` not ``.strip()``.
-    Pinned bit-identical to the JVM form over unicode whitespace /
-    astral / tie / degenerate corpora by
-    test_winnow_fingerprints_arrow_twin_bit_exact.
+    Every k-gram of the :func:`normalize`-d text gets the portable
+    polynomial hash (same ``(acc*131 + ascii) % 1e9+7`` arithmetic as
+    :func:`rolling_hash`, so DuckDB replays it bit-for-bit); a window
+    of ``w`` consecutive k-gram hashes slides over the stream and the
+    RIGHTMOST minimum of each window is selected. Any substring match
+    of length >= w + k - 1 between two documents is caught by at least
+    one shared selected hash, while expected density is only 2/(w+1),
+    so overlap detection is a (hash -> doc) posting-list equi-join over
+    a bounded per-doc set (:func:`winnow_overlap_pairs`), never a
+    text-to-text comparison.
 
-    Same output contract: ``(id, n_chars, n_kgrams, n_fps, fps)``,
-    null text -> (null, 0, 0, '') like the JVM form's null lanes.
-    """
+    Each selection is the code ``pos * ROLLING_MOD + hash`` (1-based
+    k-gram position): hash is strictly below ROLLING_MOD, so codes are
+    collision-free, decode by div/mod, stay int64-safe for documents
+    under ~9.2e9 chars, and sort by position.
+
+    Degenerate inputs: n < k yields zero k-grams and ``fps = ''``;
+    1 <= n_kgrams < w winnows a single window over all hashes; null
+    text gives ``(id, null, 0, 0, '')``.
+
+    One Arrow-batched pandas UDF runs :func:`_winnow_numpy_kernel`
+    per document and receives only the text column; the result is a
+    shuffle-free projection (``ArrowEvalPython``, plan-pinned) that
+    composes into any scan."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -1355,101 +1207,64 @@ def winnow_fingerprints_arrow(df, text_col: str = "text",
             columns=["n_chars", "n_kgrams", "n_fps", "fps"],
         )
 
-    # pass ONLY the text column through the Arrow boundary (guide §4.2)
     res = df.select(id_col, fp(_col(text_col).cast("string")).alias("_fp"))
     return res.select(id_col, "_fp.n_chars", "_fp.n_kgrams", "_fp.n_fps",
                       "_fp.fps")
 
 
+def winnow_hash_sets(df, text_col: str = "text", id_col: str = "doc_id",
+                     k: int = 8, w: int = 4):
+    """``(id, hv)``: each document's DISTINCT selected winnowing hash
+    values as ``array<long>`` (codes mod ROLLING_MOD, positions
+    dropped; empty for n < k and for null text) — the posting-list
+    projection of :func:`winnow_overlap_pairs`."""
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
+
+    one = _winnow_numpy_kernel(k, w)
+    mod = ROLLING_MOD
+
+    @pandas_udf("array<long>")
+    def hv(texts: pd.Series) -> pd.Series:
+        return pd.Series([np.unique(one(t)[2] % mod).tolist() for t in texts])
+
+    return df.select(
+        F.col(id_col), hv(_col(text_col).cast("string")).alias("hv")
+    )
+
+
 def winnow_overlap_pairs(df, text_col: str = "text", id_col: str = "doc_id",
                          k: int = 8, w: int = 4, min_shared: int = 3,
-                         max_df: int | None = None, engine: str = "jvm"):
+                         max_df: int | None = None):
     """Cross-document overlap report over winnowing fingerprints (the
     MOSS comparison step): explode each doc's DISTINCT selected hash
-    values into a (hash -> doc) posting list, self-join on the hash,
-    and score each pair by shared-fingerprint count and containment
-    (shared / smaller fingerprint set).
+    values (:func:`winnow_hash_sets`) into a (hash -> doc) posting
+    list, self-join on the hash, and score each pair by
+    shared-fingerprint count and containment (shared / smaller
+    fingerprint set).
 
-    Scale: text is hashed once in the staged projection; only (hash,
-    id, n_fp) postings shuffle, never text. The pair generator is an
-    equi-join on the hash value (AQE splits skewed buckets), and
-    ``max_df`` is the production kill-switch for boilerplate
-    fingerprints — a hash present in df docs (a site footer, a
-    license header) generates df^2/2 pairs while carrying no overlap
-    signal, so MOSS-style deployments drop top-df fingerprints before
-    pairing. ``min_shared`` suppresses incidental single-gram
-    collisions. The posting frame is cached before the self-join:
-    winnow codes are CodegenFallback HOF chains, the same measured
-    30x re-derivation hazard ngram_jaccard_pairs documents.
+    Scale: text is hashed once; only (hash, id, n_fp) postings
+    shuffle, never text. The pair generator is an equi-join on the
+    hash value (AQE splits skewed buckets), and ``max_df`` is the
+    production kill-switch for boilerplate fingerprints — a hash
+    present in df docs (a site footer, a license header) generates
+    df^2/2 pairs while carrying no overlap signal, so MOSS-style
+    deployments drop top-df fingerprints before pairing. Under planted
+    boilerplate the uncapped join's ANSWER is wrong, not just slow
+    (every doc pair shares the footer's fingerprints), so ``max_df``
+    is a correctness control; always set it at corpus scale
+    (scripts/winnow_scale_run.py, scripts/winnow_skew_run.py,
+    SCALE.md). ``min_shared`` suppresses incidental single-gram
+    collisions. The hash-set frame is cached before the self-join so
+    the Python kernel runs once per document, not once per consumer.
 
     The containment denominator is the distinct-hash-value set size
     (a position-repeated hash counts once), deliberately different
     from winnow_fingerprints' positional ``n_fps``.
-
-    Measured on a realistic 10k-word Zipf vocabulary at 5k/20k/80k
-    docs (scripts/winnow_scale_run.py; SCALE.md round-7): posting df
-    grows linearly with corpus size, so raw join pairs grow
-    QUADRATICALLY (4.97M -> 1.27B at 16x docs) while ``max_df=64``
-    bounds output pairs near-linearly (94k -> 217k) at planted-copy
-    recall 1.0 — always set ``max_df`` at corpus scale; it is the
-    posting-list analog of dropping stopwords.
-
-    Under PLANTED boilerplate (scripts/winnow_skew_run.py; SCALE.md
-    round-8: a 24-token footer byte-identical in every doc), the
-    uncapped join isn't just quadratic (analytic bound 1.48e11 pairs
-    at 80k docs) — its ANSWER is wrong: 46 shared footer fingerprints
-    >= min_shared makes every doc pair "matching" (the 5k run emits
-    exactly C(5000,2) pairs). ``max_df`` is therefore a correctness
-    control, not merely a perf guard: page furniture must not count
-    as content overlap. Capped recall on planted copies stayed 1.0 at
-    all three scales.
-
-    ``engine='arrow'`` (r12 optimization round) swaps the fingerprint
-    PROJECTION for the numpy kernel
-    (:func:`_winnow_numpy_kernel` via one Arrow-batched UDF emitting
-    each doc's distinct hash-value set directly) — same hash values
-    per doc (pinned by test_winnow_overlap_arrow_engine_matches_jvm;
-    set order differs, immaterial past the explode), same joins and
-    scoring downstream. The JVM form stays the default because it is
-    the oracle-portable arm the x_winnow_overlap lane gates; the
-    arrow arm is the production choice at corpus scale — the
-    interpreted HOF chain is the stage that grows super-linearly
-    (measured 31x at 200k docs on the fingerprint projection,
-    OPTIMIZATION_r12.md).
     """
-    if engine not in ("jvm", "arrow"):
-        raise ValueError(
-            f"winnow_overlap_pairs: unknown engine {engine!r} "
-            "(expected 'jvm' or 'arrow')"
-        )
-    mod = F.lit(ROLLING_MOD).cast("long")
-    if engine == "arrow":
-        import numpy as np
-        from pyspark.sql.functions import pandas_udf
-
-        one = _winnow_numpy_kernel(k, w)
-        imod = ROLLING_MOD
-
-        @pandas_udf("array<long>")
-        def hv_udf(texts: pd.Series) -> pd.Series:
-            return pd.Series(
-                [np.unique(one(t)[2] % imod).tolist() for t in texts]
-            )
-
-        fp = lane_cache(df.select(
-            F.col(id_col),
-            hv_udf(_col(text_col).cast("string")).alias("_hv"),
-        ))
-    else:
-        cf = _winnow_code_frame(df, text_col, id_col, k, w)
-        fp = lane_cache(cf.select(
-            F.col(id_col),
-            F.array_distinct(
-                F.transform("_codes", lambda cd: F.pmod(cd, mod))
-            ).alias("_hv"),
-        ))
+    fp = lane_cache(winnow_hash_sets(df, text_col, id_col, k, w))
     ex = fp.select(
-        id_col, F.size("_hv").alias("n_fp"), F.explode("_hv").alias("h")
+        id_col, F.size("hv").alias("n_fp"), F.explode("hv").alias("h")
     )
     if max_df is not None:
         keep = (

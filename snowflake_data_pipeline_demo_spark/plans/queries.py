@@ -9,8 +9,9 @@ and compares row count + schema + order-insensitive value hash, so:
   (double summation order differs between engines; decimal doesn't),
 - final decimals are cast to DOUBLE to normalize the output type.
 
-Builders only use pyspark.sql.functions (JVM/codegen path) — no Python
-UDFs anywhere in this file.
+Builders use pyspark.sql.functions (JVM/codegen path); a Python UDF
+(Arrow-batched, never row-pickled) only where it is measured faster
+than the JVM form, as the winnowing kernel in operators/text.py is.
 """
 
 from __future__ import annotations
@@ -517,7 +518,7 @@ def u1_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     The SAME struct form measured a REGRESSION for flagship (its three
     ext consumers re-pay the field extraction + epoch decode per read:
     4.73/5.04 -> 5.00/6.19 s), so the flattened 17-column boundary
-    stays for the full-slice lanes — see OPTIMIZATION_r13.md."""
+    stays for the full-slice lanes."""
     from ..functions.variant import extract_variant
     from ..sources.catalog import TRIP_DOC_SCHEMA
     from pyspark.sql import types as T

@@ -25,6 +25,32 @@ logger = logging.getLogger(__name__)
 
 CURRENT_ACCOUNT_CONF = "engine.current_account"
 
+#: JVM locale pin. Spark's lower()/upper() on non-ASCII text go through
+#: java.lang.String casing under the JVM DEFAULT locale, so e.g. a tr_TR
+#: JVM lowercases 'I' to dotless-i. Pinning en-US on every JVM (driver
+#: and executors) makes casing environment-independent, so JVM-side
+#: text operators (operators/text.py:normalize) and the Python-side
+#: winnowing kernel (locale-independent str.lower()) case text alike.
+LOCALE_OPTS = "-Duser.language=en -Duser.country=US"
+
+
+def jvm_opts() -> str:
+    """extraJavaOptions for the driver and executor JVMs.
+
+    GC: G1 measured 30.1s vs ParallelGC 31.8s on the headline bench at
+    24g, and ParallelGC at 64g degenerates (full-GC stalls, 298s
+    total), so the default keeps the JVM-default G1.
+    ``SPARK_GRAFT_JVM_OPTS`` is the experiment hook: it replaces
+    ``-XX:+UseG1GC`` and is appended to the locale pin, unless it sets
+    ``-Duser.language`` itself, in which case it is used as given."""
+    env = os.environ.get("SPARK_GRAFT_JVM_OPTS")
+    if env is None:
+        return f"-XX:+UseG1GC {LOCALE_OPTS}"
+    if "-Duser.language" in env:
+        return env
+    return f"{LOCALE_OPTS} {env}"
+
+
 _DEFAULTS = {
     # Local mode: one JVM; size shuffle partitions to cores, not 200.
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
@@ -34,21 +60,8 @@ _DEFAULTS = {
     # runs); at 16g the same bench holds 28-30s with no outliers and
     # flagship drops ~40%. The working set is far below 16g.
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-    # GC for the single local-mode JVM (driver + executors share one
-    # heap). G1 measured 30.1s vs ParallelGC 31.8s on the headline bench
-    # at 24g; ParallelGC at 64g degenerates (full-GC stalls, 298s total).
-    # Keep the JVM-default G1; env hook for experiments.
-    # Locale is pinned to en-US (r12 ADVICE): Spark's non-ASCII lower()/
-    # upper() go through java.lang.String casing under the JVM DEFAULT
-    # locale, so e.g. a tr_TR JVM lowercases 'I' to dotless-i — which
-    # would silently break the bit-exact contract between the JVM
-    # winnow chain and its numpy/Arrow production twin
-    # (operators/text.py), and any other casing-sensitive operator.
-    # Python's str.lower() is locale-independent; pinning the JVM makes
-    # the engine's casing environment-independent too.
-    "spark.driver.extraJavaOptions": os.environ.get(
-        "SPARK_GRAFT_JVM_OPTS",
-        "-XX:+UseG1GC -Duser.language=en -Duser.country=US"),
+    "spark.driver.extraJavaOptions": jvm_opts(),
+    "spark.executor.extraJavaOptions": jvm_opts(),
     # AQE: coalesce small shuffle partitions, split skewed ones at runtime.
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",

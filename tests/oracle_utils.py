@@ -158,3 +158,42 @@ def negative_zero_sweep(frames: dict[str, pd.DataFrame]) -> list[str]:
                     "with `round(...) + 0`"
                 )
     return problems
+
+
+#: Java's regex ``\s`` (the ASCII class) — Python's ``\s`` also matches
+#: Unicode whitespace (NBSP, U+3000, \x1c), which Spark keeps as content
+JAVA_WS = "[ \t\n\x0b\f\r]+"
+
+
+def winnow_replay(text: str | None, k: int = 4, w: int = 3) -> tuple:
+    """Pure-Python winnowing (Schleimer'03 rightmost-min) with the
+    engine's JVM text semantics spelled out: lower(), Java ``\\s``
+    collapsed to ' ', Spark ``trim`` (strips ' ' only), codepoints as
+    chars. Returns the ``winnow_fingerprints`` row
+    ``(n_chars, n_kgrams, n_fps, fps)`` with ``fps`` the ``pos:hash``
+    selections (1-based k-gram position) in position order."""
+    import re
+
+    if text is None:
+        return (None, 0, 0, "")
+    mod, base = 1_000_000_007, 131
+    s = re.sub(JAVA_WS, " ", text.lower()).strip(" ")
+    hashes = []
+    for i in range(max(len(s) - k + 1, 0)):
+        acc = 0
+        for ch in s[i:i + k]:
+            acc = (acc * base + ord(ch)) % mod
+        hashes.append(acc)
+    picks = set()
+    for j in range(max(len(hashes) - w + 1, 1) if hashes else 0):
+        win = hashes[j:j + w]
+        mn = min(win)
+        right = len(win) - 1 - win[::-1].index(mn)  # rightmost min
+        picks.add((j + right + 1, mn))
+    fps = ",".join(f"{p}:{h}" for p, h in sorted(picks))
+    return (len(s), len(hashes), len(picks), fps)
+
+
+def fps_pairs(fps: str) -> list[tuple[int, int]]:
+    """``winnow_fingerprints.fps`` decoded to ``(pos, hash)`` pairs."""
+    return [tuple(map(int, c.split(":"))) for c in fps.split(",") if c]

@@ -6,10 +6,12 @@
 - decontaminate's left_semi -> left_anti rewrite flipped behavior for
   NULL-id rows (semi dropped them, anti keeps them) — pin the intended
   (documented) behavior on both branches;
-- the JVM default locale is pinned to en-US by session._DEFAULTS so
-  Spark's String-casing (lower/upper on non-ASCII) matches Python's
-  locale-independent str.lower() — the winnow Arrow twin's bit-exact
-  contract depends on it.
+- the JVM default locale is pinned to en-US on the driver and executor
+  JVMs so Spark's String-casing (lower/upper on non-ASCII) matches
+  Python's locale-independent str.lower(), which the winnowing kernel
+  uses;
+- x_stream_minhash_dedup's per-batch input counts skip a NULL doc_id
+  (it belongs to no batch) instead of crashing the lane.
 """
 from __future__ import annotations
 
@@ -110,14 +112,50 @@ def test_decontaminate_null_id_seam_pinned(spark, eval_docs):
     assert kept_spine.count() == 0  # spine drops everything incl. NULL id
 
 
-def test_jvm_default_locale_pinned_en_us(spark):
-    """session._DEFAULTS pins -Duser.language=en -Duser.country=US so
-    JVM String casing is environment-independent (the winnow Arrow
-    twin's bit-exact contract, r12 ADVICE). Skipped when the session
-    was built with a custom SPARK_GRAFT_JVM_OPTS."""
-    import os
+def test_jvm_default_locale_pinned_en_us(spark, monkeypatch):
+    """session.jvm_opts() composes the locale pin into the driver AND
+    executor extraJavaOptions: by default next to G1; a
+    SPARK_GRAFT_JVM_OPTS override is appended to the pin, unless it
+    sets -Duser.language itself. The live session's options end with
+    the composed ones, and its JVM runs en_US whenever they hold the pin."""
+    from snowflake_data_pipeline_demo_spark import session
 
-    if "SPARK_GRAFT_JVM_OPTS" in os.environ:
-        pytest.skip("custom JVM opts override the locale pin")
-    loc = spark.sparkContext._jvm.java.util.Locale.getDefault().toString()
-    assert loc == "en_US"
+    conf = spark.sparkContext.getConf()
+    live = conf.get("spark.driver.extraJavaOptions")
+    assert conf.get("spark.executor.extraJavaOptions") == live
+    # PySpark prepends its own module flags (--add-opens ...)
+    assert live.endswith(session.jvm_opts())
+    if session.LOCALE_OPTS in live:
+        loc = spark.sparkContext._jvm.java.util.Locale.getDefault()
+        assert loc.toString() == "en_US"
+
+    pin = "-Duser.language=en -Duser.country=US"
+    monkeypatch.delenv("SPARK_GRAFT_JVM_OPTS", raising=False)
+    assert session.jvm_opts() == f"-XX:+UseG1GC {pin}"
+    monkeypatch.setenv("SPARK_GRAFT_JVM_OPTS", "-XX:+UseParallelGC")
+    assert session.jvm_opts() == f"{pin} -XX:+UseParallelGC"
+    own = "-XX:+UseParallelGC -Duser.language=tr -Duser.country=TR"
+    monkeypatch.setenv("SPARK_GRAFT_JVM_OPTS", own)
+    assert session.jvm_opts() == own
+
+
+def test_stream_minhash_dedup_skips_null_doc_id(spark, tmp_path):
+    """A NULL doc_id belongs to no mod-3 batch: the lane's grouped
+    per-batch input count skips its NULL group key (it used to raise
+    TypeError in int(None)) and the batches match the non-NULL docs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from snowflake_data_pipeline_demo_spark.plans.queries import QUERIES
+
+    ids = [0, 1, 2, 3, 4, 5, None]
+    texts = [f"document {i} about topic {i * 7} with words w{i} x{i} y{i}"
+             for i in range(len(ids))]
+    pq.write_table(pa.table({"doc_id": pa.array(ids, pa.int64()),
+                             "text": texts}),
+                   tmp_path / "documents.parquet")
+    rows = QUERIES["x_stream_minhash_dedup"].builder(
+        spark, str(tmp_path)).orderBy("batch_id").collect()
+    # batch 1 also re-ingests batch 0's two docs under fresh ids
+    assert [(r.batch_id, r.n_in) for r in rows] == [(0, 2), (1, 4), (2, 2)]
+    assert rows[1].n_dropped == 2

@@ -74,7 +74,6 @@ _COLUMN_FNS = {
     # encoding_quality returns a LIST of named columns
     "encoding_quality": lambda c: F.struct(*T.encoding_quality(c)),
     "rolling_hash": T.rolling_hash,
-    "winnow_codes": T.winnow_codes,
     "shingles": dedup.shingles,
     "simhash16": dedup.simhash16,
 }
@@ -133,12 +132,11 @@ _FRAME_CASES = {
     "paragraph_dedup": lambda s, d: dedup.paragraph_dedup(d),
     "line_dedup_within_doc": lambda s, d: dedup.line_dedup_within_doc(d),
     "winnow_fingerprints": lambda s, d: T.winnow_fingerprints(d),
-    "winnow_fingerprints_arrow": lambda s, d: T.winnow_fingerprints_arrow(d),
     "winnow_overlap_pairs": lambda s, d: T.winnow_overlap_pairs(
         d, min_shared=1
     ),
-    "winnow_overlap_pairs_arrow": lambda s, d: T.winnow_overlap_pairs(
-        d, min_shared=1, engine="arrow"
+    "winnow_overlap_max_df": lambda s, d: T.winnow_overlap_pairs(
+        d, min_shared=1, max_df=1
     ),
     # chunking / packing
     "chunk_by_tokens": lambda s, d: chunking.chunk_by_tokens(d),

@@ -1793,37 +1793,15 @@ def test_embedding_dim_stats_semantics(spark):
     assert out[1]["std"] == 0.0  # dead dimension
 
 
-def _winnow_ref(s, k=4, w=3):
-    """Driver-side replay of winnowing (Schleimer et al. §3): k-gram
-    polynomial hashes, rightmost-min per w-window, pos*MOD+hash codes."""
-    import re
-    MOD, B = 1_000_000_007, 131
-    s = re.sub(r"\s+", " ", s.lower()).strip()
-    n = len(s)
-    if n < k:
-        return []
-    hs = []
-    for i in range(n - k + 1):
-        h = 0
-        for ch in s[i:i + k]:
-            h = (h * B + ord(ch)) % MOD
-        hs.append(h)
-    picks = set()
-    for j in range(max(len(hs) - w + 1, 1)):
-        win = hs[j:j + w]
-        mn = min(win)
-        right = len(win) - 1 - win[::-1].index(mn)
-        picks.add((j + right + 1) * MOD + mn)
-    return sorted(picks)
-
-
 def test_winnow_fingerprints_match_reference_replay(spark):
-    """Spark winnow_codes == the independent Python replay over mixed
+    """winnow_fingerprints == the independent Python replay over mixed
     docs (incl. shared-substring pair, short/empty/ties), and the two
     winnowing guarantees hold: (1) every w-window of k-gram hashes
     contains a selected position — so any shared substring of length
     >= w+k-1 shares a fingerprint; (2) docs sharing such a substring
     share at least one selected HASH value."""
+    from oracle_utils import fps_pairs, winnow_replay
+
     from snowflake_data_pipeline_demo_spark.operators import text as T
 
     shared = "the winnowing guarantee holds for this exact span"
@@ -1843,114 +1821,137 @@ def test_winnow_fingerprints_match_reference_replay(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {r["doc_id"]: r for r in
            T.winnow_fingerprints(df).collect()}
-    MOD = 1_000_000_007
     for did, txt in rows:
-        ref = _winnow_ref(txt)
-        got = ([] if out[did]["fps"] == "" else
-               [int(p) * MOD + int(h) for p, h in
-                (c.split(":") for c in out[did]["fps"].split(","))])
-        assert got == ref, did
-        assert out[did]["n_fps"] == len(ref)
+        assert tuple(out[did])[1:] == winnow_replay(txt), did
         # guarantee (1): window coverage
-        sel_pos = {c // MOD for c in ref}
+        sel_pos = {p for p, _ in fps_pairs(out[did]["fps"])}
         m = out[did]["n_kgrams"]
         for j in range(1, max(m - 3 + 1, 1) + 1 if m >= 1 else 1):
             assert sel_pos & set(range(j, min(j + 3, m + 1))), (did, j)
     # guarantee (2): the shared >= w+k-1 substring forces a common hash
-    h1 = {c % MOD for c in _winnow_ref(rows[0][1])}
-    h2 = {c % MOD for c in _winnow_ref(rows[1][1])}
-    assert h1 & h2
-    sh1 = {c.split(":")[1] for c in out[1]["fps"].split(",")}
-    sh2 = {c.split(":")[1] for c in out[2]["fps"].split(",")}
+    sh1 = {h for _, h in fps_pairs(out[1]["fps"])}
+    sh2 = {h for _, h in fps_pairs(out[2]["fps"])}
     assert sh1 & sh2
 
 
-def test_winnow_fingerprints_arrow_twin_bit_exact(spark, docs):
-    """The Arrow/numpy PRODUCTION twin is BIT-IDENTICAL to the JVM
-    higher-order-function form — full rows (n_chars, n_kgrams, n_fps,
-    fps), not just hashes — over (a) the sf0.001 documents corpus and
-    (b) an adversarial frame targeting every seam where a naive Python
-    port diverges from the JVM semantics:
+#: every seam where a naive Python port diverges from the JVM semantics
+_WINNOW_ADVERSARIAL = [
+    (1, "left context the winnowing guarantee holds right context"),
+    (2, "aaaaaaaaaaaa"),                    # all-tie hashes
+    (3, "abc"),                             # n < k
+    (4, ""),
+    (5, "abcd"),                            # exactly one k-gram
+    (6, "xy zy xy zy xy zy"),               # periodic, repeated hashes
+    (7, "日本語 テキスト 𝄞 music"),          # astral plane
+    (8, "a\u00a0b\u00a0cd\u00a0ef"),   # NBSP is content, not ws
+    (9, "\u00a0 abcdef \u00a0"),        # NBSP at the trim edges
+    (10, "\u3000日本\u3000語のテキスト\u3000"),  # ideographic space
+    (11, "ab\x1ccd \x1c ef\x1cgh"),         # \x1c: python-\s-only ws
+    (12, "İstanbul ΑΣ Straße ǅungla"),      # case-mapping edges
+    (13, "tab\tand\nnewline\x0bvt\x0cff\rcr collapse"),
+    (14, None),
+    (15, "abcde"),                          # m=2 < w: one short window
+]
+
+
+def test_winnow_fingerprints_match_java_replay_bit_exact(spark, docs):
+    """The numpy/Arrow kernel is BIT-IDENTICAL to the pure-Python
+    replay with Java text semantics — full rows (n_chars, n_kgrams,
+    n_fps, fps) — over (a) the sf0.001 documents corpus and (b) an
+    adversarial frame targeting every seam where a naive Python port
+    diverges from the JVM semantics, at the fingerprint lane's k=4/w=3
+    and the overlap lane's k=8/w=4:
 
     - Java ``\\s`` is ASCII-only: NBSP/ideographic-space/file-separator
       (\\u00a0, \\u3000, \\x1c) are CONTENT characters to Spark's
       regexp_replace but whitespace to Python's unicode ``\\s`` (and to
-      ``str.strip()``) — the twin must keep them;
+      ``str.strip()``) — the kernel must keep them;
     - astral-plane codepoints (one split() element, ord == codepoint);
     - unicode case-mapping edges (U+0130 -> 'i'+combining dot expands
       the char count, final sigma, ß, titlecase dž);
     - rightmost-min ties, periodic hashes, n < k, n < w+k-1 (single
       short window), empty and NULL text.
 
-    This pin is what lets the twin be benched as the production arm
-    (x_winnow_fingerprints_prod) without a rows-only caveat: unlike the
-    float LSH twin, integer arithmetic makes exactness provable.
-    """
+    The kernel's normalization also equals the engine's JVM
+    ``normalize`` on every adversarial row, so the JVM-side text
+    operators and the kernel see the same character stream."""
+    from oracle_utils import winnow_replay
+
     from snowflake_data_pipeline_demo_spark.operators import text as T
 
-    rows = [
-        (1, "left context the winnowing guarantee holds right context"),
-        (2, "aaaaaaaaaaaa"),                    # all-tie hashes
-        (3, "abc"),                             # n < k
-        (4, ""),
-        (5, "abcd"),                            # exactly one k-gram
-        (6, "xy zy xy zy xy zy"),               # periodic, repeated hashes
-        (7, "日本語 テキスト 𝄞 music"),          # astral plane
-        (8, "a\u00a0b\u00a0cd\u00a0ef"),   # NBSP is content, not ws
-        (9, "\u00a0 abcdef \u00a0"),        # NBSP at the trim edges
-        (10, "\u3000日本\u3000語のテキスト\u3000"),  # ideographic space
-        (11, "ab\x1ccd \x1c ef\x1cgh"),         # \x1c: python-\s-only ws
-        (12, "İstanbul ΑΣ Straße ǅungla"),      # case-mapping edges
-        (13, "tab\tand\nnewline\x0bvt\x0cff\rcr collapse"),
-        (14, None),
-        (15, "abcde"),                          # m=2 < w: one short window
-    ]
-    adv = spark.createDataFrame(rows, "doc_id long, text string")
-    for frame in (adv, docs):
-        jvm = {r["doc_id"]: tuple(r)
-               for r in T.winnow_fingerprints(frame).collect()}
-        arrow = {r["doc_id"]: tuple(r)
-                 for r in T.winnow_fingerprints_arrow(frame).collect()}
-        assert arrow == jvm
-    # and at the overlap lane's (k=8, w=4) parameterization
-    jvm = {r["doc_id"]: tuple(r)
-           for r in T.winnow_fingerprints(adv, k=8, w=4).collect()}
-    arrow = {r["doc_id"]: tuple(r)
-             for r in T.winnow_fingerprints_arrow(adv, k=8, w=4).collect()}
-    assert arrow == jvm
+    adv = spark.createDataFrame(_WINNOW_ADVERSARIAL,
+                                "doc_id long, text string")
+    corpus = [(r["doc_id"], r["text"])
+              for r in docs.select("doc_id", "text").collect()]
+    for frame, rows, kw in ((adv, _WINNOW_ADVERSARIAL, {}),
+                            (docs, corpus, {}),
+                            (adv, _WINNOW_ADVERSARIAL, dict(k=8, w=4))):
+        got = {r["doc_id"]: tuple(r)[1:]
+               for r in T.winnow_fingerprints(frame, **kw).collect()}
+        assert got == {i: winnow_replay(t, **kw) for i, t in rows}, kw
+    norm = {r["doc_id"]: r["n"] for r in adv.select(
+        "doc_id", F.length(T.normalize("text")).alias("n")).collect()}
+    assert norm == {i: winnow_replay(t)[0] for i, t in _WINNOW_ADVERSARIAL}
 
 
-def test_winnow_overlap_arrow_engine_matches_jvm(spark, docs):
-    """winnow_overlap_pairs(engine='arrow') returns EXACTLY the jvm
-    engine's rows — same pairs, same n_shared, same containment — on
-    (a) the plagiarism-shaped fixture the graded lane uses, (b) the
-    sf0.001 corpus (near-cartesian natural overlap — the stress case
-    for the posting explode), and (c) with the max_df kill-switch on,
-    since the df-filter consumes the arrow arm's posting frame twice.
-    Unknown engines fail loudly."""
+def test_winnow_vertical_tab_seam():
+    """The one whitespace seam between the lane and its oracle: Java's
+    ``\\s`` (and so the kernel) collapses \\x0b (vertical tab), DuckDB's
+    RE2 ``\\s`` does not (the note at the x_winnow_fingerprints oracle).
+    Pins both sides, so neither can drift silently."""
+    import duckdb
+    from oracle_utils import winnow_replay
+
+    from snowflake_data_pipeline_demo_spark.operators.text import (
+        _winnow_numpy_kernel,
+    )
+
+    text = "ab\x0bcd\x0b\x0bef"
+    n, m, codes = _winnow_numpy_kernel(4, 3)(text)
+    assert n == len("ab cd ef")
+    assert (n, m, len(codes)) == winnow_replay(text)[:3]
+    [(duck,)] = duckdb.sql(
+        "SELECT trim(regexp_replace(lower($t), '\\s+', ' ', 'g'))",
+        params={"t": text},
+    ).fetchall()
+    assert duck == text
+
+
+def test_winnow_overlap_pairs_match_oracle_sql(spark, docs):
+    """winnow_overlap_pairs returns EXACTLY the x_winnow_overlap oracle
+    SQL's rows on DuckDB — same pairs, same n_shared, same containment
+    — on (a) a plagiarism-shaped fixture, (b) the same fixture with the
+    max_df kill-switch on (the df-filter consumes the posting frame
+    twice), and (c) the sf0.001 corpus (near-cartesian natural overlap
+    — the stress case for the posting explode)."""
+    from conftest import SF_SMOKE
+    from oracle_utils import compare
+
     from snowflake_data_pipeline_demo_spark.operators import text as T
+    from snowflake_data_pipeline_demo_spark.plans.queries_ext import (
+        _winnow_overlap_oracle,
+    )
 
-    fixture = spark.createDataFrame(
+    rows = (
         [(i, " ".join(f"s{i}tok{j}" for j in range(30))) for i in range(20)]
         + [(100, "copied span one two three four five six seven eight"),
            (101, "copied span one two three four five six seven eight"),
-           (102, None), (103, ""), (104, "short")],
-        "doc_id long, text string",
+           (102, None), (103, ""), (104, "short")]
     )
+    fixture = spark.createDataFrame(rows, "doc_id long, text string")
+    fixture_sql = "SELECT * FROM (VALUES {}) t(gid, text)".format(", ".join(
+        f"({i}, {'NULL' if t is None else repr(t)})" for i, t in rows))
+    docs_sql = "SELECT doc_id AS gid, text FROM documents"
     cases = [
-        (fixture, dict(min_shared=1)),
-        (fixture, dict(min_shared=3, max_df=8)),
-        (docs, dict(min_shared=3, max_df=16)),
+        (fixture, fixture_sql, dict(min_shared=1)),
+        (fixture, fixture_sql, dict(min_shared=3, max_df=8)),
+        (docs, docs_sql, dict(min_shared=3, max_df=16)),
     ]
-    for frame, kw in cases:
-        key = ["id_a", "id_b"]
-        jvm = T.winnow_overlap_pairs(frame, **kw).sort(*key).collect()
-        arrow = T.winnow_overlap_pairs(frame, engine="arrow", **kw) \
-                 .sort(*key).collect()
-        assert [tuple(r) for r in arrow] == [tuple(r) for r in jvm], kw
-        assert jvm, kw  # non-vacuous: every case must produce pairs
-    with pytest.raises(ValueError, match="unknown engine"):
-        T.winnow_overlap_pairs(fixture, engine="numpy")
+    for frame, source, kw in cases:
+        got = T.winnow_overlap_pairs(frame, **kw)
+        assert got.count(), kw  # non-vacuous: every case must produce pairs
+        assert not compare(got, _winnow_overlap_oracle(source, **kw),
+                           SF_SMOKE), kw
 
 
 def test_winnow_overlap_planted_pairs(spark):

@@ -44,25 +44,12 @@ def test_pure_projection_operators_have_no_shuffle(spark):
         assert "Exchange" not in p, name
 
 
-def test_winnow_arrow_twin_is_shuffle_free_arrow_eval(spark):
-    """The winnow PRODUCTION twin must stay a shuffle-free projection
-    whose Python boundary is the vectorized ArrowEvalPython node —
-    never row-pickling BatchEvalPython (guide §4: Arrow-batched or
-    nothing), and never an Exchange (it composes into any scan for
-    free, like the JVM arm the pin above covers)."""
-    import contextlib
-    import io
-
-    from snowflake_data_pipeline_demo_spark.operators.text import (
-        winnow_fingerprints_arrow,
-    )
-    from snowflake_data_pipeline_demo_spark.sources.testdata import load
-
-    df = winnow_fingerprints_arrow(load(spark, SF, "documents"))
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    p = buf.getvalue()
+def test_winnow_fingerprints_lane_is_shuffle_free_arrow_eval(spark):
+    """The winnow lane's Python boundary must be the vectorized
+    ArrowEvalPython node — never row-pickling BatchEvalPython (guide
+    §4: Arrow-batched or nothing) — and never an Exchange (it composes
+    into any scan for free)."""
+    p = _plan(spark, "x_winnow_fingerprints")
     assert "ArrowEvalPython" in p
     assert "BatchEvalPython" not in p
     assert "Exchange" not in p

@@ -589,64 +589,36 @@ def test_snapshot_diff_is_set_algebra(spark, old_ids, new_ids):
     assert r["n_kept"] == len(old_ids & new_ids)
 
 
-def _py_winnow(text: str, k: int, w: int) -> list[int]:
-    """Pure-Python replay of winnow_codes (Schleimer'03 rightmost-min):
-    normalize -> polynomial k-gram hashes -> rightmost minimum of each
-    w-window -> sorted distinct (pos_1based * MOD + hash) codes."""
-    import re
-
-    from snowflake_data_pipeline_demo_spark.operators.text import (
-        ROLLING_BASE, ROLLING_MOD,
-    )
-
-    s = re.sub(r"\s+", " ", text.lower()).strip()
-    n = len(s)
-    hashes = []
-    for i in range(max(n - k + 1, 0)):
-        acc = 0
-        for ch in s[i:i + k]:
-            acc = (acc * ROLLING_BASE + ord(ch)) % ROLLING_MOD
-        hashes.append(acc)
-    if not hashes:
-        return []
-    codes = set()
-    for j in range(max(len(hashes) - w + 1, 1)):
-        win = hashes[j:j + w]
-        mn = min(win)
-        right = len(win) - 1 - win[::-1].index(mn)  # rightmost min
-        codes.add((j + right + 1) * ROLLING_MOD + mn)
-    return sorted(codes)
-
-
 @given(st.lists(
     st.text(st.sampled_from("ab x"), min_size=0, max_size=60),
     min_size=1, max_size=6,
 ))
 @_SLOW
-def test_winnow_codes_match_python_replay(spark, texts):
-    """winnow_codes equals a pure-Python Schleimer'03 replay for ANY
-    tiny-alphabet text (maximal hash ties stress the rightmost-min
+def test_winnow_fingerprints_match_python_replay(spark, texts):
+    """winnow_fingerprints equals a pure-Python Schleimer'03 replay for
+    ANY tiny-alphabet text (maximal hash ties stress the rightmost-min
     tie-break; whitespace stresses normalization), and the selection
     satisfies the winnowing COVERAGE guarantee: every w-window of
     k-gram positions contains at least one selected position — the
     property that makes any >= w+k-1 char match detectable."""
+    from oracle_utils import fps_pairs, winnow_replay
+
     from snowflake_data_pipeline_demo_spark.operators.text import (
-        ROLLING_MOD, winnow_codes,
+        winnow_fingerprints,
     )
 
     k, w = 4, 3
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    got = {r["doc_id"]: list(r["c"]) for r in df.select(
-        "doc_id", winnow_codes("text", k=k, w=w).alias("c")).collect()}
+    got = {r["doc_id"]: tuple(r)[1:]
+           for r in winnow_fingerprints(df, k=k, w=w).collect()}
     for i, t in enumerate(texts):
-        want = _py_winnow(t, k, w)
+        want = winnow_replay(t, k, w)
         assert got[i] == want, (t, got[i], want)
         # coverage guarantee over the replayed positions
-        pos = {c // ROLLING_MOD for c in want}
-        if want:
-            import re
-            n_k = max(len(re.sub(r"\s+", " ", t.lower()).strip()) - k + 1, 0)
+        pos = {p for p, _ in fps_pairs(want[3])}
+        n_k = want[1]
+        if pos:
             for j in range(1, max(n_k - w + 1, 1) + 1):
                 assert pos & set(range(j, j + w)), (t, j, sorted(pos))
 
@@ -664,8 +636,10 @@ def test_winnow_shared_substring_guarantees_shared_fingerprint(
     normalized stream) select at least one common fingerprint HASH —
     under arbitrary surrounding text and a tiny alphabet (worst case
     for ties). k=4, w=3 -> shared >= 6 chars suffices."""
+    from oracle_utils import fps_pairs
+
     from snowflake_data_pipeline_demo_spark.operators.text import (
-        ROLLING_MOD, winnow_codes,
+        winnow_fingerprints,
     )
 
     k, w = 4, 3
@@ -673,8 +647,8 @@ def test_winnow_shared_substring_guarantees_shared_fingerprint(
     doc_b = shared + suffix
     df = spark.createDataFrame(
         [(0, doc_a), (1, doc_b)], "doc_id long, text string")
-    got = {r["doc_id"]: {c % ROLLING_MOD for c in r["c"]} for r in df.select(
-        "doc_id", winnow_codes("text", k=k, w=w).alias("c")).collect()}
+    got = {r["doc_id"]: {h for _, h in fps_pairs(r["fps"])}
+           for r in winnow_fingerprints(df, k=k, w=w).collect()}
     assert got[0] & got[1], (doc_a, doc_b, got)
 
 
