@@ -162,8 +162,7 @@ def main() -> None:
     cent = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    sem = dedup.semdedup(emb, cent, threshold=0.4,
-                         assignment_impl="pandas")
+    sem = dedup.semdedup(emb, cent, threshold=0.4)
     n_vec = sem.count()
     n_drop = sem.filter(~F.col("is_kept")).count()
     print(f"== semantic dedup: {n_vec} vectors, {n_drop} semantic dups dropped")

@@ -18,6 +18,7 @@ oracle-checked path.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -635,94 +636,49 @@ def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.95,
 def semdedup(emb: DataFrame, centroids: DataFrame,
              threshold: float = 0.85, id_col: str = "vec_id",
              vec_col: str = "embedding",
-             centroid_id_col: str = "centroid_id",
-             assignment_impl: str = "expr") -> DataFrame:
+             centroid_id_col: str = "centroid_id") -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
-    at web-scale through semantic deduplication" — public paper):
-    cluster embeddings, then mark within-cluster pairs with cosine >=
-    ``threshold`` as semantic duplicates. Per the paper's keep rule,
-    the member of a duplicate pair with the LOWER cosine to its
-    centroid survives (it carries more information than the
-    cluster-typical copy); ties break to the lower id. Output:
-    (id, centroid_id, centroid_cos, is_kept).
+    at web-scale through semantic deduplication" — public paper): a
+    member of an embedding cluster is dropped when another member has
+    rounded cosine >= ``threshold`` to it and ranks before it — lower
+    cosine to the centroid (the paper keeps the least cluster-typical
+    copy), then lower id. Output: (id, centroid_id, centroid_cos,
+    is_kept) per non-NULL embedding; ``id_col`` is a key. Cosines are
+    ``F.round(similarity.cosine(..), 4)`` bit for bit, 0.0 for a zero
+    norm or a length mismatch. No centroids: everything is kept, with
+    NULL cluster columns.
 
-    Scale shape: assignment is shuffle-free (similarity.ivf_assign's
-    narrow projection, or the Arrow/numpy-matmul twin via
-    ``assignment_impl="pandas"`` — at production nlist the inlined
-    expression tree is the bottleneck, measured r04: 80k vecs /
-    nlist=256 spends most of its time in assignment on the expr path);
-    the pairwise stage self-joins each CLUSTER, not the corpus — the
-    paper's point is exactly that k bounds the quadratic term, so size
-    the centroid set as k ≈ n / target cluster size (they use 50k
-    clusters for web scale). A hot cluster is AQE's skew-split case;
-    the deterministic drop rule needs no iteration — one join, one
-    distinct, one anti-join.
+    Shape: the narrow Arrow assignment (similarity.ivf_assign_pandas),
+    one shuffle on the centroid id, one numpy pass per cluster, so
+    nlist bounds the quadratic term (the paper sizes k as n / target
+    cluster size). Row blocks keep a worker at O(block x cluster)
+    cosines; a hot cluster runs on one core.
     """
-    from .similarity import cosine, ivf_assign, ivf_assign_pandas
+    from .similarity import _Vectors, cosine4_at_least, ivf_assign_pandas
 
-    # take(1) instead of limit(1).count(): same one-partition probe
-    # plan but short-circuits on the first row found, and skips the
-    # count aggregation job on the hot non-empty path (r07 ADVICE).
-    if not centroids.take(1):
-        # no clusters -> no within-cluster pairs -> NOTHING is a
-        # semantic duplicate: keep everything, with NULL cluster
-        # metadata. This is the one keep/drop consumer with a sound
-        # no-clusters semantics; the assignment twins themselves RAISE
-        # on empty centroids because a zero-row assignment would
-        # silently drop 100% of the corpus through the is_kept filter
-        # (r07 third review).
-        return emb.filter(F.col(vec_col).isNotNull()).select(
-            F.col(id_col),
-            F.lit(None).cast("long").alias(centroid_id_col),
-            F.lit(None).cast("double").alias("centroid_cos"),
-            F.lit(True).alias("is_kept"),
-        )
-    assign_fn = ivf_assign_pandas if assignment_impl == "pandas" else ivf_assign
-    # materialization boundary (r12 optimization): the assignment is
-    # consumed THREE times below (both self-join sides + the final
-    # keep-rule projection), and without a boundary each consumer
-    # re-evaluates the nlist-cosine argmax over the whole corpus —
-    # the exact cost the r04 note above calls the bottleneck, paid 3x.
-    # In the real pipeline this is the persisted ASSIGNED index
-    # (streaming/dedup.py); the cache is its in-plan equivalent.
-    # Measured at sf0.1, calm host, warm min-of-4: x_semdedup
-    # 2.61 -> 2.20 s (expr twin), x_semdedup_prod 1.81 -> 1.49 s
-    # (Arrow twin — the batch matmul ran 3x before); plan's three
-    # assignment subtrees -> one InMemoryRelation
-    # (plans/r12/x_semdedup_{before,after}.txt).
-    assigned = lane_cache(assign_fn(emb, centroids, id_col, vec_col,
-                                    centroid_id_col, with_score=True))
-    a = assigned.select(
-        F.col(id_col).alias("_ida"), F.col(vec_col).alias("_va"),
-        F.col(centroid_id_col).alias("_ca"), F.col("centroid_cos").alias("_sa"),
-    )
-    b = assigned.select(
-        F.col(id_col).alias("_idb"), F.col(vec_col).alias("_vb"),
-        F.col(centroid_id_col).alias("_cb"), F.col("centroid_cos").alias("_sb"),
-    )
-    # b-side is dropped when a ranks before it: farther from centroid
-    # first (paper), then lower id
-    dropped = (
-        a.join(
-            b,
-            (F.col("_ca") == F.col("_cb")) & (F.col("_ida") != F.col("_idb")),
-        )
-        .filter(F.round(cosine(F.col("_va"), F.col("_vb")), 4) >= threshold)
-        .filter(
-            (F.col("_sa") < F.col("_sb"))
-            | ((F.col("_sa") == F.col("_sb")) & (F.col("_ida") < F.col("_idb")))
-        )
-        .select(F.col("_idb").alias(id_col))
-        .distinct()
-    )
-    return (
-        assigned.select(id_col, centroid_id_col, "centroid_cos")
-        .join(dropped.withColumn("_drop", F.lit(True)), id_col, "left")
-        .select(
-            id_col, centroid_id_col, "centroid_cos",
-            F.col("_drop").isNull().alias("is_kept"),
-        )
-    )
+    emb = emb.filter(F.col(vec_col).isNotNull())
+    cent_rows = centroids.select(centroid_id_col, vec_col).collect()
+    if not cent_rows:
+        return emb.select(id_col, F.lit(None).cast("long").alias(centroid_id_col),
+                          F.lit(None).cast("double").alias("centroid_cos"),
+                          F.lit(True).alias("is_kept"))
+    assigned = ivf_assign_pandas(emb, cent_rows, id_col, vec_col,
+                                 centroid_id_col, with_score=True)
+
+    def keep(pdf):
+        pdf = pdf.sort_values(["centroid_cos", id_col])  # rank order
+        v = _Vectors.of(pdf[vec_col].to_numpy())
+        dropped = np.zeros(len(pdf), dtype=bool)
+        step = max(1, (1 << 20) // len(pdf))  # 8 MB of cosines per block
+        for b0 in range(0, len(pdf), step):
+            # rows b0..b0+step against every member ranked at or after b0
+            hit = cosine4_at_least(v[b0:b0 + step], v[b0:], threshold)
+            dropped[b0:] |= np.triu(hit, k=1).any(axis=0)
+        return pdf[[id_col, centroid_id_col, "centroid_cos"]].assign(is_kept=~dropped)
+
+    schema = (f"{id_col} {emb.schema[id_col].dataType.simpleString()}, "
+              f"{centroid_id_col} long, centroid_cos double, is_kept boolean")
+    return assigned.groupBy(centroid_id_col).applyInPandas(keep, schema)
 
 
 def incremental_embedding_neardup(new_emb: DataFrame,

@@ -10,6 +10,9 @@ Two paths, same contract:
   candidates. At 100 TB the bucket join replaces the full cross
   product — the cross-product side never materializes.
 
+IVF assignment has two forms with equal values: :func:`ivf_assign`
+(cosine literals, DuckDB-portable), :func:`ivf_assign_pandas` (numpy).
+
 Hyperplanes are pseudo-random +/-1 vectors derived from md5(plane:dim),
 so signatures are deterministic and reproducible in the DuckDB oracle
 (no RNG state, no JVM-only hashing).
@@ -25,6 +28,11 @@ the fastest JVM-side shape at embedding dims.
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
+from typing import NamedTuple
+
+import numpy as np
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -188,8 +196,8 @@ def lsh_signatures_pandas(dim: int, planes: int = 8, tables: int = 1):
     return sigs
 
 
-def _require_centroids(rows, twin: str) -> None:
-    """Shared empty-centroid contract of both assignment twins: RAISE.
+def _require_centroids(rows, caller: str) -> None:
+    """Shared empty-centroid contract of both assignment forms: RAISE.
     A zero-row centroid frame reaching assignment is an operational
     error (a never-written centroid table reads as an empty typed
     frame with no warning; kmeans_centroids over an all-degenerate
@@ -202,7 +210,7 @@ def _require_centroids(rows, twin: str) -> None:
     (dedup.semdedup: no clusters -> nothing is a duplicate)."""
     if not rows:
         raise ValueError(
-            f"{twin}: empty centroid frame — train centroids first "
+            f"{caller}: empty centroid frame — train centroids first "
             "(kmeans_centroids returns empty only for a corpus with "
             "no usable vectors) or check the centroid table was "
             "actually written; assigning against zero centroids "
@@ -258,82 +266,134 @@ def ivf_assign(
     return corpus.select(*out)
 
 
+def round4(x) -> np.ndarray:
+    """``F.round(x, 4)`` on DOUBLE, vectorised: HALF_UP on the shortest
+    decimal repr (``BigDecimal.valueOf``), no -0.0, NaN/inf kept. The
+    scaled binary form ``floor(|x|*1e4 + 0.5)`` is wrong within a few
+    ulps of a half-integer (0.00145 scales to 14.499999999999998, yet
+    "0.00145" rounds up): those, huge and non-finite values go through
+    ``Decimal``."""
+    flat = np.asarray(x, dtype=np.float64).reshape(-1)
+    y = np.abs(flat) * 1e4
+    with np.errstate(invalid="ignore"):
+        out = np.copysign(np.floor(y + 0.5) / 1e4, flat) + 0.0
+        # the scaled value carries <= ~2 ulps (eps * y each) of error
+        slow = ~(np.abs(y - np.floor(y) - 0.5) > 1e-9 + 2e-15 * y) | ~(y < 1e15)
+    for i in np.flatnonzero(slow):
+        v = float(flat[i])
+        if math.isfinite(v) and abs(v) < 1e16:  # else no fractional digits
+            v = float(Decimal(repr(v)).quantize(Decimal("1e-4"), ROUND_HALF_UP))
+        out[i] = v + 0.0
+    return out.reshape(np.shape(x))
+
+
+class _Vectors(NamedTuple):
+    """Embedding rows as :func:`cosine` reads them: a zero-padded
+    float64 matrix, each row's length and its left-fold L2 norm."""
+    X: np.ndarray
+    lens: np.ndarray
+    norm: np.ndarray
+
+    @classmethod
+    def of(cls, arrays, width: int | None = None) -> "_Vectors":
+        """Rows zero-padded (or cut, then matching nothing) to ``width``,
+        by default the longest row's length."""
+        lens = np.fromiter((len(a) for a in arrays), dtype=np.int64,
+                           count=len(arrays))
+        w = int(lens.max(initial=0)) if width is None else width
+        X = np.zeros((len(arrays), w))
+        for i, a in enumerate(arrays):
+            X[i, :len(a)] = a[:w]
+        return cls(X, lens, np.sqrt(_fold(X, X)))
+
+    def __getitem__(self, rows) -> "_Vectors":
+        return _Vectors(self.X[rows], self.lens[rows], self.norm[rows])
+
+
+def _fold(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise dot products summed in Spark's order: ``aggregate``
+    folds left to right from 0.0 over the dims."""
+    acc = np.zeros(len(A))
+    for j in range(A.shape[1]):
+        acc = acc + A[:, j] * B[:, j]
+    return acc
+
+
+def _approx_cosines(a: _Vectors, b: _Vectors):
+    """Norm products and cosines of all ``(a_i, b_j)`` by one BLAS matmul
+    (off Spark's left fold by ~dim*eps), 0.0 for a zero divisor or a
+    length mismatch; ``a`` and ``b`` share one width."""
+    den = np.outer(a.norm, b.norm)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = np.where(den != 0, (a.X @ b.X.T) / den, 0.0)
+    if np.ptp(np.concatenate([a.lens, b.lens])):
+        cos[a.lens[:, None] != b.lens[None, :]] = 0.0
+    return den, cos
+
+
+def _round_exact(a: _Vectors, b: _Vectors, den, cos, i, j) -> np.ndarray:
+    """``F.round(cosine(a_i, b_j), 4)`` bit for bit from BLAS values ``cos``
+    (= ``cos[i, j]``, any shape): their error can move the 4dp rounding
+    only near a midpoint, so those few are re-folded in Spark's order."""
+    y = np.abs(cos) * 1e4
+    near = np.nonzero(np.abs(y - np.floor(y) - 0.5) < 1e-5)
+    if len(near[0]):
+        cos, i, j = cos.copy(), i[near], j[near]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos[near] = np.where(den[i, j] != 0, _fold(a.X[i], b.X[j]) / den[i, j], 0.0)
+    return round4(cos)
+
+
+def cosine4(a: _Vectors, b: _Vectors) -> np.ndarray:
+    """The ``(len(a), len(b))`` matrix of ``F.round(cosine(a_i, b_j), 4)``,
+    bit for bit: 0.0 for a zero norm or a length mismatch, no -0.0."""
+    den, cos = _approx_cosines(a, b)
+    return _round_exact(a, b, den, cos, *np.indices(cos.shape))
+
+
+def cosine4_at_least(a: _Vectors, b: _Vectors, threshold: float) -> np.ndarray:
+    """``cosine4(a, b) >= threshold``, rounding only where it can
+    matter: a 4dp round moves a value by at most 5e-5, so only entries
+    within 1e-4 of the threshold need their exact rounded value."""
+    den, cos = _approx_cosines(a, b)
+    hit = cos >= threshold
+    i, j = np.nonzero(np.abs(cos - threshold) <= 1e-4)
+    hit[i, j] = _round_exact(a, b, den, cos[i, j], i, j) >= threshold
+    return hit
+
+
 def ivf_assign_pandas(
     corpus: DataFrame,
-    centroids: DataFrame,
+    centroids: DataFrame | list,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroid_id_col: str = "centroid_id",
     with_score: bool = False,
 ) -> DataFrame:
-    """PRODUCTION twin of :func:`ivf_assign`: the argmax over centroids
-    as one numpy matmul per Arrow batch instead of nlist inlined-literal
-    cosine expressions — the shape that stays flat as nlist grows to
-    production sizes (256-65k lists), where a literal expression tree
-    would explode (measured r04: at nlist=256 on 80k vecs the inlined
-    assignment dominates semdedup's runtime). Same contract: cosine
-    rounded to 4dp, ties to the lowest centroid id; still no join and
-    no corpus shuffle. ``with_score`` adds ``centroid_cos`` like
-    :func:`ivf_assign`."""
-    import numpy as np
+    """:func:`ivf_assign` as one Arrow-batched numpy pass with the same
+    values: the cosines to all centroids are one matmul per batch
+    (:func:`cosine4`), argmax with ties to the lowest centroid id, so
+    a row matching no centroid's length (empty, ragged) goes to the
+    lowest id with cos 0.0. Cost stays flat as nlist grows; no join, no
+    corpus shuffle. ``centroids``: a (centroid_id, vec) frame or its
+    collected rows."""
     from pyspark.sql.functions import pandas_udf
 
     corpus = _nonnull(corpus, vec_col)
-    rows = sorted(
-        centroids.select(centroid_id_col, vec_col).collect(),
-        key=lambda r: r[centroid_id_col],
-    )
-    _require_centroids(rows, "ivf_assign_pandas")
+    if isinstance(centroids, DataFrame):
+        centroids = centroids.select(centroid_id_col, vec_col).collect()
+    _require_centroids(centroids, "ivf_assign_pandas")
+    rows = sorted(centroids, key=lambda r: r[centroid_id_col])
     ids = np.asarray([int(r[centroid_id_col]) for r in rows])
-    C = np.asarray([r[vec_col] for r in rows], dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-
-    dim = Cn.shape[1]  # rows is non-empty past _require_centroids
+    C = _Vectors.of([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
 
     @pandas_udf("struct<centroid_id: long, centroid_cos: double>")
     def assign(vecs: pd.Series) -> pd.DataFrame:
-        n = len(vecs)
-        if n == 0:
-            return pd.DataFrame(
-                {"centroid_id": pd.Series([], dtype="int64"),
-                 "centroid_cos": pd.Series([], dtype="float64")}
-            )
-        arrs = [np.asarray(v, dtype=np.float64) for v in vecs]
-        lens = np.asarray([a.shape[0] for a in arrs])
-        # Length-mismatched vectors (empty arrays from failed encodes,
-        # ragged dims) can't join the BLAS stack — and on the expr twin
-        # their zip_with dot is NULL-contaminated, coalesced to cosine
-        # 0.0, so the argmax tie falls to the LOWEST centroid id. Same
-        # contract here: preassign ids[0]/0.0, overwrite the dim-true
-        # rows with the matmul result. Without this split, np.asarray
-        # over a ragged batch builds an object array and norm/matmul
-        # crash the whole corpus job (degenerate-input sweep pins it).
-        out_id = np.full(n, ids[0], dtype="int64")
-        out_cos = np.zeros(n, dtype="float64")
-        ok = np.flatnonzero(lens == dim)
-        if len(ok):
-            X = np.stack([arrs[i] for i in ok])
-            Xn = X / np.maximum(
-                np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            # HALF_UP rounding to match Spark's F.round (np.round is
-            # half-to-even: a score landing exactly on a .00005 midpoint
-            # would round differently and could flip the argmax
-            # tie-break vs the expr path). HALF_UP = ties away from
-            # zero, hence the sign split — cosines can be negative.
-            raw = Xn @ Cn.T
-            cos = np.sign(raw) * np.floor(np.abs(raw) * 1e4 + 0.5) / 1e4
-            # ids ascending + argmax-first-occurrence = lowest-id tie
-            best = np.argmax(cos, axis=1)
-            out_id[ok] = ids[best]
-            # `+ 0.0` normalizes signed zero: the sign-split HALF_UP
-            # above emits -0.0 for raw in (-5e-5, 0), where F.round
-            # (BigDecimal, no signed zero) emits +0.0 — the house
-            # negative-zero contract (SURVEY §5) binds the SPARK side
-            # too (r08 review finding).
-            out_cos[ok] = cos[np.arange(len(best)), best] + 0.0
+        cos = cosine4(_Vectors.of(vecs.to_numpy(), C.X.shape[1]), C)
+        best = np.argmax(cos, axis=1)  # first maximum: ids ascend
         return pd.DataFrame({
-            "centroid_id": out_id,
-            "centroid_cos": out_cos,
+            "centroid_id": ids[best],
+            "centroid_cos": cos[np.arange(len(best)), best],
         })
 
     out = corpus.select(

@@ -1574,9 +1574,7 @@ def x_dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dup_ngram_coverage(d, k=5)
 
 
-@query(
-    "x_semdedup",
-    oracle=f"""
+_SEMDEDUP_ORACLE = f"""
     WITH cent AS (
       SELECT vec_id AS centroid_id, embedding AS centv
       FROM embeddings WHERE vec_id < 8
@@ -1605,9 +1603,13 @@ def x_dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT a1.vec_id, a1.centroid_id, a1.ccos AS centroid_cos,
            (d.vec_id IS NULL) AS is_kept
     FROM a1 LEFT JOIN dropped d USING (vec_id)
-    """,
-    survey_ref="north-star:semdedup",
-)
+    """
+
+
+# x_semdedup_prod: the former BLAS-assignment arm, now the lane itself
+@query("x_semdedup_prod", oracle=_SEMDEDUP_ORACLE,
+       survey_ref="north-star:semdedup-production")
+@query("x_semdedup", oracle=_SEMDEDUP_ORACLE, survey_ref="north-star:semdedup")
 def x_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup: cluster-bounded semantic dedup over the embeddings
     table — nlist=8 deterministic centroids (first 8 vectors;
@@ -1622,25 +1624,6 @@ def x_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
     return dedup.semdedup(e, cent, threshold=0.4)
-
-
-@query(
-    "x_semdedup_prod",
-    # rows-only: the Arrow/numpy assignment is not DuckDB-expressible;
-    # the expr twin above IS hash-verified, and
-    # test_semdedup_pandas_assignment_matches_expr pins the agreement
-    oracle=None,
-    survey_ref="north-star:semdedup-production",
-)
-def x_semdedup_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production SemDeDup: BLAS-matmul centroid assignment
-    (similarity.ivf_assign_pandas) — measured r04 at 80k vecs /
-    nlist=256: 35 s vs 161 s for the inlined-expression assignment."""
-    e = testdata.load(spark, sf_dir, "embeddings")
-    cent = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
-    return dedup.semdedup(e, cent, threshold=0.4, assignment_impl="pandas")
 
 
 @query(

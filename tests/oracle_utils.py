@@ -9,6 +9,9 @@ better failure messages — equality is the goal.
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
 import duckdb
 import numpy as np
 import pandas as pd
@@ -197,3 +200,79 @@ def winnow_replay(text: str | None, k: int = 4, w: int = 3) -> tuple:
 def fps_pairs(fps: str) -> list[tuple[int, int]]:
     """``winnow_fingerprints.fps`` decoded to ``(pos, hash)`` pairs."""
     return [tuple(map(int, c.split(":"))) for c in fps.split(",") if c]
+
+
+def midpoint_corpus() -> list[float]:
+    """Adversarial 4dp-midpoint doubles (the 121 exact midpoints
+    (2k+1)*5e-5 for |k| <= 60 — including 0.00015 == 3/20000 at k=1 —
+    plus 7 literals) and each value's two representable neighbors:
+    384 cases, no duplicates. The set where DuckDB's binary round and
+    Spark's BigDecimal string round genuinely diverge (the original
+    r08 probe measured 18 divergences on its 381-case variant)."""
+    cases = []
+    for k in range(-60, 61):
+        m = (2 * k + 1) * 0.00005
+        cases += [m, float(np.nextafter(m, -np.inf)),
+                  float(np.nextafter(m, np.inf))]
+    for v in [0.12345, -0.12345, 2.00005, -2.00005, 0.99995, -0.99995,
+              12345.00005]:
+        cases += [v, float(np.nextafter(v, -np.inf)),
+                  float(np.nextafter(v, np.inf))]
+    assert len(cases) == len(set(cases)) == 384
+    return cases
+
+
+def bigdecimal_round(x: float, s: int = 4) -> float:
+    """Reference for Spark F.round on DOUBLE: BigDecimal.valueOf goes
+    through Double.toString (shortest round-trip repr — identical to
+    Python repr), HALF_UP, no signed zero. Verified against REAL
+    PySpark F.round in
+    test_oracle_parity.TestRoundConformance.test_spark_round_matches_reference."""
+    q = Decimal(1).scaleb(-s)
+    return float(Decimal(repr(float(x))).quantize(
+        q, rounding=ROUND_HALF_UP)) + 0.0
+
+
+def cosine_replay(a, b) -> float:
+    """``similarity.cosine`` in pure Python: dot and squared norms fold
+    left to right from 0.0 in double, the divisor is the product of the
+    two square roots, and a zero divisor or a length mismatch gives
+    0.0 (Spark's ``zip_with`` pads the shorter side with NULLs)."""
+    if len(a) != len(b):
+        return 0.0
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot += x * y
+    for x in a:
+        na += x * x
+    for y in b:
+        nb += y * y
+    den = math.sqrt(na) * math.sqrt(nb)
+    return dot / den if den != 0 else 0.0
+
+
+def semdedup_replay(rows, centroids, threshold: float) -> dict:
+    """``dedup.semdedup`` in pure Python over ``(id, vec)`` rows and
+    ``(centroid_id, vec)`` centroids: NULL vectors are skipped, each row
+    goes to its best 4dp-rounded cosine (ties to the lowest centroid
+    id), and a member is dropped when another member of its cluster
+    has rounded cosine >= ``threshold`` to it and ranks before it
+    (lower centroid cosine, then lower id). Returns
+    ``{id: (centroid_id, centroid_cos, is_kept)}``."""
+    rows = [(i, v) for i, v in rows if v is not None]
+    if not centroids:
+        return {i: (None, None, True) for i, _ in rows}
+    cents = sorted(centroids)
+    assigned = {}
+    for i, v in rows:
+        score, cid = max(
+            ((bigdecimal_round(cosine_replay(v, c)), -cid) for cid, c in cents)
+        )
+        assigned[i] = (-cid, score, v)
+    dropped = set()
+    for a, (ca, sa, va) in assigned.items():
+        for b, (cb, sb, vb) in assigned.items():
+            if (ca == cb and a != b and (sa, a) < (sb, b)
+                    and bigdecimal_round(cosine_replay(va, vb)) >= threshold):
+                dropped.add(b)
+    return {i: (c, s, i not in dropped) for i, (c, s, _) in assigned.items()}

@@ -272,9 +272,6 @@ _EMB_CASES = {
         d, _cent(s), with_score=True
     ),
     "semdedup": lambda s, d: dedup.semdedup(d, _cent(s)),
-    "semdedup_pandas": lambda s, d: dedup.semdedup(
-        d, _cent(s), assignment_impl="pandas"
-    ),
     "embedding_neardup_pairs": lambda s, d: dedup.embedding_neardup_pairs(d),
     "incremental_embedding_neardup": lambda s, d: (
         dedup.incremental_embedding_neardup(
@@ -303,6 +300,14 @@ def test_embedding_operator_survives_degenerate_vectors(spark, demb, name):
     rows = out.collect()
     if name == "kmeans_centroids":
         assert len(rows) == 2  # zero vectors must not collapse training
+    if name == "semdedup":
+        # zero and empty vectors score 0.0 against every centroid: lowest
+        # centroid id, cos 0.0, never a duplicate; NULL rows are dropped
+        got = {r["vec_id"]: r for r in rows}
+        for i in (1, 9):
+            assert (got[i]["centroid_id"], got[i]["centroid_cos"],
+                    got[i]["is_kept"]) == (0, 0.0, True)
+        assert 8 not in got
 
 
 def test_kmeans_on_fully_degenerate_corpus_returns_empty(spark):

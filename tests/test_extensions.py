@@ -355,21 +355,68 @@ def test_dedup_paths_under_viral_duplication(spark):
     assert all(r["component_id"] < 10_000 for r in comps)
 
 
-def test_ivf_pandas_assignment_matches_expr(spark, emb):
-    """The production (numpy matmul) assignment must agree with the
-    inlined-literal expression path — same 4dp rounding and lowest-id
-    tie rule — on the full testdata sample."""
+#: adversarial SemDeDup / IVF frame (dim 4) for the exact-agreement
+#: tests: each ``[m, t, 0, 0]`` row has cosine exactly ``m`` to
+#: ``[1, 0, 0, 0]`` (asserted below), a shortest-repr 4dp midpoint or a
+#: tiny negative, where a scaled-binary HALF_UP differs from F.round
+_ADV_ROWS = [
+    (1, [1.0, 0.5, 0.0, 0.0]),        # 1/2: tied centroid_cos, and their
+    (2, [1.0, -0.5, 0.0, 0.0]),       # cosine rounds onto 0.6
+    (3, [0.00145, 0.9999989487494475, 0.0, 0.0]),
+    (4, [0.59995, 0.8000374975587082, 0.0, 0.0]),
+    (5, [0.0018499999999999999, 0.9999982887485358, 0.0, 0.0]),
+    (6, [-3e-05, 0.9999999995500001, 0.0, 0.0]),
+    (7, [1.0, 0.0, 0.0, 0.0]),        # cosine 0.59995 to row 4
+    (8, [0.2, 0.1, 0.9, 0.0]),        # 8/9: duplicate vectors
+    (9, [0.2, 0.1, 0.9, 0.0]),
+    (10, [0.0, 0.0, 0.0, 0.0]),       # zero vector
+    (11, [1.0, 2.0]),                 # 11/12: ragged, equal to each other
+    (12, [1.0, 2.0]),
+    (13, []),                         # 13/14: empty arrays
+    (14, []),
+    (15, None),                       # NULL
+    (16, [0.0, 0.0, 0.1, 5.0]),       # alone in centroid 2's cluster
+    (17, [0.1, 0.0, 1.0, 0.99]),      # >= 0.6 to 16, other cluster
+]
+_ADV_CENTS = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 0.0, 1.0, 0.0]),
+              (2, [0.0, 0.0, 0.0, 1.0])]
+
+
+def _frames(spark, emb):
+    """(corpus, centroids, threshold) cases: the sf0.001 embeddings
+    with the x_semdedup set-up, and the adversarial frame at the
+    threshold its tied pair lands on and at one that only a Spark-exact
+    round of the 0.00145 midpoint reaches."""
+    from oracle_utils import cosine_replay
+
+    for i in (3, 4, 5, 6):
+        v = dict(_ADV_ROWS)[i]
+        assert cosine_replay(v, _ADV_CENTS[0][1]) == v[0]
     cent = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    a = {r["vec_id"]: r["centroid_id"]
-         for r in similarity.ivf_assign(emb, cent).collect()}
-    b = {r["vec_id"]: r["centroid_id"]
-         for r in similarity.ivf_assign_pandas(emb, cent).collect()}
-    agree = sum(a[k] == b[k] for k in a)
-    # summation-order float noise can flip a 4dp-rounded tie on a
-    # measure-zero set; on this data they agree exactly
-    assert agree / len(a) >= 0.99
+    adv = spark.createDataFrame(_ADV_ROWS, "vec_id long, embedding array<double>")
+    adv_cent = spark.createDataFrame(
+        _ADV_CENTS, "centroid_id long, embedding array<double>")
+    return [(emb, cent, 0.4), (adv, adv_cent, 0.6), (adv, adv_cent, 0.0015)]
+
+
+def _bits(x: float) -> int:
+    import struct
+
+    return struct.unpack("<q", struct.pack("<d", x))[0]
+
+
+def test_ivf_pandas_assignment_matches_expr(spark, emb):
+    """The Arrow/numpy assignment equals the inlined-literal expression
+    form exactly: centroid id and the bits of the 4dp centroid cosine
+    (midpoints, ties to the lowest id, zero/ragged/empty rows at 0.0,
+    no -0.0), on the testdata sample and the adversarial frame."""
+    for corpus, cent, _ in _frames(spark, emb)[:2]:
+        def run(fn):
+            return {r["vec_id"]: (r["centroid_id"], _bits(r["centroid_cos"]))
+                    for r in fn(corpus, cent, with_score=True).collect()}
+        assert run(similarity.ivf_assign_pandas) == run(similarity.ivf_assign)
 
 
 # ---------------------------------------------------------------------------
@@ -632,18 +679,39 @@ def test_semdedup_keeps_farthest_from_centroid(spark):
 
 
 def test_semdedup_pandas_assignment_matches_expr(spark, emb):
-    """The BLAS-assignment semdedup must agree with the expr path on
-    the full testdata sample (same rounding + tie rules)."""
-    cent = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
-    a = {r["vec_id"]: (r["centroid_id"], r["is_kept"])
-         for r in dedup.semdedup(emb, cent, threshold=0.4).collect()}
-    b = {r["vec_id"]: (r["centroid_id"], r["is_kept"])
-         for r in dedup.semdedup(emb, cent, threshold=0.4,
-                                 assignment_impl="pandas").collect()}
-    agree = sum(a[k] == b[k] for k in a)
-    assert agree / len(a) >= 0.99
+    """semdedup equals the pure-Python replay (left-fold cosine,
+    Decimal rounding, the keep rule) row for row: id, centroid id,
+    centroid_cos bits and is_kept; its assignment equals the expression
+    ivf_assign; and a cluster split across Arrow batches gives the
+    same rows."""
+    from oracle_utils import semdedup_replay
+
+    def run(corpus, cent, thr):
+        return {r["vec_id"]: (r["centroid_id"], _bits(r["centroid_cos"]),
+                              r["is_kept"])
+                for r in dedup.semdedup(corpus, cent, threshold=thr).collect()}
+
+    cases = _frames(spark, emb)
+    for corpus, cent, thr in cases:
+        got = run(corpus, cent, thr)
+        ref = semdedup_replay(
+            [(r["vec_id"], r["embedding"]) for r in corpus.collect()],
+            [(r["centroid_id"], r["embedding"]) for r in cent.collect()],
+            thr,
+        )
+        assert got == {i: (c, _bits(s), k) for i, (c, s, k) in ref.items()}
+        expr = {r["vec_id"]: (r["centroid_id"], _bits(r["centroid_cos"]))
+                for r in similarity.ivf_assign(
+                    corpus, cent, with_score=True).collect()}
+        assert {i: g[:2] for i, g in got.items()} == expr
+    corpus, cent, thr = cases[-1]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        assert run(corpus, cent, thr) == got
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_incremental_embedding_neardup_membership(spark):

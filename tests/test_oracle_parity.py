@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from conftest import SF_ORACLE
+from oracle_utils import bigdecimal_round, midpoint_corpus
 
 
 def _registry():
@@ -191,40 +192,6 @@ class TestComparatorSignedZero:
         assert probs and "value mismatches" in probs[0]
 
 
-def _midpoint_corpus():
-    """Adversarial 4dp-midpoint doubles (the 121 exact midpoints
-    (2k+1)*5e-5 for |k| <= 60 — including 0.00015 == 3/20000 at k=1 —
-    plus 7 literals) and each value's two representable neighbors:
-    384 cases, no duplicates. The set where DuckDB's binary round and
-    Spark's BigDecimal string round genuinely diverge (the original
-    r08 probe measured 18 divergences on its 381-case variant)."""
-    import numpy as np
-
-    cases = []
-    for k in range(-60, 61):
-        m = (2 * k + 1) * 0.00005
-        cases += [m, float(np.nextafter(m, -np.inf)),
-                  float(np.nextafter(m, np.inf))]
-    for v in [0.12345, -0.12345, 2.00005, -2.00005, 0.99995, -0.99995,
-              12345.00005]:
-        cases += [v, float(np.nextafter(v, -np.inf)),
-                  float(np.nextafter(v, np.inf))]
-    assert len(cases) == len(set(cases)) == 384
-    return cases
-
-
-def _bigdecimal_round(x: float, s: int = 4) -> float:
-    """Reference for Spark F.round on DOUBLE: BigDecimal.valueOf goes
-    through Double.toString (shortest round-trip repr — identical to
-    Python repr), HALF_UP, no signed zero. Verified against REAL
-    PySpark F.round in test_spark_round_matches_reference."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q = Decimal(1).scaleb(-s)
-    return float(Decimal(repr(float(x))).quantize(
-        q, rounding=ROUND_HALF_UP)) + 0.0
-
-
 class TestRoundConformance:
     """Pins the r08 rounding-conformance discovery (plans/
     oracle_round.py): DuckDB round(double, s) rounds the scaled BINARY
@@ -243,13 +210,13 @@ class TestRoundConformance:
         import numpy as np
         import pandas as pd
 
-        xs = _midpoint_corpus()
+        xs = midpoint_corpus()
         con = duckdb.connect()
         con.register("arr", pd.DataFrame({"x": xs}))
         d = con.execute(
             "SELECT round(x, 4) + 0 AS r FROM arr"
         ).fetchdf()["r"].to_numpy()
-        ref = np.array([_bigdecimal_round(x) for x in xs])
+        ref = np.array([bigdecimal_round(x) for x in xs])
         assert (d.view("int64") != ref.view("int64")).sum() >= 10, (
             f"DuckDB {duckdb.__version__} no longer diverges from "
             "BigDecimal string rounding on exact midpoints — the "
@@ -271,7 +238,7 @@ class TestRoundConformance:
         )
 
         rng = np.random.default_rng(7)
-        xs = (_midpoint_corpus()
+        xs = (midpoint_corpus()
               + [float(v) for v in rng.uniform(-1, 1, 20000)]
               + [float(v) for v in rng.uniform(-1e-4, 1e-4, 20000)]
               + [float(v) for v in rng.uniform(-1e6, 1e6, 10000)])
@@ -279,7 +246,7 @@ class TestRoundConformance:
         con.register("arr", pd.DataFrame({"x": xs}))
         sql = spark_round_oracle("SELECT round(x, 4) AS r FROM arr")
         d = con.execute(sql).fetchdf()["r"].to_numpy()
-        ref = np.array([_bigdecimal_round(x) for x in xs])
+        ref = np.array([bigdecimal_round(x) for x in xs])
         neq = d.view("int64") != ref.view("int64")
         assert not neq.any(), (
             f"{int(neq.sum())} divergences; first: "
@@ -288,22 +255,52 @@ class TestRoundConformance:
 
     def test_spark_round_matches_reference(self, spark):
         """The reference-validity pin: real PySpark F.round agrees
-        with _bigdecimal_round on the midpoint corpus + 5k randoms
+        with bigdecimal_round on the midpoint corpus + 5k randoms
         (r08 probe: 0 divergences over 40,384 cases)."""
         import numpy as np
         import pandas as pd
         from pyspark.sql import functions as F
 
         rng = np.random.default_rng(11)
-        xs = (_midpoint_corpus()
+        xs = (midpoint_corpus()
               + [float(v) for v in rng.uniform(-1, 1, 2500)]
               + [float(v) for v in rng.uniform(-1e-4, 1e-4, 2500)])
         df = spark.createDataFrame(pd.DataFrame({"x": xs}))
         out = df.select(
             (F.round("x", 4) + F.lit(0.0)).alias("r")
         ).toPandas()["r"].to_numpy()
-        ref = np.array([_bigdecimal_round(x) for x in xs])
+        ref = np.array([bigdecimal_round(x) for x in xs])
         assert not (out.view("int64") != ref.view("int64")).any()
+
+    def test_round4_matches_reference(self):
+        """``similarity.round4``, the numpy F.round(x, 4) of the Arrow
+        kernels, is bit-exact vs the reference on the midpoint corpus,
+        the two shortest-repr midpoints a scaled-binary HALF_UP gets
+        wrong (0.00145 -> 0.0015, 0.0018499999999999999 -> 0.0018),
+        signed zero and random draws, in any array shape; NaN and inf
+        pass through like Spark's."""
+        import numpy as np
+
+        from snowflake_data_pipeline_demo_spark.operators.similarity import (
+            round4,
+        )
+
+        rng = np.random.default_rng(17)
+        xs = (midpoint_corpus()
+              + [0.00145, 0.0018499999999999999, -0.00003, -0.0, 0.0,
+                 1e15 + 0.5, 12345678901.00005, 3e17]
+              + [float(v) for v in rng.uniform(-1, 1, 20000)]
+              + [float(v) for v in rng.uniform(-1e-4, 1e-4, 20000)]
+              + [float(v) for v in rng.uniform(-1e6, 1e6, 10000)])
+        ref = np.array([bigdecimal_round(x) for x in xs])
+        got = round4(np.array(xs).reshape(-1, 2)).reshape(-1)
+        neq = got.view("int64") != ref.view("int64")
+        assert not neq.any(), (
+            f"{int(neq.sum())} divergences; first: "
+            f"{[repr(xs[i]) for i in np.flatnonzero(neq)[:3]]}"
+        )
+        odd = round4([float("nan"), float("inf"), float("-inf")])
+        assert np.isnan(odd[0]) and list(odd[1:]) == [np.inf, -np.inf]
 
     def test_rewriter_mechanics(self):
         from snowflake_data_pipeline_demo_spark.plans.oracle_round import (
@@ -468,7 +465,7 @@ class TestRoundConformance:
         for s in (0, 1, 3, 4, 6):
             sql = spark_round_oracle(f"SELECT round(x, {s}) AS r FROM arr")
             d = con.execute(sql).fetchdf()["r"].to_numpy()
-            ref = np.array([_bigdecimal_round(x, s) for x in xs])
+            ref = np.array([bigdecimal_round(x, s) for x in xs])
             neq = d.view("int64") != ref.view("int64")
             assert not neq.any(), (
                 f"s={s}: {int(neq.sum())} divergences; first: "
