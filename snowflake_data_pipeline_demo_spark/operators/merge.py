@@ -15,6 +15,13 @@ anti-join, so a merge into a dimension costs one scan of the (small)
 source batch. For a large target, the anti-join shuffles on the key —
 the same cost any engine pays for a merge; pre-partitioning the target
 by key (Table.partition_by / bucketing) keeps it co-located.
+
+:func:`insert_only_merge` collects the new rows to the driver and
+writes them with ``Table.write_rows`` (no Spark write job). That bounds
+it to merges whose new rows fit the driver: today's callers merge one
+micro-batch into a dimension, so the rows are at most the batch's new
+distinct keys. A fact-sized merge would use :func:`merge_result` with
+``Table.append`` instead.
 """
 
 from __future__ import annotations
@@ -43,20 +50,15 @@ def merge_result(target: DataFrame, source: DataFrame,
 
 def insert_only_merge(table: Table, source: DataFrame, keys: list[str]) -> int:
     """Execute the merge against a catalog table; returns rows inserted.
+    The new rows are collected to the driver (see the module docstring
+    for the size contract).
 
     Idempotent by construction: re-running with the same source inserts
     nothing (the reference's re-merge stability, SURVEY §5 test 2).
     """
-    new_rows = merge_result(table.read(), source, keys)
-    # cheap count via the same plan Spark will execute for the write;
-    # the action also materializes before we append (read-then-write on
-    # the same parquet dir needs the read finished first).
     cols = [f.name for f in table.schema.fields]
-    staged = new_rows.select(*cols).cache()
-    try:
-        n = staged.count()
-        if n:
-            table.append(staged)
-    finally:
-        staged.unpersist()
-    return n
+    # collecting finishes the read of the target before the write lands
+    rows = merge_result(table.read(), source, keys).select(*cols).collect()
+    if rows:
+        table.write_rows(rows)
+    return len(rows)

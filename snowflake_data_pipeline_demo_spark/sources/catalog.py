@@ -16,6 +16,9 @@ parquet append + anti-join express exactly (operators/merge.py).
 Scale notes:
 - appends are plain parquet file adds — no table-wide rewrite, safe for a
   1000-executor writer.
+- the few rows a trigger writes from the driver (ledger rows, new
+  dimension keys) go through ``Table.write_rows``: one pyarrow file
+  renamed into place, no Spark job and no committer.
 - ``Table.read`` is a schema'd parquet scan: Catalyst gets pushdown +
   column pruning for free, and streaming readers (streaming/streams.py)
   can treat the same directory as a file-source CDC log because the
@@ -30,25 +33,30 @@ from __future__ import annotations
 import contextlib
 import os
 import threading
+import uuid
 
+import pyarrow as pa
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: Per-table-path append serialization (r11 captured trace): two
-#: concurrent append jobs into the SAME path share the committer's
-#: `<path>/_temporary/0` staging dir, and the first job's commit
-#: CLEANUP recursively deletes it — wiping the second job's in-flight
-#: attempt dir (`chmod: cannot access ..._temporary/attempt_...`,
-#: job aborted). Hit live by the three 1-second task ticks appending
-#: to the shared task_history ledger. In-process writers (the task
-#: runner, the pipe, tests) serialize on these locks, keyed by the
-#: NORMALIZED path (r11 ADVICE: a trailing-slash or relative variant
-#: of one physical dir must map to the same lock). Lock creation goes
-#: through an explicit guard instead of defaultdict.__missing__ so the
-#: fix doesn't lean on CPython GIL atomicity. Cross-PROCESS writers
-#: are detected and refused loudly via a pid lock file — see
-#: Table._append_lockfile.
+#: Per-table-path serialization of DataFrame appends (r11 captured
+#: trace): two concurrent append jobs into the SAME path share the
+#: committer's `<path>/_temporary/0` staging dir, and the first job's
+#: commit CLEANUP recursively deletes it — wiping the second job's
+#: in-flight attempt dir (`chmod: cannot access
+#: ..._temporary/attempt_...`, job aborted). First hit live by three
+#: task ticks appending to one shared ledger; the ledgers now write
+#: through Table.write_rows, which has no committer staging, so these
+#: locks guard only DataFrame callers of Table.append. They are keyed
+#: by the NORMALIZED path (r11 ADVICE: a trailing-slash or relative
+#: variant of one physical dir must map to the same lock). Lock
+#: creation goes through an explicit guard instead of
+#: defaultdict.__missing__ so the fix doesn't lean on CPython GIL
+#: atomicity. Cross-PROCESS writers are detected and refused loudly
+#: via a pid lock file — see Table._append_lockfile.
 _APPEND_LOCKS: dict[str, threading.Lock] = {}
 _APPEND_LOCKS_GUARD = threading.Lock()
 
@@ -82,6 +90,34 @@ class ConcurrentAppendError(RuntimeError):
     In-process writers are serialized; a second PROCESS is refused
     loudly here instead. Multi-driver appends to one path need a
     table format with a real commit protocol."""
+
+
+#: Spark -> Arrow types for :meth:`Table.write_rows`: only the types the
+#: driver-written tables use. Timestamps carry the UTC zone so the
+#: parquet column is instant-semantics (read back as TimestampType, not
+#: NTZ); naive datetimes are taken as UTC wall-clock.
+_ARROW_TYPES = {
+    T.StringType(): pa.string(),
+    T.IntegerType(): pa.int32(),
+    T.LongType(): pa.int64(),
+    T.DoubleType(): pa.float64(),
+    T.TimestampType(): pa.timestamp("us", tz="UTC"),
+}
+
+
+def _arrow_schema(schema: T.StructType) -> pa.Schema:
+    """The Arrow schema :meth:`Table.write_rows` writes ``schema`` as;
+    raises ``TypeError`` on a type outside :data:`_ARROW_TYPES`."""
+    fields = []
+    for f in schema.fields:
+        if f.dataType not in _ARROW_TYPES:
+            raise TypeError(
+                f"write_rows cannot write column {f.name!r} of type "
+                f"{f.dataType.simpleString()}"
+            )
+        fields.append(pa.field(f.name, _ARROW_TYPES[f.dataType]))
+    return pa.schema(fields)
+
 
 # -- Declared schemas (dp_setup.sql:140-175; SURVEY §1.1) -------------------
 
@@ -252,6 +288,43 @@ class Table:
         )
         fs = p.getFileSystem(self.spark.sparkContext._jsc.hadoopConfiguration())
         return fs.exists(p)
+
+    def write_rows(self, rows: list[tuple], subdir: str | None = None) -> None:
+        """Driver-side write of a few rows (tuples in declared column
+        order, like ``createDataFrame(rows, schema)``) as ONE parquet
+        file, with no Spark job: pyarrow writes an ``_``-prefixed temp
+        file (invisible to readers), then renames it into place.
+
+        - ``subdir=None`` appends: the file gets a fresh unique name,
+          so concurrent writers in any process never collide.
+        - ``subdir`` is the :meth:`overwrite_subdir` contract: afterwards
+          ``{path}/{subdir}`` holds exactly ``rows`` (the file is
+          replaced by rename, stray data files are removed) plus a
+          ``_SUCCESS`` marker, so a replayed batch converges.
+
+        Types outside :data:`_ARROW_TYPES` raise ``TypeError``."""
+        if self.partition_by:
+            raise ValueError("write_rows requires a non-partitioned table")
+        schema = _arrow_schema(self.schema)
+        data = pa.Table.from_arrays(
+            [pa.array([r[i] for r in rows], type=f.type)
+             for i, f in enumerate(schema)],
+            schema=schema,
+        )
+        fs, root = pafs.FileSystem.from_uri(self._lock_key)
+        tag = uuid.uuid4().hex
+        if subdir is not None:
+            root = f"{root}/{subdir}"
+        fs.create_dir(root, recursive=True)
+        final = f"{root}/part-{'00000' if subdir is not None else tag}.parquet"
+        tmp = f"{root}/_{tag}.parquet"
+        pq.write_table(data, tmp, filesystem=fs)
+        fs.move(tmp, final)
+        if subdir is not None:
+            for info in fs.get_file_info(pafs.FileSelector(root)):
+                if info.path != final and not info.base_name.startswith(("_", ".")):
+                    fs.delete_file(info.path)
+            fs.open_output_stream(f"{root}/_SUCCESS").close()
 
     @contextlib.contextmanager
     def _append_lockfile(self):

@@ -11,10 +11,18 @@ The reference exposes two built-in table functions:
   scheduled_time, completed_time.
 
 We maintain both as first-class queryable tables (the SURVEY-preferred
-mapping): the ingest pipe appends copy_history rows per micro-batch;
-the task runner appends task_history rows per trigger. Both are plain
-append-only parquet tables -> they scale like any fact table and can be
-queried with full pushdown, unlike Snowflake's 14-day bounded functions.
+mapping). Both are plain parquet tables -> they scale like any fact
+table and can be queried with full pushdown, unlike Snowflake's 14-day
+bounded functions. Neither is written by a Spark job; their rows are
+few and known on the driver, so ``Table.write_rows`` writes them with
+pyarrow:
+
+- copy_history: the pipe counts rows per file from its cached
+  micro-batch and writes them to ``batch_<id>/`` with the batch-keyed
+  form (a replayed batch replaces its rows); ``last_load_time`` is the
+  driver's UTC clock.
+- task_history: each task trigger appends its one row with the append
+  form (a uniquely named file, so concurrent tasks never collide).
 """
 
 from __future__ import annotations

@@ -8,7 +8,7 @@ COPY; exactly-once per file via load history; observability via
 Spark-native: Structured Streaming **file source** on the stage
 directory — new-file discovery per micro-batch, exactly-once file
 tracking via the checkpointed file log (the same contract, no SQS hop).
-Each micro-batch appends to the raw table AND the copy_history ledger.
+Each micro-batch writes to the raw table AND the copy_history ledger.
 
 The raw table stores the *parsed* document struct, not JSON text:
 Snowflake's VARIANT is itself internally columnarized, and parsing once
@@ -23,8 +23,10 @@ plain-parquet equivalent of Delta's txn-id'd foreachBatch write. On
 replay after a crash in the write-to-commit window, a batch whose
 ``_SUCCESS`` marker already exists is SKIPPED (no new files, so
 downstream file-source streams see nothing new either); a half-written
-batch is overwritten and converges. The ledger write is likewise
-batch-keyed, so replays update-in-place instead of duplicating.
+batch is overwritten and converges. The ledger rows (one per file,
+counted from the cached batch) are written from the driver with the
+batch-keyed form of ``Table.write_rows``, so replays update-in-place
+instead of duplicating.
 
 Purge safety (T10) still requires the commit frontier: ledger rows are
 durable before the checkpoint commit, and the staged source files MUST
@@ -33,6 +35,8 @@ trusts ``batch_id <= last_committed_batch()`` (checkpoint commits/).
 """
 
 from __future__ import annotations
+
+import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -88,7 +92,9 @@ class Pipe:
     # -- the COPY INTO body -------------------------------------------------
     def _ingest_batch(self, batch: DataFrame, batch_id: int) -> None:
         sub = f"batch_{batch_id}"
-        batch = batch.cache()  # one compute, two writes (raw + ledger)
+        # one scan of the staged files feeds both the raw write and the
+        # per-file counts
+        batch = batch.cache()
         try:
             if not self.raw_table.subdir_committed(sub):
                 rows = batch.drop("metadata$filename")
@@ -100,20 +106,13 @@ class Pipe:
                     ),
                     sub,
                 )
-            ledger = (
-                batch.groupBy(F.col("metadata$filename").alias("file_name"))
-                .agg(F.count("*").alias("row_count"))
-                .select(
-                    "file_name",
-                    F.lit(self.stage.url).alias("stage_location"),
-                    F.lit(self.raw_table.path).alias("table_name"),
-                    "row_count",
-                    F.lit(0).cast("long").alias("error_count"),
-                    F.current_timestamp().alias("last_load_time"),
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                )
+            counts = batch.groupBy("metadata$filename").count().collect()
+            now = dt.datetime.now(dt.timezone.utc)
+            self.copy_history.write_rows(
+                [(r[0], self.stage.url, self.raw_table.path, r[1], 0, now,
+                  batch_id) for r in counts],
+                sub,
             )
-            self.copy_history.overwrite_subdir(ledger, sub)
         finally:
             batch.unpersist()
 

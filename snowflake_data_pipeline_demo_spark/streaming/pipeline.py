@@ -13,13 +13,18 @@ This module is the dp_demo.sql run-book as an engine object:
 5. purge (T10): delete staged files recorded error-free in copy_history
 
 Scale notes: every task body is a declarative DataFrame plan over the
-micro-batch; merges anti-join against dim tables (broadcast-sized);
-nothing collects fact rows to the driver.
+micro-batch, which each trigger caches so its source is scanned once;
+merges anti-join against dim tables (broadcast-sized) and collect only
+the new dimension rows; nothing collects fact rows to the driver. The
+per-trigger bookkeeping is written from the driver without Spark jobs
+(copy_history and task_history rows, new dimension rows:
+``Table.write_rows``), and push_trips counts its rows with an
+``Observation`` on its write instead of a second action.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.merge import insert_only_merge
@@ -104,11 +109,14 @@ class CitibikePipeline:
             _v("gender", "int").alias("gender"),
             _v("program_id", "int").alias("program_id"),
         )
+        # the row count rides on the write job (no second action)
+        seen = Observation()
+        rows = rows.observe(seen, F.count(F.lit(1)).alias("n"))
         # batch-keyed idempotent write: a replay after a crash in the
         # write-to-commit window converges instead of duplicating (the
         # merge consumers are naturally idempotent; this INSERT is not)
         self.trips.overwrite_subdir(rows, f"batch_{batch_id}")
-        return batch.count()
+        return seen.get["n"]
 
     def _push_programs(self, batch: DataFrame, batch_id: int) -> int:
         """MERGE ... WHEN NOT MATCHED INSERT on program_id
@@ -149,14 +157,15 @@ class CitibikePipeline:
         if frontier is None:
             return 0
         cutoff = F.current_timestamp() - F.expr(f"INTERVAL {lookback_hours} HOURS")
-        # The ledger scan can race a live pipe commit's _temporary
-        # staging on local fs (the same transient channel
-        # Table._has_data absorbs — Spark's own file index stats
-        # children the committer is deleting). Purge is idempotent and
-        # its contract eventual (files not purged this tick purge next
-        # tick), so a bounded retry is the correct absorption — a
-        # propagated transient here killed the whole task query in the
-        # r12 live-load capture.
+        # The ledger scan can race a live write on local fs (the same
+        # transient channel Table._has_data absorbs — Spark's own file
+        # index stats children the writer is deleting; captured when
+        # the ledger was a Spark write with _temporary staging, still
+        # possible for files a replayed batch replaces). Purge is
+        # idempotent and its contract eventual (files not purged this
+        # tick purge next tick), so a bounded retry is the correct
+        # absorption — a propagated transient here killed the whole
+        # task query in the r12 live-load capture.
         for attempt in range(3):
             try:
                 loaded = (

@@ -70,10 +70,13 @@ class TableStream:
     def backlog_count(self) -> int:
         """``select count(*) from stream`` (dp_demo.sql:154-158): rows
         not yet consumed = table rows minus rows in files of COMMITTED
-        batches. Only offset-log entries whose batch id appears in the
-        checkpoint's commits/ log count as consumed — offsets are
-        written at batch start, so an in-flight or failed-and-retrying
-        batch must still show as backlog (T3 consumed-by-DML)."""
+        batches. Only file-log entries whose own ``batchId`` is at or
+        below the checkpoint's commits/ frontier count as consumed —
+        the log is written at batch start, so an in-flight or
+        failed-and-retrying batch must still show as backlog (T3
+        consumed-by-DML). Filtering by entry, not by log file name,
+        matters for ``N.compact``: it is written when batch N starts and
+        lists every entry through N."""
 
         def norm(p: str) -> str:
             # file:///x, file:/x, /x -> /x
@@ -87,8 +90,6 @@ class TableStream:
                 p = os.path.join(src, fn)
                 if not os.path.isfile(p) or fn.startswith("."):
                     continue
-                if fn.isdigit() and int(fn) > frontier:
-                    continue
                 with open(p) as fh:
                     for line in fh:
                         line = line.strip()
@@ -99,7 +100,7 @@ class TableStream:
                         except json.JSONDecodeError:
                             continue
                         path = entry.get("path", "")
-                        if path:
+                        if path and entry["batchId"] <= frontier:
                             seen.add(norm(path))
         total = self.table.read().count()
         if not seen:

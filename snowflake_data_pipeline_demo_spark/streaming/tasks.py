@@ -10,14 +10,16 @@ Spark-native: a Task wraps one stream consumer:
 ``stream.read() -> writeStream.trigger(processingTime).foreachBatch(fn)``.
 
 - the 1-minute schedule -> ``trigger(processingTime='60 seconds')``
-- the stream_has_data guard -> implicit: an empty micro-batch costs one
-  file-listing; we record it as SKIPPED exactly like the reference
-  (dp_demo.sql:170 shows SKIPPED rows).
+- the stream_has_data guard -> ``batch.isEmpty()`` on the cached
+  micro-batch; an empty one is recorded as SKIPPED exactly like the
+  reference (dp_demo.sql:170 shows SKIPPED rows).
 - AFTER chaining (T5) -> ``after`` callbacks run at the end of the
   parent's foreachBatch, in-transaction-order like Snowflake's DAG.
 - resume/suspend (T6) -> start()/stop() of the streaming query.
 - every trigger appends a task_history row (T9) — via the batch
-  function itself (not a listener) so state and timestamps are exact.
+  function itself (not a listener) so state and timestamps are exact;
+  the row is written from the driver (``Table.write_rows``), not by a
+  Spark job.
 """
 
 from __future__ import annotations
@@ -25,7 +27,7 @@ from __future__ import annotations
 import datetime as dt
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.catalog import Table
@@ -58,14 +60,14 @@ class Task:
 
     # -- one trigger --------------------------------------------------------
     def _on_batch(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         self._fired = True
         scheduled = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        # cached so the body's jobs and this guard scan the source once
+        # (the progress numInputRows counts every scan of it)
         batch = batch.cache()
         try:
-            n = batch.count()
-            if n == 0:
-                self._record(spark, "SKIPPED", scheduled, batch_id, 0, None)
+            if batch.isEmpty():
+                self._record("SKIPPED", scheduled, batch_id, 0, None)
                 return
             try:
                 processed = self.body(batch, batch_id)
@@ -76,10 +78,10 @@ class Task:
                 # make it a spurious FAILED-for-a-benign-stop entry,
                 # contradicted by the replay's SUCCEEDED row
                 if not self._stopping:
-                    self._record(spark, "FAILED", scheduled, batch_id, 0,
+                    self._record("FAILED", scheduled, batch_id, 0,
                                  str(e)[:500])
                 raise
-            if not self._record(spark, "SUCCEEDED", scheduled, batch_id,
+            if not self._record("SUCCEEDED", scheduled, batch_id,
                                 processed, None):
                 # record dropped mid-suspension: do NOT run AFTER hooks
                 # on a thread whose job group stop() just cancelled —
@@ -91,39 +93,37 @@ class Task:
         finally:
             batch.unpersist()
 
-    def _record(self, spark: SparkSession, state: str, scheduled, batch_id: int,
-                rows: int, error: str | None) -> bool:
-        """Append one task_history row. Returns False iff the append
-        failed WHILE the task was being suspended — the one case the
-        failure is dropped instead of raised."""
+    def _record(self, state: str, scheduled, batch_id: int, rows: int,
+                error: str | None) -> bool:
+        """Append one task_history row, written from the driver
+        (``Table.write_rows``: no Spark job). Returns False iff the
+        append failed WHILE the task was being suspended — the one case
+        the failure is dropped instead of raised."""
         completed = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         try:
-            self.task_history.append(
-                spark.createDataFrame(
-                    [(self.name, state, scheduled, completed, batch_id,
-                      rows, error)],
-                    self.task_history.schema,
-                )
+            self.task_history.write_rows(
+                [(self.name, state, scheduled, completed, batch_id, rows,
+                  error)]
             )
             return True
         except Exception:
             # suspend() stops the query by interrupting the stream
-            # thread; on a fast trigger the interrupt almost always
-            # lands while this append is mid-flight on the foreachBatch
-            # callback (r11 captured trace: Py4JJavaError <-
-            # java.lang.InterruptedException inside
-            # DataFrameWriter.parquet). Raising here would send the
-            # exception back across the tearing-down py4j callback
-            # connection — the protocol-error channel. Dropping the
-            # row costs at most ONE monitoring entry for the
-            # interrupted tick: if the epoch never commits (the usual
-            # stop path) the replay re-appends it; if stop() landed
-            # after the sink returned and the epoch does commit, the
-            # tick's DATA is intact (the body's writes are batch-keyed)
-            # and only its history row is lost — task_history is
-            # best-effort across suspension, exactly-once for data is
-            # untouched. Any failure on a RUNNING task is real and
-            # propagates.
+            # thread while this callback runs. The row is a local file
+            # write with no JVM call for the interrupt to land in (r11
+            # captured it inside the old Spark append: Py4JJavaError <-
+            # java.lang.InterruptedException in DataFrameWriter.parquet),
+            # but a failure while stopping is still dropped, not raised:
+            # raising would send the exception back across the
+            # tearing-down py4j callback connection — the
+            # protocol-error channel. Dropping the row costs at most ONE monitoring entry for
+            # the interrupted tick: if the epoch never commits (the
+            # usual stop path) the replay re-appends it; if stop()
+            # landed after the sink returned and the epoch does commit,
+            # the tick's DATA is intact (the body's writes are
+            # batch-keyed) and only its history row is lost —
+            # task_history is best-effort across suspension,
+            # exactly-once for data is untouched. Any failure on a
+            # RUNNING task is real and propagates.
             if self._stopping:
                 return False
             raise
@@ -162,7 +162,7 @@ class Task:
         if not self._fired:
             # no micro-batch ran: the reference's stream_has_data guard
             # records the tick as SKIPPED (dp_demo.sql:170)
-            self._record(self.stream.spark, "SKIPPED", scheduled, -1, 0, None)
+            self._record("SKIPPED", scheduled, -1, 0, None)
 
     def suspend(self) -> None:
         """ALTER TASK ... SUSPEND (dp_demo.sql:191-193)."""

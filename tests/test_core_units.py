@@ -3,6 +3,8 @@ scalars, variant) — the pieces the driver gate doesn't see directly."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -15,8 +17,13 @@ from snowflake_data_pipeline_demo_spark.functions.variant import (
 from snowflake_data_pipeline_demo_spark.operators.merge import (
     insert_only_merge, merge_result,
 )
-from snowflake_data_pipeline_demo_spark.sources.catalog import Catalog, PROGRAMS_SCHEMA
+from snowflake_data_pipeline_demo_spark.sources.catalog import (
+    Catalog, PROGRAMS_SCHEMA, STATIONS_SCHEMA, Table,
+)
 from snowflake_data_pipeline_demo_spark.sources.stage import Stage
+from snowflake_data_pipeline_demo_spark.streaming.history import (
+    COPY_HISTORY_SCHEMA, TASK_HISTORY_SCHEMA,
+)
 
 
 def test_stage_roundtrip(spark, tmp_path):
@@ -52,6 +59,88 @@ def test_catalog_append_truncate(spark, tmp_path):
     assert t.count() == 4
     t.truncate()
     assert t.count() == 0
+
+
+def _utc(*args) -> dt.datetime:
+    return dt.datetime(*args, tzinfo=dt.timezone.utc)
+
+
+#: rows for the driver-writer round trip: NULL in every column type,
+#: microsecond timestamps, non-ASCII text, extreme ints and doubles
+_WRITE_ROWS_CASES = {
+    "task_history": (TASK_HISTORY_SCHEMA, [
+        ("push_trips", "SUCCEEDED", _utc(2026, 1, 2, 3, 4, 5, 123456),
+         _utc(2026, 1, 2, 3, 4, 6, 1), 7, 240, None),
+        ("push_programs", "FAILED", None, _utc(1999, 12, 31, 23, 59, 59, 999999),
+         -1, 0, "boom: ünï 　 code"),
+        (None, None, None, None, None, None, None),
+    ]),
+    "copy_history": (COPY_HISTORY_SCHEMA, [
+        ("file:/stage/a.json", "file:/stage", "/wh/raw", 2**40, 0,
+         _utc(2026, 1, 2, 3, 4, 5, 7), 0),
+        ("/stage/b.json", None, "/wh/raw", 0, None, None, -(2**63)),
+    ]),
+    "programs": (PROGRAMS_SCHEMA, [(1, "A"), (2**31 - 1, None), (None, "")]),
+    "stations": (STATIONS_SCHEMA, [
+        (72, "W 52 St", 40.76727216, -73.99392888, "Station at W 52 St"),
+        (-(2**31), None, None, 1e-300, None),
+        (3, "x", float("inf"), -0.5, "y"),
+    ]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_WRITE_ROWS_CASES))
+def test_write_rows_reads_back_like_spark_append(spark, tmp_path, case):
+    """Table.write_rows (pyarrow, no Spark job) must read back exactly
+    like the same rows written by createDataFrame + Table.append, alone
+    and mixed with Spark files in one table; a replayed batch-keyed
+    write leaves one copy of its rows."""
+    from collections import Counter
+
+    schema, rows = _WRITE_ROWS_CASES[case]
+    spark_t = Table(spark, str(tmp_path / "spark"), schema)
+    spark_t.append(spark.createDataFrame(rows, schema))
+    arrow_t = Table(spark, str(tmp_path / "arrow"), schema)
+    arrow_t.write_rows(rows)
+
+    want = Counter(tuple(r) for r in spark_t.read().collect())
+    assert Counter(tuple(r) for r in arrow_t.read().collect()) == want
+
+    # one table holding files from both writers
+    arrow_t.append(spark.createDataFrame(rows, schema))
+    got = Counter(tuple(r) for r in arrow_t.read().collect())
+    assert got == want + want
+
+    # batch-keyed form: a Spark-written batch, then two replays of it
+    keyed = Table(spark, str(tmp_path / "keyed"), schema)
+    keyed.overwrite_subdir(spark.createDataFrame(rows, schema), "batch_3")
+    keyed.write_rows(rows, "batch_3")
+    keyed.write_rows(rows, "batch_3")
+    assert Counter(tuple(r) for r in keyed.read().collect()) == want
+    assert keyed.subdir_committed("batch_3")
+
+
+def test_write_rows_naive_timestamps_are_utc_and_types_are_checked(spark, tmp_path):
+    """Naive datetimes (the ledgers' UTC-naive clock) land as the same
+    instant as their UTC-aware twin; a type the writer does not map
+    raises instead of writing a column Spark would read differently."""
+    from pyspark.sql import types as T
+
+    t = Table(spark, str(tmp_path / "th"), TASK_HISTORY_SCHEMA)
+    aware = _utc(2026, 3, 4, 5, 6, 7, 890123)
+    t.write_rows([("a", "SKIPPED", aware.replace(tzinfo=None), aware, -1, 0, None)])
+    r = t.read().select(
+        F.col("scheduled_time").cast("double").alias("s"),
+        F.col("completed_time").cast("double").alias("c"),
+    ).collect()[0]
+    assert r["s"] == r["c"] == aware.timestamp()
+
+    for bad in (T.DateType(), T.TimestampNTZType(), T.DecimalType(18, 2),
+                T.ArrayType(T.StringType())):
+        u = Table(spark, str(tmp_path / "bad"), T.StructType([T.StructField("x", bad)]))
+        with pytest.raises(TypeError, match="cannot write column 'x'"):
+            u.write_rows([(None,)])
+    assert not Table(spark, str(tmp_path / "bad"), TASK_HISTORY_SCHEMA)._has_data()
 
 
 def test_concurrent_append_from_second_process_refused(spark, tmp_path):

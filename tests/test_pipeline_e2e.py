@@ -4,6 +4,11 @@ ingest; per-consumer offsets; idempotent merges; purge safety."""
 
 from __future__ import annotations
 
+import json
+import os
+import sys
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -117,31 +122,26 @@ def test_pipe_status_and_dashboard(pipeline):
     assert row["programs_rows"] == pipeline.programs.count()
 
 
-def test_record_failure_dropped_only_while_stopping(spark):
+def test_record_failure_dropped_only_while_stopping():
     """The suspend-interrupt race pin (r11): a task-history append that
     fails WHILE the task is stopping is dropped (the uncommitted epoch
     replays on resume, so the row re-appends), but the same failure on
     a running task propagates — the guard must never absorb a real
     write error."""
-    from snowflake_data_pipeline_demo_spark.streaming.history import (
-        TASK_HISTORY_SCHEMA,
-    )
     from snowflake_data_pipeline_demo_spark.streaming.tasks import Task
 
     class _Boom:
-        schema = TASK_HISTORY_SCHEMA
-
-        def append(self, df):
-            raise RuntimeError("py4j interrupted write stand-in")
+        def write_rows(self, rows, subdir=None):
+            raise RuntimeError("interrupted ledger write stand-in")
 
     t = Task("t", stream=None, body=lambda b, i: 0, task_history=_Boom())
     t._stopping = True
     # dropped, no raise — and the False return tells _on_batch to skip
     # AFTER hooks on the dying thread
-    assert t._record(spark, "SKIPPED", None, -1, 0, None) is False
+    assert t._record("SKIPPED", None, -1, 0, None) is False
     t._stopping = False
     with pytest.raises(RuntimeError, match="stand-in"):
-        t._record(spark, "SKIPPED", None, -1, 0, None)
+        t._record("SKIPPED", None, -1, 0, None)
 
 
 def test_concurrent_appends_to_one_table_are_safe(spark, tmp_path):
@@ -168,3 +168,124 @@ def test_concurrent_appends_to_one_table_are_safe(spark, tmp_path):
         list(ex.map(one, range(12)))
     assert t.read().count() == 12
     assert {r["k"] for r in t.read().collect()} == set(range(12))
+
+    # the driver-side ledger writer (Table.write_rows) from more
+    # threads than cores, with a short switch interval: every row lands
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with concurrent.futures.ThreadPoolExecutor(max_workers=16) as ex:
+            futs = [ex.submit(t.write_rows, [(i,), (i + 1000,)])
+                    for i in range(12, 60)]
+        for f in futs:
+            f.result(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    want = set(range(60)) | set(range(1012, 1060))
+    assert sorted(r["k"] for r in t.read().collect()) == sorted(want)
+
+
+def test_backlog_counts_uncommitted_batch_listed_in_compact_file(spark, tmp_path):
+    """``N.compact`` is written when consumer batch N starts and lists
+    every file-log entry through N. With batch 9 in flight (commits/
+    stops at 8), the rows of the files batch 9 read are still backlog
+    even though ``9.compact`` names them."""
+    from snowflake_data_pipeline_demo_spark.sources.catalog import (
+        PROGRAMS_SCHEMA, Table,
+    )
+    from snowflake_data_pipeline_demo_spark.streaming.streams import TableStream
+
+    raw = Table(spark, str(tmp_path / "raw"), PROGRAMS_SCHEMA)
+    raw.overwrite_subdir(spark.createDataFrame([(1, "a"), (2, "b")], PROGRAMS_SCHEMA),
+                         "batch_0")
+    raw.overwrite_subdir(spark.createDataFrame([(3, "c")] * 5, PROGRAMS_SCHEMA),
+                         "batch_1")
+    s = TableStream(spark, "new_rows", raw, str(tmp_path / "checkpoints"))
+    os.makedirs(f"{s.checkpoint_dir}/commits")
+    os.makedirs(f"{s.checkpoint_dir}/sources/0")
+    for b in range(9):
+        with open(f"{s.checkpoint_dir}/commits/{b}", "w") as fh:
+            fh.write('v1\n{"nextBatchWatermarkMs":0}\n')
+    with open(f"{s.checkpoint_dir}/sources/0/9.compact", "w") as fh:
+        fh.write("v1\n")
+        for path, _ in raw.data_files():
+            fh.write(json.dumps({
+                "path": path, "timestamp": 0,
+                "batchId": 9 if "/batch_1/" in path else 4,
+            }) + "\n")
+    assert s.backlog_count() == 5
+
+
+def _stream_progress_listener():
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Rows(StreamingQueryListener):
+        def __init__(self):
+            self.rows: dict[str, list[int]] = {}
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            self.rows.setdefault(p.name, []).append(p.numInputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    return Rows()
+
+
+def _probe_job_id(sc) -> int:
+    """Run one job outside any job group and return its id."""
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.parallelize([0], 1).count()
+    (new,) = set(sc.statusTracker().getJobIdsForGroup(None)) - before
+    return new
+
+
+#: Spark jobs per task trigger, without the AFTER purge (push_trips:
+#: the isEmpty guard and its write; the merges: the guard plus the
+#: collect of the anti-join, whose AQE stages run as their own jobs)
+_TASK_JOB_BUDGET = {"push_trips": 2, "push_programs": 4, "push_stations": 4}
+
+
+def test_task_triggers_scan_once_within_job_budget(spark, tables, tmp_path):
+    """Each task caches its micro-batch, so the source is scanned once:
+    every task query's progress numInputRows sums to the raw row count
+    (an uncached batch is re-scanned by each job and over-counts, which
+    the live drain wait keys on). One trigger per task, bracketed by
+    probe jobs, stays within the job budget."""
+    p = CitibikePipeline(spark, str(tmp_path))
+    docs = trip_docs(tables["lineitem"], tables["supplier"], tables["nation"])
+    days = [r["day"] for r in docs.select("day").distinct().orderBy("day").limit(5).collect()]
+    lis = _stream_progress_listener()
+    spark.streams.addListener(lis)
+    try:
+        stream_data(docs.filter(F.col("day").isin(days[:4])), p.stage, days[0], days[3])
+        p.run_available()
+        # the next day is one micro-batch per task; the purge AFTER hook
+        # is left out of the budget (it scans the ledger, not the batch)
+        stream_data(docs.filter(F.col("day") == days[4]), p.stage, days[4], days[4])
+        p.pipe.run_available()
+        p.push_trips.after = []
+        sc = spark.sparkContext
+        jobs = {}
+        for name, task in p.runner.tasks.items():
+            first = _probe_job_id(sc)
+            task.run_available()
+            jobs[name] = _probe_job_id(sc) - first - 1
+        raw = p.trips_raw.count()
+        names = [f"task_{t}_once" for t in p.runner.tasks]
+        deadline = time.time() + 30
+        while time.time() < deadline and any(
+                sum(lis.rows.get(n, [])) < raw for n in names):
+            time.sleep(0.2)
+    finally:
+        spark.streams.removeListener(lis)
+    assert {n: sum(lis.rows.get(n, [])) for n in names} == dict.fromkeys(names, raw)
+    assert all(jobs[t] <= _TASK_JOB_BUDGET[t] for t in jobs), jobs
