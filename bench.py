@@ -65,7 +65,6 @@ HEADLINE = [
     "x_unigram_logprob",
     "x_sample_mixture",
     "x_repetition_metrics",
-    "x_repetition_metrics_prod",
     "x_multimodal_resize",
     "x_skew_salted_agg",
     "x_window_rollup",
@@ -111,7 +110,7 @@ HEADLINE = [
     "x_bloom_cross_run_probe",
     "x_cms_heavy_hitters",
     "x_token_pmi",
-    "x_embed_covariance_prod",
+    "x_embed_covariance",
     "x_stream_corpus_profile",
     # x_dedup_components_incremental is NOT benched via its registry
     # lane: self-contained, it re-runs the full history solve it

@@ -114,8 +114,7 @@ def centroid_frame(spark):
     """NLIST fixed centroids from a gid range disjoint from every
     batch gid (salted) — stands in for the persisted k-means output a
     production pipeline trains once. Deliberately NOT checkpointed:
-    ivf_assign collects the 64 rows driver-side per call (64*64 md5s,
-    trivial), and a localCheckpoint here would be destroyed by the
+    ivf_assign collects the 64 rows driver-side per call (trivial), and a localCheckpoint here would be destroyed by the
     stray-RDD sweep between the incremental and scratch phases —
     checkpoint blocks are unrecoverable once swept (first run of this
     script died exactly that way: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
@@ -132,8 +131,8 @@ def make_tables(spark, root: str):
     assigned = Table(spark, f"{root}/assigned", T.StructType([
         T.StructField("vec_id", T.LongType()),
         T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        # ivf_assign inlines collected centroid ids as Python-int
-        # literals -> LongType regardless of the source frame's type
+        # ivf_assign emits centroid ids as long, whatever the type of
+        # the centroid frame's id column
         T.StructField("centroid_id", T.LongType()),
     ]))
     return clean, assigned

@@ -96,7 +96,7 @@ def exploded_shingles(df: DataFrame, text_col: str = "text",
     the array form takes 15.2 s vs the stitch's 2.1-5.1 s — the
     interpreted higher-order-function cost per token dwarfs the
     exchange it saves, exactly the crossover the r04 repetition-twin
-    measurement already recorded (text.py:repetition_metrics_agg).
+    measurement already recorded (CHANGES.md).
     The token-row exchange is the cheaper side of the trade on every
     scale this host can measure; a network-bound cluster may flip it,
     and the array form lives on in the pinning test should that ever
@@ -645,16 +645,19 @@ def semdedup(emb: DataFrame, centroids: DataFrame,
     copy), then lower id. Output: (id, centroid_id, centroid_cos,
     is_kept) per non-NULL embedding; ``id_col`` is a key. Cosines are
     ``F.round(similarity.cosine(..), 4)`` bit for bit, 0.0 for a zero
-    norm or a length mismatch. No centroids: everything is kept, with
-    NULL cluster columns.
+    norm, a length mismatch or a NULL element; a NaN cosine ranks and
+    matches the way Spark orders NaN, above every number. No centroids:
+    everything is kept, with NULL cluster columns.
 
-    Shape: the narrow Arrow assignment (similarity.ivf_assign_pandas),
-    one shuffle on the centroid id, one numpy pass per cluster, so
-    nlist bounds the quadratic term (the paper sizes k as n / target
-    cluster size). Row blocks keep a worker at O(block x cluster)
-    cosines; a hot cluster runs on one core.
+    Shape: the narrow Arrow assignment (similarity.ivf_assign), one
+    shuffle on the centroid id, one numpy pass per cluster, so nlist
+    bounds the quadratic term (the paper sizes k as n / target cluster
+    size). Row blocks keep a worker at O(block x cluster) cosines; a hot
+    cluster runs on one core.
     """
-    from .similarity import _Vectors, cosine4_at_least, ivf_assign_pandas
+    import pyarrow as pa
+
+    from .similarity import _Vectors, cosine4_at_least, ivf_assign
 
     emb = emb.filter(F.col(vec_col).isNotNull())
     cent_rows = centroids.select(centroid_id_col, vec_col).collect()
@@ -662,23 +665,26 @@ def semdedup(emb: DataFrame, centroids: DataFrame,
         return emb.select(id_col, F.lit(None).cast("long").alias(centroid_id_col),
                           F.lit(None).cast("double").alias("centroid_cos"),
                           F.lit(True).alias("is_kept"))
-    assigned = ivf_assign_pandas(emb, cent_rows, id_col, vec_col,
-                                 centroid_id_col, with_score=True)
+    assigned = ivf_assign(emb, cent_rows, id_col, vec_col,
+                          centroid_id_col, with_score=True)
 
-    def keep(pdf):
-        pdf = pdf.sort_values(["centroid_cos", id_col])  # rank order
-        v = _Vectors.of(pdf[vec_col].to_numpy())
-        dropped = np.zeros(len(pdf), dtype=bool)
-        step = max(1, (1 << 20) // len(pdf))  # 8 MB of cosines per block
-        for b0 in range(0, len(pdf), step):
+    def keep(t: pa.Table) -> pa.Table:
+        cos = t.column("centroid_cos").to_numpy()
+        ids = t.column(id_col).to_numpy()
+        t = t.take(np.lexsort((ids, cos)))  # rank order, NaN last
+        v = _Vectors.of(t.column(vec_col))
+        dropped = np.zeros(len(t), dtype=bool)
+        step = max(1, (1 << 20) // len(t))  # 8 MB of cosines per block
+        for b0 in range(0, len(t), step):
             # rows b0..b0+step against every member ranked at or after b0
             hit = cosine4_at_least(v[b0:b0 + step], v[b0:], threshold)
             dropped[b0:] |= np.triu(hit, k=1).any(axis=0)
-        return pdf[[id_col, centroid_id_col, "centroid_cos"]].assign(is_kept=~dropped)
+        return t.select([id_col, centroid_id_col, "centroid_cos"]).append_column(
+            "is_kept", pa.array(~dropped))
 
     schema = (f"{id_col} {emb.schema[id_col].dataType.simpleString()}, "
               f"{centroid_id_col} long, centroid_cos double, is_kept boolean")
-    return assigned.groupBy(centroid_id_col).applyInPandas(keep, schema)
+    return assigned.groupBy(centroid_id_col).applyInArrow(keep, schema)
 
 
 def incremental_embedding_neardup(new_emb: DataFrame,
@@ -687,7 +693,6 @@ def incremental_embedding_neardup(new_emb: DataFrame,
                                   threshold: float = 0.85,
                                   id_col: str = "vec_id",
                                   vec_col: str = "embedding",
-                                  assignment_impl: str = "expr",
                                   history_assigned: DataFrame | None = None,
                                   new_assigned: DataFrame | None = None,
                                   ) -> DataFrame:
@@ -700,9 +705,9 @@ def incremental_embedding_neardup(new_emb: DataFrame,
 
     Scale shape: history is represented by its ASSIGNED table — the
     (id, vec, centroid) index a production pipeline persists — so each
-    ingest pays O(batch) assignment (shuffle-free; ``assignment_impl=
-    "pandas"`` for the BLAS twin at production nlist) plus
-    cluster-key equi-joins; history is never re-scored against itself.
+    ingest pays O(batch) assignment (shuffle-free, one BLAS matmul per
+    Arrow batch) plus cluster-key equi-joins; history is never
+    re-scored against itself.
     Pass ``history_assigned`` ((id, vec, centroid_id) rows — the
     persisted index; ``history_emb`` is then ignored) to skip even the
     per-batch RE-ASSIGNMENT of history: without it each ingest pays an
@@ -717,9 +722,8 @@ def incremental_embedding_neardup(new_emb: DataFrame,
     not be smaller than batch ids) while the id ordering applies only
     within the new batch.
     """
-    from .similarity import cosine, ivf_assign, ivf_assign_pandas
+    from .similarity import cosine, ivf_assign
 
-    assign_fn = ivf_assign_pandas if assignment_impl == "pandas" else ivf_assign
     if new_assigned is not None:
         probe = new_assigned.select(id_col, vec_col, "centroid_id")
     else:
@@ -730,11 +734,11 @@ def incremental_embedding_neardup(new_emb: DataFrame,
         # (see the docstring). Callers that pre-assign (the streaming
         # batch fn passes new_assigned, already checkpointed) are
         # untouched.
-        probe = lane_cache(assign_fn(new_emb, centroids, id_col, vec_col))
+        probe = lane_cache(ivf_assign(new_emb, centroids, id_col, vec_col))
     if history_assigned is not None:
         hist = history_assigned.select(id_col, vec_col, "centroid_id")
     else:
-        hist = assign_fn(history_emb, centroids, id_col, vec_col)
+        hist = ivf_assign(history_emb, centroids, id_col, vec_col)
 
     def side(df, tag):
         return df.select(

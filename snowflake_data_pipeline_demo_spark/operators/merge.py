@@ -20,8 +20,8 @@ by key (Table.partition_by / bucketing) keeps it co-located.
 writes them with ``Table.write_rows`` (no Spark write job). That bounds
 it to merges whose new rows fit the driver: today's callers merge one
 micro-batch into a dimension, so the rows are at most the batch's new
-distinct keys. A fact-sized merge would use :func:`merge_result` with
-``Table.append`` instead.
+distinct keys. A fact-sized merge would write :func:`merge_result` with
+a Spark parquet append instead.
 """
 
 from __future__ import annotations

@@ -10,8 +10,10 @@ Two paths, same contract:
   candidates. At 100 TB the bucket join replaces the full cross
   product — the cross-product side never materializes.
 
-IVF assignment has two forms with equal values: :func:`ivf_assign`
-(cosine literals, DuckDB-portable), :func:`ivf_assign_pandas` (numpy).
+:func:`ivf_assign` (nearest centroid) and :func:`embedding_covariance`
+each have one arm, an Arrow batch through numpy, gated by the same
+DuckDB oracle as the JVM expressions they reproduce bit for bit
+(:func:`cosine` rounded to 4 dp; Spark's ``sum``/``count(*)``).
 
 Hyperplanes are pseudo-random +/-1 vectors derived from md5(plane:dim),
 so signatures are deterministic and reproducible in the DuckDB oracle
@@ -34,6 +36,8 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd  # module-level: pandas_udf type hints resolve here
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -197,7 +201,7 @@ def lsh_signatures_pandas(dim: int, planes: int = 8, tables: int = 1):
 
 
 def _require_centroids(rows, caller: str) -> None:
-    """Shared empty-centroid contract of both assignment forms: RAISE.
+    """Empty-centroid contract of the assignment: RAISE.
     A zero-row centroid frame reaching assignment is an operational
     error (a never-written centroid table reads as an empty typed
     frame with no warning; kmeans_centroids over an all-degenerate
@@ -216,54 +220,6 @@ def _require_centroids(rows, caller: str) -> None:
             "actually written; assigning against zero centroids "
             "would silently lose data downstream"
         )
-
-
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-    with_score: bool = False,
-) -> DataFrame:
-    """IVF index build: assign every corpus vector to its nearest
-    centroid by cosine (ties -> lowest centroid id).
-
-    The centroid set is nlist rows (a k-means result or seed sample),
-    so it is collected driver-side and inlined as plan literals: the
-    whole assignment is then ONE narrow projection — argmax over an
-    array of (cos, centroid) structs — with no join and **no shuffle**
-    of the corpus. At 100 TB that matters: the alternative
-    (cross-join + groupBy(id).max_by) shuffles every corpus row once
-    for no reason. Output: (id, vec, centroid_id); ``with_score`` adds
-    ``centroid_cos`` (the winning 4dp cosine — SemDeDup's keep rule
-    ranks cluster members by it)."""
-    corpus = _nonnull(corpus, vec_col)
-    cent_rows = centroids.select(
-        F.col(centroid_id_col), F.col(vec_col)
-    ).collect()  # nlist rows — dim-scale, like the star-join dims
-    _require_centroids(cent_rows, "ivf_assign")
-    scored = F.array(*[
-        F.struct(
-            F.round(
-                cosine(
-                    F.col(vec_col),
-                    F.array(*[F.lit(float(x)) for x in r[vec_col]]),
-                ), 4,
-            ).alias("ccos"),
-            # struct max takes the larger ncid on cos ties = smaller id
-            F.lit(-int(r[centroid_id_col])).cast("long").alias("ncid"),
-        )
-        for r in cent_rows
-    ])
-    best = F.array_max(scored)
-    out = [
-        F.col(id_col), F.col(vec_col),
-        (-best["ncid"]).alias(centroid_id_col),
-    ]
-    if with_score:
-        out.append(best["ccos"].alias("centroid_cos"))
-    return corpus.select(*out)
 
 
 def round4(x) -> np.ndarray:
@@ -287,27 +243,49 @@ def round4(x) -> np.ndarray:
     return out.reshape(np.shape(x))
 
 
+def _list_layout(arr: pa.Array | pa.ChunkedArray):
+    """An Arrow ``list<float|double>`` column as numpy: each row's length
+    (0 for a NULL row), the float64 elements of all rows end to end, and
+    which of those elements are non-NULL."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    lens = pc.list_value_length(arr).fill_null(0).to_numpy().astype(np.int64)
+    flat = arr.flatten()  # honours slicing; NULL rows add no elements
+    vals = flat.to_numpy(zero_copy_only=False).astype(np.float64)
+    valid = flat.is_valid().to_numpy(zero_copy_only=False)
+    return lens, vals, valid
+
+
 class _Vectors(NamedTuple):
     """Embedding rows as :func:`cosine` reads them: a zero-padded
-    float64 matrix, each row's length and its left-fold L2 norm."""
+    float64 matrix, each row's length, its left-fold L2 norm, and
+    whether it holds a NULL element (Spark's arithmetic then yields
+    NULL, which :func:`cosine` coalesces to 0.0 against anything)."""
     X: np.ndarray
     lens: np.ndarray
     norm: np.ndarray
+    void: np.ndarray
 
     @classmethod
-    def of(cls, arrays, width: int | None = None) -> "_Vectors":
-        """Rows zero-padded (or cut, then matching nothing) to ``width``,
-        by default the longest row's length."""
-        lens = np.fromiter((len(a) for a in arrays), dtype=np.int64,
-                           count=len(arrays))
+    def of(cls, arr: pa.Array | pa.ChunkedArray,
+           width: int | None = None) -> "_Vectors":
+        """Rows of an Arrow list column, zero-padded (or cut, then
+        matching nothing) to ``width``, by default the longest row's
+        length. NaN elements stay NaN."""
+        lens, vals, valid = _list_layout(arr)
         w = int(lens.max(initial=0)) if width is None else width
-        X = np.zeros((len(arrays), w))
-        for i, a in enumerate(arrays):
-            X[i, :len(a)] = a[:w]
-        return cls(X, lens, np.sqrt(_fold(X, X)))
+        row = np.repeat(np.arange(len(lens)), lens)
+        pos = np.arange(len(vals)) - np.repeat(np.cumsum(lens) - lens, lens)
+        keep = pos < w
+        X = np.zeros((len(lens), w))
+        X[row[keep], pos[keep]] = np.where(valid, vals, 0.0)[keep]
+        void = np.zeros(len(lens), dtype=bool)
+        void[row[~valid]] = True
+        return cls(X, lens, np.sqrt(_fold(X, X)), void)
 
     def __getitem__(self, rows) -> "_Vectors":
-        return _Vectors(self.X[rows], self.lens[rows], self.norm[rows])
+        return _Vectors(self.X[rows], self.lens[rows], self.norm[rows],
+                        self.void[rows])
 
 
 def _fold(A: np.ndarray, B: np.ndarray) -> np.ndarray:
@@ -321,13 +299,15 @@ def _fold(A: np.ndarray, B: np.ndarray) -> np.ndarray:
 
 def _approx_cosines(a: _Vectors, b: _Vectors):
     """Norm products and cosines of all ``(a_i, b_j)`` by one BLAS matmul
-    (off Spark's left fold by ~dim*eps), 0.0 for a zero divisor or a
-    length mismatch; ``a`` and ``b`` share one width."""
+    (off Spark's left fold by ~dim*eps), 0.0 for a zero divisor, a
+    length mismatch or a NULL element, NaN for a NaN element; ``a`` and
+    ``b`` share one width."""
     den = np.outer(a.norm, b.norm)
     with np.errstate(divide="ignore", invalid="ignore"):
         cos = np.where(den != 0, (a.X @ b.X.T) / den, 0.0)
-    if np.ptp(np.concatenate([a.lens, b.lens])):
-        cos[a.lens[:, None] != b.lens[None, :]] = 0.0
+    if np.ptp(np.concatenate([a.lens, b.lens])) or a.void.any() or b.void.any():
+        cos[(a.lens[:, None] != b.lens[None, :])
+            | a.void[:, None] | b.void[None, :]] = 0.0
     return den, cos
 
 
@@ -346,23 +326,25 @@ def _round_exact(a: _Vectors, b: _Vectors, den, cos, i, j) -> np.ndarray:
 
 def cosine4(a: _Vectors, b: _Vectors) -> np.ndarray:
     """The ``(len(a), len(b))`` matrix of ``F.round(cosine(a_i, b_j), 4)``,
-    bit for bit: 0.0 for a zero norm or a length mismatch, no -0.0."""
+    bit for bit: 0.0 for a zero norm, a length mismatch or a NULL
+    element, NaN for a NaN element, no -0.0."""
     den, cos = _approx_cosines(a, b)
     return _round_exact(a, b, den, cos, *np.indices(cos.shape))
 
 
 def cosine4_at_least(a: _Vectors, b: _Vectors, threshold: float) -> np.ndarray:
-    """``cosine4(a, b) >= threshold``, rounding only where it can
-    matter: a 4dp round moves a value by at most 5e-5, so only entries
-    within 1e-4 of the threshold need their exact rounded value."""
+    """``cosine4(a, b) >= threshold`` under Spark's ordering (NaN is
+    above every number), rounding only where it can matter: a 4dp round
+    moves a value by at most 5e-5, so only entries within 1e-4 of the
+    threshold need their exact rounded value."""
     den, cos = _approx_cosines(a, b)
-    hit = cos >= threshold
+    hit = (cos >= threshold) | np.isnan(cos)
     i, j = np.nonzero(np.abs(cos - threshold) <= 1e-4)
     hit[i, j] = _round_exact(a, b, den, cos[i, j], i, j) >= threshold
     return hit
 
 
-def ivf_assign_pandas(
+def ivf_assign(
     corpus: DataFrame,
     centroids: DataFrame | list,
     id_col: str = "vec_id",
@@ -370,31 +352,38 @@ def ivf_assign_pandas(
     centroid_id_col: str = "centroid_id",
     with_score: bool = False,
 ) -> DataFrame:
-    """:func:`ivf_assign` as one Arrow-batched numpy pass with the same
-    values: the cosines to all centroids are one matmul per batch
-    (:func:`cosine4`), argmax with ties to the lowest centroid id, so
-    a row matching no centroid's length (empty, ragged) goes to the
-    lowest id with cos 0.0. Cost stays flat as nlist grows; no join, no
-    corpus shuffle. ``centroids``: a (centroid_id, vec) frame or its
-    collected rows."""
-    from pyspark.sql.functions import pandas_udf
+    """IVF index build: assign every corpus vector to its nearest
+    centroid by ``F.round(cosine(v, c), 4)``, ties to the lowest
+    centroid id. ``centroids``: a (centroid_id, vec) frame or its
+    collected rows; nlist rows, held by the driver.
+
+    One Arrow-batched numpy pass: the cosines to all centroids are one
+    matmul per batch (:func:`cosine4`), so there is no join and no
+    corpus shuffle, and the cost stays flat as nlist grows. Values are
+    Spark's: a row matching no centroid's length (empty, ragged) or
+    holding a NULL element scores 0.0 everywhere and goes to the lowest
+    id; a NaN element scores NaN, which Spark orders above every number.
+    Output: (id, vec, centroid_id); ``with_score`` adds ``centroid_cos``
+    (the winning 4dp cosine — SemDeDup's keep rule ranks cluster members
+    by it)."""
+    from pyspark.sql.functions import arrow_udf
 
     corpus = _nonnull(corpus, vec_col)
     if isinstance(centroids, DataFrame):
         centroids = centroids.select(centroid_id_col, vec_col).collect()
-    _require_centroids(centroids, "ivf_assign_pandas")
+    _require_centroids(centroids, "ivf_assign")
     rows = sorted(centroids, key=lambda r: r[centroid_id_col])
-    ids = np.asarray([int(r[centroid_id_col]) for r in rows])
-    C = _Vectors.of([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
+    ids = np.asarray([int(r[centroid_id_col]) for r in rows], dtype=np.int64)
+    C = _Vectors.of(pa.array([r[vec_col] for r in rows], pa.list_(pa.float64())))
 
-    @pandas_udf("struct<centroid_id: long, centroid_cos: double>")
-    def assign(vecs: pd.Series) -> pd.DataFrame:
-        cos = cosine4(_Vectors.of(vecs.to_numpy(), C.X.shape[1]), C)
-        best = np.argmax(cos, axis=1)  # first maximum: ids ascend
-        return pd.DataFrame({
-            "centroid_id": ids[best],
-            "centroid_cos": cos[np.arange(len(best)), best],
-        })
+    @arrow_udf("struct<centroid_id: long, centroid_cos: double>")
+    def assign(vecs: pa.Array) -> pa.Array:
+        cos = cosine4(_Vectors.of(vecs, C.X.shape[1]), C)
+        best = np.argmax(cos, axis=1)  # first maximum or NaN: ids ascend
+        return pa.StructArray.from_arrays(
+            [pa.array(ids[best]), pa.array(cos[np.arange(len(best)), best])],
+            names=["centroid_id", "centroid_cos"],
+        )
 
     out = corpus.select(
         F.col(id_col), F.col(vec_col), assign(F.col(vec_col)).alias("_a")
@@ -417,7 +406,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    assignment_impl: str = "expr",
 ) -> DataFrame:
     """IVF search: each query probes its ``nprobe`` nearest centroids'
     inverted lists and exact-reranks only those candidates.
@@ -430,11 +418,8 @@ def ivf_topk(
 
     Centroid choice is the caller's: pass k-means centroids on a real
     cluster, or any deterministic seed set (the oracle-checked query
-    uses the first-nlist vectors) — the probe plan is identical.
-    ``assignment_impl``: ``expr`` (inlined literals, oracle-portable) or
-    ``pandas`` (:func:`ivf_assign_pandas`, the large-nlist path)."""
-    assign_fn = ivf_assign_pandas if assignment_impl == "pandas" else ivf_assign
-    assigned = assign_fn(corpus, centroids, id_col, vec_col).select(
+    uses the first-nlist vectors) — the probe plan is identical."""
+    assigned = ivf_assign(corpus, centroids, id_col, vec_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
         "centroid_id",
@@ -561,8 +546,8 @@ def kmeans_centroids(
     Centroid TRAINING is sample-scale — a few thousand vectors bound
     the centroid quality regardless of corpus size — so the right tool
     is vectorized numpy on the driver, not a distributed iteration
-    (same judgment as the inlined-literal assignment in
-    :func:`ivf_assign`; at 100 TB only the ASSIGN step must scale).
+    (same judgment as the driver-held centroids of :func:`ivf_assign`;
+    at 100 TB only the ASSIGN step must scale).
     Deterministic end to end: the sample is the ``sample`` lowest ids,
     init is farthest-point from the lowest-id vector, ties and empty
     clusters re-seed deterministically. Output: (centroid_id, vec)
@@ -666,95 +651,47 @@ def embedding_covariance(df: DataFrame,
     distribution — the PCA/whitening precursor (:func:`
     embedding_dim_stats` gives the per-dim diagonal view; this gives
     the cross terms a whitening transform or dead-direction analysis
-    needs). cov(i,j) = E[v_i*v_j] - E[v_i]E[v_j], computed from
-    map-side-combinable sums so the exchange carries O(dim^2) partials
-    per task regardless of corpus size; the result is dim^2/2 rows.
+    needs). cov(i,j) = E[v_i*v_j] - E[v_i]E[v_j] over the vectors of
+    length > max(i, j), from the sums of :func:`
+    embedding_covariance_state`: one Gram matrix per Arrow batch, an
+    exchange of O(dim^2) partials per task whatever the corpus size,
+    and dim^2/2 output rows.
 
-    This is the ORACLE lane: the per-row pair expansion runs inside
-    nested array lambdas (interpreted, not codegen — the minhash
-    docstring's 90x note applies), which is fine for a
-    correctness twin but wrong for a 100 TB pass. Production uses
-    :func:`embedding_covariance_pandas` — one numpy Gram matrix per
-    Arrow batch, identical output contract (same sums, same rounding),
-    equality-tested in tests/test_extensions.py.
-
-    Output: (i long, j long [i<=j], n long, cov double 4 dp).
-
-    Empty vectors (size 0) are skipped like NULLs — without the guard,
-    ``F.sequence(0, dim - 1)`` with dim=0 DESCENDS to [0, -1] and
-    element_at faults on the empty array (the sequence(start>stop)
-    hazard class the degenerate-input sweep pins); the pandas twin's
-    ``dim == 0: continue`` skip is the same contract.
-    """
-    e = (
-        _nonnull(df, vec_col)
-        .filter(F.size(F.col(vec_col)) > 0)
-        .select(F.col(vec_col).alias("_v"))
-    )
-    dim = F.size("_v")
-    pairs = e.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(0), dim - 1),
-                    lambda i: F.transform(
-                        F.sequence(i, dim - 1),
-                        lambda j: F.struct(
-                            i.cast("long").alias("i"),
-                            j.cast("long").alias("j"),
-                            (
-                                F.element_at("_v", (i + 1).cast("int"))
-                                .cast("double")
-                                * F.element_at("_v", (j + 1).cast("int"))
-                                .cast("double")
-                            ).alias("p"),
-                            F.element_at("_v", (i + 1).cast("int"))
-                            .cast("double").alias("vi"),
-                            F.element_at("_v", (j + 1).cast("int"))
-                            .cast("double").alias("vj"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("s")
-    ).select("s.i", "s.j", "s.p", "s.vi", "s.vj")
-    return (
-        pairs.groupBy("i", "j")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.round(
-                F.sum("p") / F.count("*")
-                - (F.sum("vi") / F.count("*"))
-                * (F.sum("vj") / F.count("*")),
-                4,
-            ).alias("cov"),
-        )
-    )
-
-
-def embedding_covariance_pandas(df: DataFrame,
-                                vec_col: str = "embedding") -> DataFrame:
-    """PRODUCTION twin of :func:`embedding_covariance`: per Arrow
-    batch, ONE float64 Gram matrix (X.T @ X) plus a column-sum vector,
-    emitted as upper-triangle partial rows — BLAS does the dim^2 work
-    batch-at-a-time instead of interpreted per-element lambdas, and
-    the partials merge in the same O(dim^2)-group hash agg. The only
-    float difference vs the oracle lane is summation ORDER (~1e-13
-    relative), far below the 4 dp rounding both lanes share. Rounding
-    absorbs MAGNITUDE ulps only — it does not normalize signed zero:
-    DuckDB's round() keeps -0.0 for cells in (-0.00005, 0) while
-    Spark's BigDecimal round emits +0.0, so the shared oracle appends
-    `+ 0` (IEEE: -0.0 + 0 = +0.0). Root cause of the r07 hash fails
-    on both covariance lanes (64 negative-zero cells at sf0.01).
-
-    Dirty-input parity with the interpreted twin (code-review fix —
-    np.stack used to crash where the lambda lane returned rows):
-    vectors are grouped by LENGTH before stacking (a ragged corpus
-    contributes each row's own i<=j pairs, like the per-row
-    transform), and NULL elements become NaN zeroed out of the sums
-    while still counting in n — exactly Spark's null-skipping
-    sum / null-counting count(*) aggregate semantics."""
+    Output: (i long, j long [i<=j], n long, cov double 4 dp), the values
+    of ``sum(v_i*v_j)/count(*) - (sum(v_i)/count(*))*(sum(v_j)/count(*))``
+    per (i, j) in Spark: NULL vectors and empty ones are skipped, a NULL
+    element drops out of the sums but its row still counts in n (a cell
+    with no non-NULL term is NULL), and a NaN element makes its cells
+    NaN. Float sums run in another order than Spark's (~1e-13 relative),
+    far below the 4 dp rounding."""
     return covariance_finalize(embedding_covariance_state(df, vec_col))
+
+
+def _gram_partials(x: np.ndarray, ok: np.ndarray) -> pa.RecordBatch:
+    """(i, j, sp, si, sj, n) partial rows of one group of equal-length
+    vectors ``x`` (rows) whose non-NULL elements are ``ok``. Spark's sum
+    skips a NULL term and keeps a NaN or infinite one, so rows holding
+    either kind go through exact per-row outer products; the rest is one
+    BLAS Gram matrix."""
+    xz = np.where(ok, x, 0.0)
+    clean = ok.all(axis=1) & np.isfinite(x).all(axis=1)
+    c = xz[clean]
+    g = c.T @ c
+    has_p = np.full(g.shape, clean.any())  # some non-NULL v_i*v_j term
+    if not clean.all():
+        d, okd = xz[~clean], ok[~clean]
+        pair = okd[:, :, None] & okd[:, None, :]
+        with np.errstate(invalid="ignore", over="ignore"):
+            g = g + np.where(pair, d[:, :, None] * d[:, None, :], 0.0).sum(axis=0)
+        has_p |= pair.any(axis=0)
+    s, has_v = xz.sum(axis=0), ok.any(axis=0)
+    iu, ju = np.triu_indices(x.shape[1])
+    return pa.RecordBatch.from_arrays([
+        pa.array(iu.astype(np.int64)), pa.array(ju.astype(np.int64)),
+        pa.array(g[iu, ju], mask=~has_p[iu, ju]),
+        pa.array(s[iu], mask=~has_v[iu]), pa.array(s[ju], mask=~has_v[ju]),
+        pa.array(np.full(len(iu), len(x), dtype=np.int64)),
+    ], names=["i", "j", "sp", "si", "sj", "n"])
 
 
 def embedding_covariance_state(df: DataFrame,
@@ -762,53 +699,22 @@ def embedding_covariance_state(df: DataFrame,
     """This run's PERSISTABLE second-moment state from raw embeddings:
     (i, j, sp, si, sj, n) — write it to parquet and a later run merges
     its own via :func:`covariance_partial_state` over the union, then
-    :func:`covariance_finalize` for the corpus covariance. The Gram
-    work is one numpy matmul per Arrow batch; the output is dim²/2
-    rows regardless of corpus size."""
-    import numpy as np
-
-    from pyspark.sql.types import (
-        DoubleType, LongType, StructField, StructType,
-    )
-
-    partial_schema = StructType([
-        StructField("i", LongType()),
-        StructField("j", LongType()),
-        StructField("sp", DoubleType()),
-        StructField("si", DoubleType()),
-        StructField("sj", DoubleType()),
-        StructField("n", LongType()),
-    ])
+    :func:`covariance_finalize` for the corpus covariance. Each Arrow
+    batch's vectors are grouped by length (a ragged corpus contributes
+    each row's own i<=j pairs) and each group is one Gram matrix
+    (:func:`_gram_partials`); the output is dim²/2 rows regardless of
+    corpus size."""
 
     def gram(batches):
-        for pdf in batches:
-            vecs = pdf[vec_col].to_numpy()
-            if len(vecs) == 0:
-                continue
-            by_len: dict = {}
-            for v in vecs:
-                by_len.setdefault(len(v), []).append(v)
-            for dim, group in by_len.items():
-                if dim == 0:
-                    continue
-                # None -> NaN; NaN products/values zero out of the
-                # sums (Spark's sum skips nulls) but rows still count
-                x = np.array(
-                    [np.asarray(v, dtype="float64") for v in group],
-                    dtype="float64",
-                )
-                xz = np.nan_to_num(x, nan=0.0)
-                g = xz.T @ xz
-                s = xz.sum(axis=0)
-                iu, ju = np.triu_indices(dim)
-                yield pd.DataFrame({
-                    "i": iu.astype("int64"), "j": ju.astype("int64"),
-                    "sp": g[iu, ju], "si": s[iu], "sj": s[ju],
-                    "n": np.full(len(iu), len(group), dtype="int64"),
-                })
+        for b in batches:
+            lens, vals, valid = _list_layout(b.column(0))
+            starts = np.cumsum(lens) - lens
+            for dim in np.unique(lens[lens > 0]):
+                idx = starts[lens == dim][:, None] + np.arange(dim)
+                yield _gram_partials(vals[idx], valid[idx])
 
-    partials = _nonnull(df, vec_col).select(vec_col).mapInPandas(
-        gram, schema=partial_schema
+    partials = _nonnull(df, vec_col).select(vec_col).mapInArrow(
+        gram, "i long, j long, sp double, si double, sj double, n long"
     )
     return covariance_partial_state(partials)
 
@@ -831,8 +737,7 @@ def covariance_partial_state(partials: DataFrame) -> DataFrame:
 
 def covariance_finalize(state: DataFrame) -> DataFrame:
     """(i, j, n, cov) from second-moment state:
-    cov = sp/n - (si/n)(sj/n), rounded to the 4 dp contract both
-    covariance twins share."""
+    cov = sp/n - (si/n)(sj/n), rounded to 4 dp."""
     return state.select(
         "i", "j", F.col("n").cast("long").alias("n"),
         F.round(

@@ -221,57 +221,22 @@ def tfidf_topk(df, text_col: str = "text", id_col: str = "doc_id",
     )
 
 
-def repetition_metrics(c: Column | str) -> Column:
+def repetition_metrics(df, text_col: str = "text", id_col: str = "doc_id"):
     """Within-document repetition (the Gopher dup-n-gram rule family):
-    fraction of n-gram OCCURRENCES that are repeats of an earlier
-    occurrence, for n = 1, 2, 3 — ``1 - distinct/total``. Degenerate
-    texts (loops, boilerplate) score high; 0 when no n-grams exist.
-    Pure per-row expressions over one tokenization."""
-    toks = tokens(c)
+    one row per input doc, ``id`` plus the fraction of n-gram
+    OCCURRENCES that repeat an earlier occurrence, for n = 1, 2, 3 —
+    ``1 - distinct/total``, 4 dp. Degenerate texts (loops, boilerplate)
+    score high; a doc with no n-grams (NULL, empty or punctuation-only
+    text, or fewer than n tokens) scores 0.0.
 
-    def dup_frac(n: int) -> Column:
-        if n == 1:
-            grams = toks
-        else:
-            cnt = F.size(toks)
-            idx = F.sequence(F.lit(1), F.greatest(cnt - (n - 1), F.lit(0)))
-            grams = F.when(cnt >= n, F.transform(
-                idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n))
-            )).otherwise(F.array())
-        total = F.size(grams)
-        return F.when(
-            total > 0,
-            F.round(1.0 - F.size(F.array_distinct(grams)) / total, 4),
-        ).otherwise(F.lit(0.0))
+    Precondition: ``id_col`` is unique. Rows are grouped by it, so two
+    docs sharing an id are scored as one doc and both get its fractions.
 
-    return F.struct(
-        dup_frac(1).alias("dup_unigram_frac"),
-        dup_frac(2).alias("dup_bigram_frac"),
-        dup_frac(3).alias("dup_trigram_frac"),
-    )
-
-
-def repetition_metrics_agg(df, text_col: str = "text",
-                           id_col: str = "doc_id"):
-    """Aggregation twin of :func:`repetition_metrics` — same output
-    contract (one row per input doc: id + dup n-gram fractions for
-    n = 1, 2, 3), built shuffle-side instead of row-side: posexplode
-    the regex split, window-lead to stitch bigrams/trigrams, then ONE
-    ``groupBy(doc_id)`` computing count / count_distinct per n — all
-    whole-stage codegen, no interpreted HOFs. Docs with no tokens
-    (null/empty/punctuation-only text) are restored by a left join and
-    score 0.0, matching the array form.
-
-    Measured trade-off (r04): at bench scale (sf0.1, 5k docs) the
-    array form edges ahead — 1.8 s vs 2.1 s — because this twin's
-    window exchange + 3-way Expand is fixed overhead the tiny corpus
-    can't amortize. The ranking FLIPS as soon as data grows: at 50k
-    docs the twin wins 4.4 s vs 19.1 s and at 200k docs 29 s vs 63 s
-    (local[32], replicated-perturbed corpus) — the interpreted per-row
-    HOF cost scales with every token while the twin's exchange is
-    bandwidth-bound. THIS twin is the production path at scale; the
-    zero-shuffle array form remains the right call for small/interactive
-    slices and stays registered as the same-oracle verifier.
+    Built shuffle-side: posexplode the token split, window-lead to
+    stitch bigrams/trigrams, then ONE ``groupBy(id)`` computing count /
+    count_distinct per n — whole-stage codegen, no interpreted
+    higher-order functions. Docs with no tokens are restored by a left
+    join.
     """
     from pyspark.sql import Window
 
@@ -847,8 +812,8 @@ def distinct_tokens_hll(df, text_col: str = "text",
     unig = base.select(group_col, F.explode("_t").alias("tok"))
     # sequence(1, 0) DESCENDS in Spark ([1, 0], not empty), so a doc
     # with <2 tokens would index element_at(_t, 2) and throw — guard
-    # with F.when exactly like shingles (dedup.py) and
-    # repetition_metrics do; such docs contribute no bigrams.
+    # with F.when exactly like shingles (dedup.py) does; such docs
+    # contribute no bigrams.
     big = base.select(
         group_col,
         F.explode(

@@ -909,159 +909,3 @@ def f4_to_date_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 # extension queries (dedup / similarity / text / multimodal) register
 # themselves into QUERIES on import — keep this at the bottom.
 from . import queries_ext  # noqa: E402,F401
-
-
-#: The driver's correctness harness verifies the FIRST 50 registry
-#: entries only (observed: CORRECTNESS_r01 had 35 rows when the registry
-#: had 35 queries; r02/r03 both pinned at the first 50 of a 67-query
-#: registry). Queries listed here are moved to the front so every
-#: operator that has not yet received a driver verdict lands inside
-#: that window; long-verified scalar one-liners drift past position 50
-#: (their green rows live in CORRECTNESS_r01..r03).
-_VERIFY_FIRST = [
-    # -- r12 rotation cut (policy: fix obligations first, then
-    # -- never-graded, then freshness-due, then alphabetical refresh
-    # -- picks from the oldest remaining cohort — computed by
-    # -- `python scripts/rotation_ledger.py --suggest` against
-    # -- CORRECTNESS_r11). Ledger going into r12: zero fails, zero
-    # -- never-graded, 29 at r09 (the freshness limit — the r11
-    # -- _VERIFY_LAST cohort, obligated by the r11 verdict item 1),
-    # -- 50 at r10, 50 at r11. Window = 29 r09-due + 21 refresh picks
-    # -- from the r10 cohort; the 29 remaining r10 entries MUST front
-    # -- the r13 window (see _VERIFY_LAST).
-    #
-    # freshness-due (last driver-green r09, due r12) — 29: the r11
-    # _VERIFY_LAST cohort, verbatim.
-    "x_dup_ngram_coverage",
-    "x_embed_dedup_incremental",
-    "x_embed_quantize",
-    "x_global_shuffle",
-    "x_hll_cross_run_merge",
-    "x_interleave_sources",
-    "x_length_quantiles",
-    "x_length_quantiles_sketch",
-    "x_mixture_budget",
-    "x_multimodal_resize",
-    "x_oov_rate",
-    "x_pack_sequences",
-    "x_paragraph_dedup",
-    "x_profile_lengths",
-    "x_quality_classifier",
-    "x_quality_gopher",
-    "x_range_join",
-    "x_repetition_metrics",
-    "x_sample_hash_split",
-    "x_sample_mixture",
-    "x_semdedup",
-    "x_shard_manifest_audit",
-    "x_sim_ivf_kmeans",
-    "x_skew_salted_agg",
-    "x_source_quota",
-    "x_stream_minhash_dedup",
-    "x_temperature_mixture",
-    "x_text_redact",
-    "x_vocab_topk",
-    # refresh picks (r10-green, 21 of 50, alphabetical for a
-    # deterministic audit trail — the core reference-parity families:
-    # aggregates, joins, variant/datetime functions): pulls the r13
-    # obligation down from 50 lanes to the 29 in _VERIFY_LAST.
-    "a2_count_distinct",
-    "a5_groupby_ordinals",
-    "a6_dashboard_subqueries",
-    "a7_distinct_days",
-    "f13_md5",
-    "f4_to_date_auto",
-    "f5_object_construct_roundtrip",
-    "f6_variant_extract",
-    "f7_variant_native",
-    "f_datetime_kit",
-    "j1_star_join_revenue",
-    "j2_role_playing_join",
-    "j4_computed_key_join",
-    "j5_onless_inner_join",
-    "j6_theta_like_join",
-    "j7_merge_insert_only",
-    "o5_top16",
-    "p2_date_range_filter",
-    "p6_in_subquery",
-    "p7_distinct",
-    "p8_iff_projection",
-]
-
-#: r10-green entries NOT refreshed in the r12 window — they hit the
-#: two-round freshness limit at r13, so this exact list MUST front the
-#: r13 cut (rotation ledger: ROTATION.md). All remain oracle-gated
-#: locally every run by tests/test_oracle_parity.py, which
-#: parametrizes the whole registry.
-_VERIFY_LAST = [
-    "x_dsir_resample",
-    "x_embed_dim_stats",
-    "x_embed_pca_project",
-    "x_encoding_quality",
-    "x_histogram_quantiles",
-    "x_langid_confusion",
-    "x_length_filter",
-    "x_line_dedup",
-    "x_multimodal_byte_histogram",
-    "x_multimodal_frame_sample",
-    "x_multimodal_metadata",
-    "x_pack_boundaries",
-    "x_repetition_metrics_prod",
-    "x_sample_stratified",
-    "x_semdedup_prod",
-    "x_sessionize",
-    "x_shard_tokens",
-    "x_sim_cosine_topk",
-    "x_sim_ivf_ann",
-    "x_sim_lsh_ann",
-    "x_sim_lsh_ann_prod",
-    "x_snapshot_diff",
-    "x_split_leakage",
-    "x_stream_corpus_profile",
-    "x_tfidf_topk",
-    "x_unigram_logprob",
-    "x_winnow_clusters",
-    "x_winnow_fingerprints",
-    "x_winnow_overlap",
-]
-
-#: Window size the driver grades (observed r02..r07: first 50 rows).
-_WINDOW = 50
-
-
-def _reorder_for_driver_window() -> None:
-    # Loud validation (r07 ADVICE): a typo'd lane name used to be
-    # silently dropped by the `in QUERIES` filter, shrinking the
-    # graded window with no signal. Fail at import time instead.
-    missing = [n for n in _VERIFY_FIRST + _VERIFY_LAST if n not in QUERIES]
-    if missing:
-        raise AssertionError(
-            f"rotation lists name unknown lanes {missing} — fix the "
-            "typo or remove the entry (plans/queries.py)"
-        )
-    dup = set(_VERIFY_FIRST) & set(_VERIFY_LAST)
-    if dup:
-        raise AssertionError(
-            f"lanes listed in BOTH rotation lists: {sorted(dup)}"
-        )
-    if len(_VERIFY_FIRST) != len(set(_VERIFY_FIRST)):
-        raise AssertionError("_VERIFY_FIRST contains duplicates")
-    if len(_VERIFY_LAST) != len(set(_VERIFY_LAST)):
-        # dict construction would silently dedup, dropping a lane from
-        # its r09 freshness obligation with no signal (r08 review)
-        raise AssertionError("_VERIFY_LAST contains duplicates")
-    if len(_VERIFY_FIRST) != _WINDOW:
-        raise AssertionError(
-            f"_VERIFY_FIRST has {len(_VERIFY_FIRST)} entries; the "
-            f"driver grades exactly the first {_WINDOW} — the cut "
-            "must fill the window exactly"
-        )
-    front = list(_VERIFY_FIRST)
-    back = [n for n in _VERIFY_LAST if n not in front]
-    mid = [n for n in QUERIES if n not in set(front) | set(back)]
-    ordered = {n: QUERIES[n] for n in front + mid + back}
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
-
-_reorder_for_driver_window()

@@ -1274,8 +1274,7 @@ def x_sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     cents = similarity.kmeans_centroids(e, nlist=8)
-    return similarity.ivf_topk(e, q, cents, k=5, nprobe=2,
-                               assignment_impl="pandas")
+    return similarity.ivf_topk(e, q, cents, k=5, nprobe=2)
 
 
 @query(
@@ -1408,9 +1407,7 @@ def x_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "x_repetition_metrics",
-    oracle=f"""
+_REPETITION_ORACLE = f"""
     WITH t AS (SELECT doc_id, {_DTOKS} AS t FROM documents),
     g AS (
       SELECT doc_id, t,
@@ -1436,58 +1433,19 @@ def x_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN round(1.0 - len(list_distinct(g3)) / len(g3), 4)
                 ELSE 0.0 END AS dup_trigram_frac
     FROM g
-    """,
-    survey_ref="north-star:repetition-metrics",
-)
+    """
+
+
+# x_repetition_metrics_prod: the former aggregation arm, now the lane itself
+@query("x_repetition_metrics_prod", oracle=_REPETITION_ORACLE,
+       survey_ref="north-star:repetition-metrics")
+@query("x_repetition_metrics", oracle=_REPETITION_ORACLE,
+       survey_ref="north-star:repetition-metrics")
 def x_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-doc duplicate n-gram fractions (n=1,2,3) — the Gopher
     repetition rules (operators/text.repetition_metrics)."""
     d = testdata.load(spark, sf_dir, "documents")
-    return d.select("doc_id", text.repetition_metrics("text").alias("r")) \
-        .select("doc_id", "r.dup_unigram_frac", "r.dup_bigram_frac",
-                "r.dup_trigram_frac")
-
-
-@query(
-    "x_repetition_metrics_prod",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, {_DTOKS} AS t FROM documents),
-    g AS (
-      SELECT doc_id, t,
-             CASE WHEN len(t) >= 2
-                  THEN [concat_ws(' ', t[CAST(i AS INT)], t[CAST(i AS INT)+1])
-                        for i in range(1, len(t))]
-                  ELSE [] END AS g2,
-             CASE WHEN len(t) >= 3
-                  THEN [concat_ws(' ', t[CAST(i AS INT)], t[CAST(i AS INT)+1],
-                                  t[CAST(i AS INT)+2])
-                        for i in range(1, len(t)-1)]
-                  ELSE [] END AS g3
-      FROM t
-    )
-    SELECT doc_id,
-           CASE WHEN len(t) > 0
-                THEN round(1.0 - len(list_distinct(t)) / len(t), 4)
-                ELSE 0.0 END AS dup_unigram_frac,
-           CASE WHEN len(g2) > 0
-                THEN round(1.0 - len(list_distinct(g2)) / len(g2), 4)
-                ELSE 0.0 END AS dup_bigram_frac,
-           CASE WHEN len(g3) > 0
-                THEN round(1.0 - len(list_distinct(g3)) / len(g3), 4)
-                ELSE 0.0 END AS dup_trigram_frac
-    FROM g
-    """,
-    survey_ref="north-star:repetition-metrics",
-)
-def x_repetition_metrics_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aggregation twin of x_repetition_metrics: same output + oracle,
-    built shuffle-side (posexplode + window-lead + one groupBy) instead
-    of interpreted per-row n-gram arrays. Measured at sf0.1 the per-row
-    array form wins (zero shuffle); both shapes are benched
-    round-over-round (operators/text.repetition_metrics_agg docstring
-    has the trade-off analysis)."""
-    d = testdata.load(spark, sf_dir, "documents")
-    return text.repetition_metrics_agg(d, "text", "doc_id")
+    return text.repetition_metrics(d, "text", "doc_id")
 
 
 @query(
@@ -2203,7 +2161,7 @@ def x_encoding_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x_cluster_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Topic-balanced sampling: assign embeddings to their nearest
-    centroid (shuffle-free inlined-literal argmax,
+    centroid (shuffle-free Arrow matmul argmax,
     similarity.ivf_assign) then cap each cluster at its 20 most
     central members via the quota top-k (sampling.group_quota_topk:
     one logical window, two-phased physically by the engine's
@@ -3001,7 +2959,7 @@ def x_cluster_quota_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = similarity.kmeans_centroids(e, nlist=8, iters=5, sample=2048)
     # no cache: single-action consumer under the lazy-naive quota
     # default (see x_cluster_quota)
-    assigned = similarity.ivf_assign_pandas(e, cent, with_score=True).select(
+    assigned = similarity.ivf_assign(e, cent, with_score=True).select(
         "vec_id", "centroid_id", "centroid_cos"
     )
     return sampling.group_quota_topk(
@@ -3956,39 +3914,20 @@ _DCOV_SQL = """
 """
 
 
-@query(
-    "x_embed_covariance",
-    oracle=_DCOV_SQL,
-    survey_ref="north-star:embedding-covariance",
-)
+# x_embed_covariance_prod: the former Gram-matrix arm, now the lane itself
+@query("x_embed_covariance_prod", oracle=_DCOV_SQL,
+       survey_ref="north-star:embedding-covariance")
+@query("x_embed_covariance", oracle=_DCOV_SQL,
+       survey_ref="north-star:embedding-covariance")
 def x_embed_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Upper-triangle embedding covariance matrix
     (operators/similarity.py:embedding_covariance) — the PCA/whitening
-    precursor. This is the interpreted-lambda ORACLE twin; the
-    production Gram-matrix path is x_embed_covariance_prod, held to
-    the SAME oracle (4 dp rounding absorbs summation-order ulps in
-    MAGNITUDE; the sign-of-zero channel is closed separately by the
-    oracle's `+ 0` — DuckDB round() emits -0.0 where Spark's
-    BigDecimal round emits +0.0; r07 hash-fail root cause)."""
+    precursor, one Gram matrix per Arrow batch. The 4 dp rounding
+    absorbs summation-order ulps in MAGNITUDE; the sign-of-zero channel
+    is closed by the oracle's `+ 0` — DuckDB round() emits -0.0 where
+    Spark's BigDecimal round emits +0.0 (r07 hash-fail root cause)."""
     emb = testdata.load(spark, sf_dir, "embeddings")
     return similarity.embedding_covariance(emb)
-
-
-@query(
-    "x_embed_covariance_prod",
-    oracle=_DCOV_SQL,
-    survey_ref="north-star:embedding-covariance",
-)
-def x_embed_covariance_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION covariance twin (operators/similarity.py:
-    embedding_covariance_pandas): one numpy float64 Gram matrix per
-    Arrow batch, partials merged in a dim^2-group hash agg — the shape
-    that holds at 100 TB (BLAS per batch, O(dim^2) exchange). Gated by
-    the same DuckDB oracle as the interpreted twin: a rare case where
-    the Arrow path is exactly hash-checkable because the contract
-    rounds to 4 dp."""
-    emb = testdata.load(spark, sf_dir, "embeddings")
-    return similarity.embedding_covariance_pandas(emb)
 
 
 @query(
@@ -4325,16 +4264,16 @@ def x_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x_embed_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCA dimensionality reduction end to end
-    (operators/similarity.py: embedding_covariance_pandas ->
+    (operators/similarity.py: embedding_covariance ->
     pca_components -> project_embeddings): the corpus-scale pass is
-    the covariance build (Arrow Gram twin); the eigensolve is
+    the covariance build (one Gram matrix per Arrow batch); the eigensolve is
     model-scale driver math (64x64, fixed basis starts + pinned
     iteration count -> deterministic); the projection is a per-row
     broadcast-literal dot-product projection, no shuffle. Output
     serializes the k=4 projection array to a comma string (driver
     canonicalizer rejects array columns)."""
     emb = testdata.load(spark, sf_dir, "embeddings")
-    cov = similarity.embedding_covariance_pandas(emb).collect()
+    cov = similarity.embedding_covariance(emb).collect()
     dim = 1 + max(r["j"] for r in cov)
     comps = similarity.pca_components(cov, dim=dim, k=4)
     proj = similarity.project_embeddings(emb, comps)

@@ -14,8 +14,6 @@ WHEN-MATCHED-UPDATE anywhere, dp_setup.sql:211-245), both of which
 parquet append + anti-join express exactly (operators/merge.py).
 
 Scale notes:
-- appends are plain parquet file adds — no table-wide rewrite, safe for a
-  1000-executor writer.
 - the few rows a trigger writes from the driver (ledger rows, new
   dimension keys) go through ``Table.write_rows``: one pyarrow file
   renamed into place, no Spark job and no committer.
@@ -30,9 +28,7 @@ Scale notes:
 
 from __future__ import annotations
 
-import contextlib
 import os
-import threading
 import uuid
 
 import pyarrow as pa
@@ -42,34 +38,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: Per-table-path serialization of DataFrame appends (r11 captured
-#: trace): two concurrent append jobs into the SAME path share the
-#: committer's `<path>/_temporary/0` staging dir, and the first job's
-#: commit CLEANUP recursively deletes it — wiping the second job's
-#: in-flight attempt dir (`chmod: cannot access
-#: ..._temporary/attempt_...`, job aborted). First hit live by three
-#: task ticks appending to one shared ledger; the ledgers now write
-#: through Table.write_rows, which has no committer staging, so these
-#: locks guard only DataFrame callers of Table.append. They are keyed
-#: by the NORMALIZED path (r11 ADVICE: a trailing-slash or relative
-#: variant of one physical dir must map to the same lock). Lock
-#: creation goes through an explicit guard instead of
-#: defaultdict.__missing__ so the fix doesn't lean on CPython GIL
-#: atomicity. Cross-PROCESS writers are detected and refused loudly
-#: via a pid lock file — see Table._append_lockfile.
-_APPEND_LOCKS: dict[str, threading.Lock] = {}
-_APPEND_LOCKS_GUARD = threading.Lock()
-
-
-def _append_lock(key: str) -> threading.Lock:
-    with _APPEND_LOCKS_GUARD:
-        return _APPEND_LOCKS.setdefault(key, threading.Lock())
-
-
-def _normalize_path_key(path: str) -> str:
-    """One lock key per physical directory: strip trailing slashes and,
-    for local paths (bare or ``file:`` scheme), resolve to an absolute
-    path. Scheme'd remote paths keep their string form."""
+def _normalize_path(path: str) -> str:
+    """One key per physical directory: strip trailing slashes and, for
+    local paths (bare or ``file:`` scheme), resolve to an absolute path.
+    Scheme'd remote paths keep their string form."""
     p = path.rstrip("/")
     if p.startswith("file:"):
         p = p[len("file:"):]
@@ -79,17 +51,6 @@ def _normalize_path_key(path: str) -> str:
     if "://" not in p:
         p = os.path.abspath(p)
     return p
-
-
-class ConcurrentAppendError(RuntimeError):
-    """Another driver process is appending to the same table path.
-
-    Plain-parquet appends share the committer's ``_temporary/0``
-    staging dir, so a second concurrent writer would be silently
-    corrupted by the first commit's cleanup (r11 captured trace).
-    In-process writers are serialized; a second PROCESS is refused
-    loudly here instead. Multi-driver appends to one path need a
-    table format with a real commit protocol."""
 
 
 #: Spark -> Arrow types for :meth:`Table.write_rows`: only the types the
@@ -199,7 +160,7 @@ class Table:
         self.path = path
         self.schema = schema
         self.partition_by = partition_by or []
-        self._lock_key = _normalize_path_key(path)
+        self._norm_path = _normalize_path(path)
         self._ensure_dir()
 
     def _ensure_dir(self) -> None:
@@ -311,7 +272,7 @@ class Table:
              for i, f in enumerate(schema)],
             schema=schema,
         )
-        fs, root = pafs.FileSystem.from_uri(self._lock_key)
+        fs, root = pafs.FileSystem.from_uri(self._norm_path)
         tag = uuid.uuid4().hex
         if subdir is not None:
             root = f"{root}/{subdir}"
@@ -325,76 +286,6 @@ class Table:
                 if info.path != final and not info.base_name.startswith(("_", ".")):
                     fs.delete_file(info.path)
             fs.open_output_stream(f"{root}/_SUCCESS").close()
-
-    @contextlib.contextmanager
-    def _append_lockfile(self):
-        """Cross-process append guard: hold ``<path>/_append.lock``
-        (O_CREAT|O_EXCL, holder pid inside) for the append's duration.
-        A second DRIVER process appending to the same path is detected
-        and REFUSED with :class:`ConcurrentAppendError` naming the
-        holder — it used to corrupt silently via the shared
-        ``_temporary/0`` committer staging (r11 captured trace; r11
-        verdict ask #2 upgraded "documented non-goal" to "detected and
-        refused"). A lock file whose pid is dead (crashed writer) is
-        broken and the acquire retried once. Underscore-prefixed, so
-        Spark's parquet reader ignores it like ``_SUCCESS``. Local
-        filesystems only — a scheme'd remote path skips the guard
-        (object stores don't share a local committer staging dir the
-        same way, and O_EXCL has no meaning there)."""
-        if "://" in self._lock_key:
-            yield
-            return
-        lock = os.path.join(self._lock_key, "_append.lock")
-        os.makedirs(self._lock_key, exist_ok=True)
-        fd = None
-        for attempt in (0, 1):
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                try:
-                    holder = int(open(lock).read().strip() or "0")
-                except (OSError, ValueError):
-                    holder = 0  # vanished or mid-write: treat as live
-                alive = True
-                if holder > 0:
-                    try:
-                        os.kill(holder, 0)
-                    except ProcessLookupError:
-                        alive = False
-                    except PermissionError:
-                        pass  # exists, other user: alive
-                if alive or attempt == 1:
-                    raise ConcurrentAppendError(
-                        f"concurrent append to {self.path!r}: lock file "
-                        f"{lock} held by pid {holder or 'unknown'} — "
-                        "plain-parquet appends from two driver processes "
-                        "share committer staging and would corrupt each "
-                        "other; serialize the writers or use a table "
-                        "format with a real commit protocol"
-                    )
-                with contextlib.suppress(FileNotFoundError):
-                    os.remove(lock)  # stale: holder is dead; retry once
-        try:
-            os.write(fd, str(os.getpid()).encode())
-            os.close(fd)
-            yield
-        finally:
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(lock)
-
-    def append(self, df: DataFrame) -> None:
-        """INSERT-append in declared column order (positional, like SQL
-        INSERT ... SELECT, dp_setup.sql:192-203). Serialized per table
-        path — concurrent appends share committer staging and one
-        job's cleanup kills the other (see _APPEND_LOCKS); a second
-        writer PROCESS is refused loudly (see _append_lockfile)."""
-        cols = [f.name for f in self.schema.fields]
-        w = df.select(*cols).write.mode("append")
-        if self.partition_by:
-            w = w.partitionBy(*self.partition_by)
-        with _append_lock(self._lock_key), self._append_lockfile():
-            w.parquet(self.path)
 
     def overwrite(self, df: DataFrame) -> None:
         cols = [f.name for f in self.schema.fields]

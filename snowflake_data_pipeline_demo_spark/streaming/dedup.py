@@ -34,7 +34,7 @@ def dedup_stream(events: DataFrame, key_cols: Sequence[str],
 def semantic_dedup_batch_fn(
     clean_table, centroids: DataFrame, threshold: float = 0.85,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    assignment_impl: str = "pandas", assigned_table=None,
+    assigned_table=None,
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` factory: continuous SEMANTIC ingest dedup —
     the streaming composition of operators/dedup.
@@ -87,10 +87,7 @@ def semantic_dedup_batch_fn(
     index's.
     """
     from ..operators.dedup import incremental_embedding_neardup
-    from ..operators.similarity import ivf_assign, ivf_assign_pandas
-
-    assign_fn = (ivf_assign_pandas if assignment_impl == "pandas"
-                 else ivf_assign)
+    from ..operators.similarity import ivf_assign
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         sub = f"batch={batch_id}"
@@ -126,12 +123,11 @@ def semantic_dedup_batch_fn(
             )
             # assign the batch ONCE; checkpoint so the probe, the dup
             # decision, and the novel-index write all reuse it
-            probe = assign_fn(
+            probe = ivf_assign(
                 batch_df, centroids, id_col, vec_col, with_score=False
             ).localCheckpoint()
             flagged = incremental_embedding_neardup(
-                batch_df, None, centroids, threshold,
-                id_col, vec_col, assignment_impl,
+                batch_df, None, centroids, threshold, id_col, vec_col,
                 history_assigned=hist_assigned, new_assigned=probe,
             )
             dup_ids = flagged.select(id_col).localCheckpoint()
@@ -155,12 +151,12 @@ def semantic_dedup_batch_fn(
         # the micro-batch (nothing drains _TRACKED between batches —
         # r12 optimization; the operator only self-caches for plain
         # batch callers, where the @query drain owns the lifetime).
-        probe = assign_fn(
+        probe = ivf_assign(
             batch_df, centroids, id_col, vec_col, with_score=False
         ).localCheckpoint()
         flagged = incremental_embedding_neardup(
-            batch_df, history, centroids, threshold,
-            id_col, vec_col, assignment_impl, new_assigned=probe,
+            batch_df, history, centroids, threshold, id_col, vec_col,
+            new_assigned=probe,
         )
         # the decision plan scans clean_table (it IS the history), and
         # the write below overwrites a subdir that scan lists on replay
@@ -175,8 +171,7 @@ def semantic_dedup_batch_fn(
 
 def backfill_assigned_index(clean_table, assigned_table, centroids: DataFrame,
                             id_col: str = "vec_id",
-                            vec_col: str = "embedding",
-                            assignment_impl: str = "pandas") -> None:
+                            vec_col: str = "embedding") -> None:
     """One-time migration: populate an empty ``assigned_table`` from an
     existing clean-vector history so :func:`semantic_dedup_batch_fn`
     can switch to indexed mode without losing dup detection against
@@ -186,12 +181,10 @@ def backfill_assigned_index(clean_table, assigned_table, centroids: DataFrame,
     fn's guard only checks the index is non-empty). Idempotent
     (batch-keyed overwrite) — rerun until it completes if it
     crashes."""
-    from ..operators.similarity import ivf_assign, ivf_assign_pandas
+    from ..operators.similarity import ivf_assign
 
-    assign_fn = (ivf_assign_pandas if assignment_impl == "pandas"
-                 else ivf_assign)
     assigned_table.overwrite_subdir(
-        assign_fn(clean_table.read(), centroids, id_col, vec_col),
+        ivf_assign(clean_table.read(), centroids, id_col, vec_col),
         "batch=backfill",
     )
 
@@ -296,7 +289,7 @@ class SemanticIndexAutoscaler:
                  target_occupancy: int = 256, retrain_factor: float = 2.0,
                  min_nlist: int = 8, max_nlist: int = 4096,
                  id_col: str = "vec_id", vec_col: str = "embedding",
-                 assignment_impl: str = "pandas", kmeans_iters: int = 5,
+                 kmeans_iters: int = 5,
                  sample_per_list: int = 32, max_sample: int = 1 << 18):
         from pyspark.sql import types as T
 
@@ -313,7 +306,6 @@ class SemanticIndexAutoscaler:
         self.retrain_factor = retrain_factor
         self.min_nlist, self.max_nlist = min_nlist, max_nlist
         self.id_col, self.vec_col = id_col, vec_col
-        self.assignment_impl = assignment_impl
         self.kmeans_iters = kmeans_iters
         self.sample_per_list, self.max_sample = sample_per_list, max_sample
         self.last_action: dict | None = None
@@ -324,8 +316,8 @@ class SemanticIndexAutoscaler:
         self._assigned_schema = T.StructType([
             T.StructField(id_col, T.LongType()),
             T.StructField(vec_col, T.ArrayType(T.DoubleType())),
-            # ivf_assign* emit the collected centroid ids as Python-int
-            # literals -> LongType regardless of the source frame
+            # ivf_assign emits centroid ids as long, whatever the
+            # type of the centroid frame's id column
             T.StructField("centroid_id", T.LongType()),
         ])
         self._meta_schema = T.StructType([
@@ -441,7 +433,7 @@ class SemanticIndexAutoscaler:
         if backfill_from is not None:
             backfill_assigned_index(
                 backfill_from, self.assigned_table(epoch), cents,
-                self.id_col, self.vec_col, self.assignment_impl,
+                self.id_col, self.vec_col,
             )
         self._meta.overwrite_subdir(
             self.spark.createDataFrame([(n, desired, shipped)],
@@ -551,7 +543,6 @@ class SemanticIndexAutoscaler:
         return semantic_dedup_batch_fn(
             self.clean_table, self.centroids(epoch),
             self.threshold, self.id_col, self.vec_col,
-            self.assignment_impl,
             assigned_table=self.assigned_table(epoch),
         )
 

@@ -228,17 +228,26 @@ def bigdecimal_round(x: float, s: int = 4) -> float:
     Python repr), HALF_UP, no signed zero. Verified against REAL
     PySpark F.round in
     test_oracle_parity.TestRoundConformance.test_spark_round_matches_reference."""
+    if not math.isfinite(x):
+        return float(x)  # Spark rounds NaN and infinities to themselves
     q = Decimal(1).scaleb(-s)
     return float(Decimal(repr(float(x))).quantize(
         q, rounding=ROUND_HALF_UP)) + 0.0
 
 
+def spark_key(x: float) -> tuple:
+    """Sort key of a DOUBLE in Spark's ordering: NaN above every number
+    (Python's ``<`` is false both ways for NaN)."""
+    return (1, 0.0) if math.isnan(x) else (0, x)
+
+
 def cosine_replay(a, b) -> float:
     """``similarity.cosine`` in pure Python: dot and squared norms fold
     left to right from 0.0 in double, the divisor is the product of the
-    two square roots, and a zero divisor or a length mismatch gives
-    0.0 (Spark's ``zip_with`` pads the shorter side with NULLs)."""
-    if len(a) != len(b):
+    two square roots, and a zero divisor, a length mismatch (Spark's
+    ``zip_with`` pads the shorter side with NULLs) or a NULL element
+    (NULL arithmetic) gives 0.0; a NaN element gives NaN."""
+    if len(a) != len(b) or None in a or None in b:
         return 0.0
     dot = na = nb = 0.0
     for x, y in zip(a, b):
@@ -251,28 +260,82 @@ def cosine_replay(a, b) -> float:
     return dot / den if den != 0 else 0.0
 
 
+def ivf_replay(rows, centroids) -> dict:
+    """``similarity.ivf_assign`` in pure Python over ``(id, vec)`` rows
+    and ``(centroid_id, vec)`` centroids: NULL vectors are skipped, and
+    each row goes to its best 4dp-rounded cosine in Spark's ordering
+    (NaN highest), ties to the lowest centroid id. Returns
+    ``{id: (centroid_id, centroid_cos)}``."""
+    out = {}
+    for i, v in rows:
+        if v is None:
+            continue
+        best = None
+        for cid, c in sorted(centroids):
+            score = bigdecimal_round(cosine_replay(v, c))
+            if best is None or spark_key(score) > spark_key(best[1]):
+                best = (cid, score)
+        out[i] = best
+    return out
+
+
 def semdedup_replay(rows, centroids, threshold: float) -> dict:
     """``dedup.semdedup`` in pure Python over ``(id, vec)`` rows and
-    ``(centroid_id, vec)`` centroids: NULL vectors are skipped, each row
-    goes to its best 4dp-rounded cosine (ties to the lowest centroid
-    id), and a member is dropped when another member of its cluster
-    has rounded cosine >= ``threshold`` to it and ranks before it
-    (lower centroid cosine, then lower id). Returns
-    ``{id: (centroid_id, centroid_cos, is_kept)}``."""
+    ``(centroid_id, vec)`` centroids: the :func:`ivf_replay` assignment,
+    then a member is dropped when another member of its cluster has
+    rounded cosine >= ``threshold`` to it and ranks before it (lower
+    centroid cosine, then lower id), in Spark's ordering (NaN highest).
+    Returns ``{id: (centroid_id, centroid_cos, is_kept)}``."""
     rows = [(i, v) for i, v in rows if v is not None]
     if not centroids:
         return {i: (None, None, True) for i, _ in rows}
-    cents = sorted(centroids)
-    assigned = {}
-    for i, v in rows:
-        score, cid = max(
-            ((bigdecimal_round(cosine_replay(v, c)), -cid) for cid, c in cents)
-        )
-        assigned[i] = (-cid, score, v)
+    vecs = dict(rows)
+    assigned = ivf_replay(rows, centroids)
     dropped = set()
-    for a, (ca, sa, va) in assigned.items():
-        for b, (cb, sb, vb) in assigned.items():
-            if (ca == cb and a != b and (sa, a) < (sb, b)
-                    and bigdecimal_round(cosine_replay(va, vb)) >= threshold):
+    for a, (ca, sa) in assigned.items():
+        for b, (cb, sb) in assigned.items():
+            if (ca == cb and a != b
+                    and (spark_key(sa), a) < (spark_key(sb), b)
+                    and spark_key(bigdecimal_round(
+                        cosine_replay(vecs[a], vecs[b]))) >= spark_key(threshold)):
                 dropped.add(b)
-    return {i: (c, s, i not in dropped) for i, (c, s, _) in assigned.items()}
+    return {i: (c, s, i not in dropped) for i, (c, s) in assigned.items()}
+
+
+def repetition_replay(text: str | None) -> tuple:
+    """``text.repetition_metrics`` for one doc in pure Python: tokens are
+    the non-empty pieces of the lowercased text split on ``[^a-z0-9]+``,
+    and each n = 1, 2, 3 scores ``round(1 - distinct/total, 4)`` over its
+    n-grams, 0.0 when there are none."""
+    import re
+
+    toks = [t for t in re.split("[^a-z0-9]+", (text or "").lower()) if t]
+    out = []
+    for n in (1, 2, 3):
+        grams = [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+        out.append(bigdecimal_round(1.0 - len(set(grams)) / len(grams))
+                   if grams else 0.0)
+    return tuple(out)
+
+
+def covariance_replay(vectors) -> dict:
+    """``similarity.embedding_covariance`` in pure Python, as Spark's
+    ``sum``/``count(*)`` compute it over each vector's ``(i, j)`` pairs
+    (``i <= j < len``; NULL and empty vectors add none): a NULL term is
+    skipped by the sums but its row counts in n, a cell with no non-NULL
+    term is NULL, and NaN propagates. Returns ``{(i, j): (n, cov)}``."""
+    def add(acc, x):
+        return acc if x is None else x if acc is None else acc + x
+
+    sums: dict = {}
+    for v in vectors:
+        for i in range(len(v or ())):
+            for j in range(i, len(v)):
+                n, sp, si, sj = sums.get((i, j), (0, None, None, None))
+                p = None if v[i] is None or v[j] is None else v[i] * v[j]
+                sums[(i, j)] = (n + 1, add(sp, p), add(si, v[i]), add(sj, v[j]))
+    return {
+        k: (n, None if None in (sp, si, sj)
+            else bigdecimal_round(sp / n - (si / n) * (sj / n)))
+        for k, (n, sp, si, sj) in sums.items()
+    }

@@ -52,10 +52,10 @@ def test_catalog_append_truncate(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path / "wh"))
     t = cat.create_table("modelled.programs", PROGRAMS_SCHEMA)
     assert t.count() == 0  # empty table reads as empty typed df
-    df = spark.createDataFrame([(1, "A"), (2, "B")], PROGRAMS_SCHEMA)
-    t.append(df)
+    rows = [(1, "A"), (2, "B")]
+    t.write_rows(rows)
     assert t.count() == 2
-    t.append(df)
+    t.write_rows(rows)
     assert t.count() == 4
     t.truncate()
     assert t.count() == 0
@@ -92,14 +92,14 @@ _WRITE_ROWS_CASES = {
 @pytest.mark.parametrize("case", sorted(_WRITE_ROWS_CASES))
 def test_write_rows_reads_back_like_spark_append(spark, tmp_path, case):
     """Table.write_rows (pyarrow, no Spark job) must read back exactly
-    like the same rows written by createDataFrame + Table.append, alone
-    and mixed with Spark files in one table; a replayed batch-keyed
-    write leaves one copy of its rows."""
+    like the same rows appended by a Spark parquet write, alone and
+    mixed with Spark files in one table; a replayed batch-keyed write
+    leaves one copy of its rows."""
     from collections import Counter
 
     schema, rows = _WRITE_ROWS_CASES[case]
     spark_t = Table(spark, str(tmp_path / "spark"), schema)
-    spark_t.append(spark.createDataFrame(rows, schema))
+    spark.createDataFrame(rows, schema).write.mode("append").parquet(spark_t.path)
     arrow_t = Table(spark, str(tmp_path / "arrow"), schema)
     arrow_t.write_rows(rows)
 
@@ -107,7 +107,7 @@ def test_write_rows_reads_back_like_spark_append(spark, tmp_path, case):
     assert Counter(tuple(r) for r in arrow_t.read().collect()) == want
 
     # one table holding files from both writers
-    arrow_t.append(spark.createDataFrame(rows, schema))
+    spark.createDataFrame(rows, schema).write.mode("append").parquet(arrow_t.path)
     got = Counter(tuple(r) for r in arrow_t.read().collect())
     assert got == want + want
 
@@ -143,88 +143,21 @@ def test_write_rows_naive_timestamps_are_utc_and_types_are_checked(spark, tmp_pa
     assert not Table(spark, str(tmp_path / "bad"), TASK_HISTORY_SCHEMA)._has_data()
 
 
-def test_concurrent_append_from_second_process_refused(spark, tmp_path):
-    """A second DRIVER process appending to the same parquet path is
-    detected and refused LOUDLY (r12; upgraded from the r11
-    'documented non-goal' — the silent failure mode is the first
-    commit's cleanup wiping the second job's shared `_temporary/0`
-    staging). A live subprocess acquires the pid lock file exactly the
-    way Table._append_lockfile does (O_CREAT|O_EXCL + pid inside) and
-    holds it; this process's append must raise ConcurrentAppendError
-    naming the holder, not corrupt."""
-    import os
-    import subprocess
-    import sys
-    import time
-
+def test_table_path_is_normalized(spark, tmp_path):
+    """Trailing-slash and ``file://`` spellings of one physical dir
+    resolve to the same local path, the one write_rows writes under."""
     from snowflake_data_pipeline_demo_spark.sources.catalog import (
-        ConcurrentAppendError,
-    )
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    t = cat.create_table("modelled.programs", PROGRAMS_SCHEMA)
-    df = spark.createDataFrame([(1, "A")], PROGRAMS_SCHEMA)
-    t.append(df)  # uncontended append works and releases the lock
-    lock = os.path.join(t._lock_key, "_append.lock")
-    assert not os.path.exists(lock)
-
-    holder = subprocess.Popen([
-        sys.executable, "-c",
-        "import os, sys, time\n"
-        f"fd = os.open({lock!r}, os.O_CREAT | os.O_EXCL | os.O_WRONLY)\n"
-        "os.write(fd, str(os.getpid()).encode()); os.close(fd)\n"
-        "print('held', flush=True)\n"
-        "time.sleep(60)\n",
-    ], stdout=subprocess.PIPE, text=True)
-    try:
-        assert holder.stdout.readline().strip() == "held"
-        with pytest.raises(ConcurrentAppendError, match=str(holder.pid)):
-            t.append(df)
-    finally:
-        holder.kill()
-        holder.wait()
-    # the refused append must not have clobbered the holder's lock
-    assert os.path.exists(lock)
-    os.remove(lock)
-    t.append(df)  # and the table still works once the writer is gone
-    assert t.count() == 2
-
-
-def test_stale_append_lock_from_dead_process_is_broken(spark, tmp_path):
-    """A lock file left by a CRASHED writer (pid no longer alive) must
-    not wedge the table: the guard breaks it and the append proceeds,
-    removing the lock afterwards."""
-    import os
-    import subprocess
-    import sys
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    t = cat.create_table("modelled.programs", PROGRAMS_SCHEMA)
-    dead = subprocess.Popen([sys.executable, "-c", "pass"])
-    dead.wait()
-    lock = os.path.join(t._lock_key, "_append.lock")
-    with open(lock, "w") as f:
-        f.write(str(dead.pid))
-    t.append(spark.createDataFrame([(1, "A")], PROGRAMS_SCHEMA))
-    assert t.count() == 1
-    assert not os.path.exists(lock)
-
-
-def test_append_lock_key_is_path_normalized(spark, tmp_path):
-    """Trailing-slash / relative spellings of one physical dir must
-    take the SAME in-process lock (r11 ADVICE: distinct raw-string
-    keys silently stopped serializing)."""
-    from snowflake_data_pipeline_demo_spark.sources.catalog import (
-        Table, _append_lock, _normalize_path_key,
+        _normalize_path,
     )
 
     base = str(tmp_path / "wh" / "t")
-    assert _normalize_path_key(base + "/") == _normalize_path_key(base)
-    assert _normalize_path_key("file://" + base) == _normalize_path_key(base)
+    assert _normalize_path(base + "/") == _normalize_path(base)
+    assert _normalize_path("file://" + base) == _normalize_path(base)
     t1 = Table(spark, base, PROGRAMS_SCHEMA)
-    t2 = Table(spark, base + "/", PROGRAMS_SCHEMA)
-    assert t1._lock_key == t2._lock_key
-    assert _append_lock(t1._lock_key) is _append_lock(t2._lock_key)
+    t2 = Table(spark, "file://" + base + "/", PROGRAMS_SCHEMA)
+    assert t1._norm_path == t2._norm_path == base
+    t2.write_rows([(1, "A")])
+    assert t1.count() == 1
 
 
 def test_has_data_ignores_temporary_staging_subtrees(spark, tmp_path):
@@ -239,12 +172,12 @@ def test_has_data_ignores_temporary_staging_subtrees(spark, tmp_path):
 
     cat = Catalog(spark, str(tmp_path / "wh"))
     t = cat.create_table("modelled.programs", PROGRAMS_SCHEMA)
-    staging = os.path.join(t._lock_key, "_temporary", "0", "_temporary")
+    staging = os.path.join(t._norm_path, "_temporary", "0", "_temporary")
     os.makedirs(staging)
     with open(os.path.join(staging, "part-000.parquet"), "w") as f:
         f.write("in-flight attempt data")
     assert not t._has_data()  # staging content is invisible
-    nested = os.path.join(t._lock_key, "batch_1")
+    nested = os.path.join(t._norm_path, "batch_1")
     os.makedirs(nested)
     with open(os.path.join(nested, "part-000.parquet"), "wb") as f:
         f.write(b"x")
@@ -286,7 +219,7 @@ def test_suspend_keeps_stopping_flag_when_stop_fails(spark, tmp_path):
 def test_insert_only_merge_semantics(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path / "wh"))
     t = cat.create_table("modelled.programs", PROGRAMS_SCHEMA)
-    t.append(spark.createDataFrame([(1, "A"), (2, "B")], PROGRAMS_SCHEMA))
+    t.write_rows([(1, "A"), (2, "B")])
 
     src = spark.createDataFrame(
         [(2, "B-dup"), (3, "C"), (3, "C"), (4, "D")], PROGRAMS_SCHEMA
@@ -362,7 +295,7 @@ def test_table_compact_merges_small_files(spark, tmp_path):
     ])
     t = Table(spark, str(tmp_path / "t"), schema)
     for i in range(6):
-        t.append(spark.createDataFrame([(i, f"v{i}")], schema).coalesce(1))
+        t.write_rows([(i, f"v{i}")])
     before = t.read().orderBy("k").collect()
     assert len(t.data_files()) >= 6
     stats = t.compact(target_file_bytes=1 << 30)
@@ -527,88 +460,6 @@ class TestLaneCacheContract:
 
         caching.lane_cache(_Torn())
         assert caching.release_lane_caches() == 0
-
-
-class TestRotationSuggest:
-    """The rotation window cut policy as pure arithmetic
-    (scripts/rotation_ledger.py --suggest, r10): fix obligations front
-    the window, then never-graded, then freshness-due, then
-    alphabetical refresh picks from the oldest cohort; the due-next
-    cohort's leftovers become the _VERIFY_LAST obligation. The cut was
-    hand-derived every round before r10 — a transcription slip there
-    silently misses a lane's grading deadline, so the policy gets a
-    pin like any other contract."""
-
-    @staticmethod
-    def _suggest(names, green, fail, cur, window):
-        import importlib.util
-        import io
-        import os
-        from contextlib import redirect_stdout
-
-        spec = importlib.util.spec_from_file_location(
-            "rotation_ledger",
-            os.path.join(os.path.dirname(__file__), "..", "scripts",
-                         "rotation_ledger.py"),
-        )
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            mod.suggest(names, green, fail, cur, window=window)
-        out = buf.getvalue()
-        blocks: dict[str, list[str]] = {}
-        key = None
-        for line in out.splitlines():
-            if line.startswith("# "):
-                key = line[2:].split(" (")[0]
-                blocks[key] = []
-            elif line.strip().startswith('"') and key:
-                blocks[key].append(line.strip().strip('",'))
-        return blocks
-
-    def test_policy_order_and_leftovers(self):
-        names = [f"l{i:02d}" for i in range(10)]
-        green = {"l00": 5, "l01": 5, "l02": 4, "l03": 4, "l04": 3,
-                 "l05": 3, "l06": 5, "l08": 2, "l09": 5}
-        # l07 never graded; l08 green r02 then FAILED r05; l04/l05 due
-        fail = {"l08": 5}
-        b = self._suggest(names, green, fail, cur=5, window=6)
-        assert b["fix obligations"] == ["l08"]
-        assert b["never graded"] == ["l07"]
-        assert b["freshness-due"] == ["l04", "l05"]
-        # 2 refresh slots left -> oldest cohort (r04) alphabetical
-        assert b["refresh picks"] == ["l02", "l03"]
-        # the r04 cohort is exhausted by the picks; leftovers list the
-        # r04-cohort lanes NOT refreshed (none here)
-        assert b["_VERIFY_LAST"] == []
-
-    def test_leftovers_name_the_next_due_cohort(self):
-        names = ["a", "b", "c", "d", "e"]
-        green = {"a": 3, "b": 4, "c": 4, "d": 4, "e": 5}
-        b = self._suggest(names, green, {}, cur=5, window=2)
-        assert b["freshness-due"] == ["a"]
-        assert b["refresh picks"] == ["b"]
-        # c, d (r04) hit the limit at r07 and MUST front that window
-        assert b["_VERIFY_LAST"] == ["c", "d"]
-
-    def test_slipped_lane_is_still_an_obligation(self):
-        # r10 review: a lane whose deadline already PASSED (green at
-        # cur-3 or older — an earlier cut missed it) must front the
-        # window as due, not hide in the refresh pool where the
-        # overflow guard can't see it
-        names = ["a", "b", "c"]
-        green = {"a": 2, "b": 3, "c": 4}  # cur=5: 'a' slipped, 'b' due
-        b = self._suggest(names, green, {}, cur=5, window=3)
-        assert b["freshness-due"] == ["a", "b"]
-        assert b["refresh picks"] == ["c"]
-
-    def test_overflow_is_loud(self):
-        import pytest as _pytest
-        names = [f"l{i}" for i in range(5)]
-        green = {n: 3 for n in names}  # all due at once
-        with _pytest.raises(SystemExit, match="exceed"):
-            self._suggest(names, green, {}, cur=5, window=3)
 
 
 def test_env_extra_conf_parses_semicolon_pairs(monkeypatch):

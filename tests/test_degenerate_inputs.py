@@ -70,7 +70,6 @@ _COLUMN_FNS = {
     "quality_score": T.quality_score,
     "gopher_flags": T.gopher_flags,
     "content_fingerprint": T.content_fingerprint,
-    "repetition_metrics": T.repetition_metrics,
     # encoding_quality returns a LIST of named columns
     "encoding_quality": lambda c: F.struct(*T.encoding_quality(c)),
     "rolling_hash": T.rolling_hash,
@@ -99,7 +98,7 @@ def _eval_docs(spark):
 _FRAME_CASES = {
     # text.py
     "tfidf_topk": lambda s, d: T.tfidf_topk(d, k=3),
-    "repetition_metrics_agg": lambda s, d: T.repetition_metrics_agg(d),
+    "repetition_metrics": lambda s, d: T.repetition_metrics(d),
     "unigram_logprob": lambda s, d: T.unigram_logprob(d),
     "bigram_logprob": lambda s, d: T.bigram_logprob(d),
     "dsir_importance": lambda s, d: T.dsir_importance(d, d.limit(3)),
@@ -268,7 +267,7 @@ _EMB_CASES = {
     "ivf_topk": lambda s, d: similarity.ivf_topk(
         d, _queries_frame(d), _cent(s), k=3, nprobe=2
     ),
-    "ivf_assign_pandas": lambda s, d: similarity.ivf_assign_pandas(
+    "ivf_assign": lambda s, d: similarity.ivf_assign(
         d, _cent(s), with_score=True
     ),
     "semdedup": lambda s, d: dedup.semdedup(d, _cent(s)),
@@ -285,9 +284,6 @@ _EMB_CASES = {
     ),
     "embedding_dim_stats": lambda s, d: similarity.embedding_dim_stats(d),
     "embedding_covariance": lambda s, d: similarity.embedding_covariance(d),
-    "embedding_covariance_pandas": lambda s, d: (
-        similarity.embedding_covariance_pandas(d)
-    ),
     "project_embeddings": lambda s, d: similarity.project_embeddings(
         d, [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
     ),
@@ -324,8 +320,8 @@ def test_kmeans_on_fully_degenerate_corpus_returns_empty(spark):
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == \
         ["centroid_id", "embedding"]
-    # ... and BOTH assignment twins must REFUSE the empty centroid
-    # frame loudly. The r07 SECOND review found the kmeans fix had
+    # ... and the assignment must REFUSE the empty centroid frame
+    # loudly. The r07 SECOND review found the kmeans fix had
     # moved the crash downstream (shape-(0,) norm / F.array(*[])
     # analysis error); the THIRD found the zero-row-output fix was
     # worse — it silently dropped 100% of a healthy corpus through
@@ -334,9 +330,8 @@ def test_kmeans_on_fully_degenerate_corpus_returns_empty(spark):
         [(10, [1.0, 0.0, 0.0, 0.0]), (11, [0.0, 1.0, 0.0, 0.0])],
         "vec_id long, embedding array<float>",
     )
-    for impl in (similarity.ivf_assign, similarity.ivf_assign_pandas):
-        with pytest.raises(ValueError, match="empty centroid frame"):
-            impl(healthy, out, with_score=True)
+    with pytest.raises(ValueError, match="empty centroid frame"):
+        similarity.ivf_assign(healthy, out, with_score=True)
     # the keep/drop consumer with a sound no-clusters semantics keeps
     # EVERYTHING (nothing is a within-cluster duplicate), with NULL
     # cluster metadata — never an empty (all-dropped) result

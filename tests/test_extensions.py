@@ -377,6 +377,8 @@ _ADV_ROWS = [
     (15, None),                       # NULL
     (16, [0.0, 0.0, 0.1, 5.0]),       # alone in centroid 2's cluster
     (17, [0.1, 0.0, 1.0, 0.99]),      # >= 0.6 to 16, other cluster
+    (18, [1.0, None, 0.0, 0.0]),      # NULL element: cosine 0.0
+    (19, [float("nan"), 1.0, 0.0, 0.0]),  # NaN element: cosine NaN
 ]
 _ADV_CENTS = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 0.0, 1.0, 0.0]),
               (2, [0.0, 0.0, 0.0, 1.0])]
@@ -401,22 +403,49 @@ def _frames(spark, emb):
     return [(emb, cent, 0.4), (adv, adv_cent, 0.6), (adv, adv_cent, 0.0015)]
 
 
-def _bits(x: float) -> int:
+def _bits(x: float | None) -> int | str | None:
+    """The bit pattern of a double; every NaN reads as one value (its
+    payload is not part of Spark's contract) and NULL stays None."""
+    import math
     import struct
 
+    if x is None or math.isnan(x):
+        return None if x is None else "NaN"
     return struct.unpack("<q", struct.pack("<d", x))[0]
 
 
-def test_ivf_pandas_assignment_matches_expr(spark, emb):
-    """The Arrow/numpy assignment equals the inlined-literal expression
-    form exactly: centroid id and the bits of the 4dp centroid cosine
-    (midpoints, ties to the lowest id, zero/ragged/empty rows at 0.0,
-    no -0.0), on the testdata sample and the adversarial frame."""
+def _with_batch_size(spark, n: int, fn):
+    """``fn()`` with Arrow batches of ``n`` records."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        return fn()
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_ivf_assign_matches_replay(spark, emb):
+    """ivf_assign equals the pure-Python replay exactly: centroid id and
+    the bits of the 4dp centroid cosine (midpoints, ties to the lowest
+    id, zero/ragged/empty rows and a NULL element at 0.0, a NaN element
+    at NaN, no -0.0), on the testdata sample and the adversarial frame,
+    also with 2-row Arrow batches."""
+    from oracle_utils import ivf_replay
+
     for corpus, cent, _ in _frames(spark, emb)[:2]:
-        def run(fn):
+        def run():
             return {r["vec_id"]: (r["centroid_id"], _bits(r["centroid_cos"]))
-                    for r in fn(corpus, cent, with_score=True).collect()}
-        assert run(similarity.ivf_assign_pandas) == run(similarity.ivf_assign)
+                    for r in similarity.ivf_assign(
+                        corpus, cent, with_score=True).collect()}
+        ref = ivf_replay(
+            [(r["vec_id"], r["embedding"]) for r in corpus.collect()],
+            [(r["centroid_id"], r["embedding"]) for r in cent.collect()],
+        )
+        want = {i: (c, _bits(s)) for i, (c, s) in ref.items()}
+        assert run() == want
+    assert want[18] == (0, _bits(0.0)) and want[19] == (0, "NaN")
+    assert _with_batch_size(spark, 2, run) == want
 
 
 # ---------------------------------------------------------------------------
@@ -557,23 +586,21 @@ def test_bigstar_isolated_and_multi_component(spark):
 # ---------------------------------------------------------------------------
 
 def test_repetition_agg_matches_array_form(spark, docs):
-    """The codegen (posexplode+lead+groupBy) twin must reproduce the
-    per-row array form exactly, including empty/null/short-doc edges."""
+    """The codegen (posexplode+lead+groupBy) operator must reproduce the
+    per-doc n-gram arrays of the pure-Python replay exactly, including
+    empty/null/short-doc edges."""
+    from oracle_utils import repetition_replay
+
     edge = spark.createDataFrame(
         [(9001, None), (9002, ""), (9003, "..!!.."), (9004, "one"),
          (9005, "a b"), (9006, "x x x x x")],
         "doc_id long, text string",
     )
     df = docs.select("doc_id", "text").unionByName(edge)
-    array_form = df.select(
-        "doc_id", text.repetition_metrics("text").alias("r")
-    ).select("doc_id", "r.dup_unigram_frac", "r.dup_bigram_frac",
-             "r.dup_trigram_frac")
-    agg_form = text.repetition_metrics_agg(df)
-    a = {r["doc_id"]: (r["dup_unigram_frac"], r["dup_bigram_frac"],
-                       r["dup_trigram_frac"]) for r in array_form.collect()}
+    a = {r["doc_id"]: repetition_replay(r["text"]) for r in df.collect()}
     b = {r["doc_id"]: (r["dup_unigram_frac"], r["dup_bigram_frac"],
-                       r["dup_trigram_frac"]) for r in agg_form.collect()}
+                       r["dup_trigram_frac"])
+         for r in text.repetition_metrics(df).collect()}
     assert a == b
     # sanity on the planted degenerate doc: all-repeat unigrams
     assert b[9006][0] == 0.8
@@ -678,12 +705,11 @@ def test_semdedup_keeps_farthest_from_centroid(spark):
     assert out[13]["is_kept"] and out[20]["is_kept"]
 
 
-def test_semdedup_pandas_assignment_matches_expr(spark, emb):
+def test_semdedup_matches_replay(spark, emb):
     """semdedup equals the pure-Python replay (left-fold cosine,
-    Decimal rounding, the keep rule) row for row: id, centroid id,
-    centroid_cos bits and is_kept; its assignment equals the expression
-    ivf_assign; and a cluster split across Arrow batches gives the
-    same rows."""
+    Decimal rounding, the keep rule in Spark's NaN ordering) row for
+    row: id, centroid id, centroid_cos bits and is_kept; and a cluster
+    split across Arrow batches gives the same rows."""
     from oracle_utils import semdedup_replay
 
     def run(corpus, cent, thr):
@@ -700,18 +726,10 @@ def test_semdedup_pandas_assignment_matches_expr(spark, emb):
             thr,
         )
         assert got == {i: (c, _bits(s), k) for i, (c, s, k) in ref.items()}
-        expr = {r["vec_id"]: (r["centroid_id"], _bits(r["centroid_cos"]))
-                for r in similarity.ivf_assign(
-                    corpus, cent, with_score=True).collect()}
-        assert {i: g[:2] for i, g in got.items()} == expr
+    # the NaN member ranks last and matches everything, so it is dropped
+    assert got[19] == (0, "NaN", False) and got[18][2]
     corpus, cent, thr = cases[-1]
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    before = spark.conf.get(key)
-    spark.conf.set(key, "2")
-    try:
-        assert run(corpus, cent, thr) == got
-    finally:
-        spark.conf.set(key, before)
+    assert _with_batch_size(spark, 2, lambda: run(corpus, cent, thr)) == got
 
 
 def test_incremental_embedding_neardup_membership(spark):
@@ -2280,13 +2298,14 @@ def test_collocation_pmi_degenerate_docs_contribute_nothing(spark):
 
 
 def test_embedding_covariance_twins_agree_exactly(spark, emb):
-    """The interpreted oracle lane and the numpy Gram production twin
-    must emit IDENTICAL rows — same rounding contract, summation-order
-    ulps absorbed by the 4 dp round."""
+    """The Gram-per-Arrow-batch covariance and its pure-Python replay
+    (Spark's sum/count(*) in row order) emit IDENTICAL rows — the 4 dp
+    round absorbs the summation-order ulps."""
+    from oracle_utils import covariance_replay
+
     a = {(r["i"], r["j"]): (r["n"], r["cov"])
          for r in similarity.embedding_covariance(emb).collect()}
-    b = {(r["i"], r["j"]): (r["n"], r["cov"])
-         for r in similarity.embedding_covariance_pandas(emb).collect()}
+    b = covariance_replay([r["embedding"] for r in emb.collect()])
     assert a == b
     # diagonal of the covariance matrix = per-dim population variance
     stats = {r["dim"]: r for r in
@@ -2306,13 +2325,9 @@ def test_embedding_covariance_degenerate_inputs(spark):
     rows = similarity.embedding_covariance(one).collect()
     assert len(rows) == 6
     assert all(r["cov"] == 0.0 for r in rows)
-    prows = similarity.embedding_covariance_pandas(one).collect()
-    assert sorted((r["i"], r["j"], r["cov"]) for r in prows) == \
-        sorted((r["i"], r["j"], r["cov"]) for r in rows)
 
     empty = one.filter(F.lit(False))
     assert similarity.embedding_covariance(empty).count() == 0
-    assert similarity.embedding_covariance_pandas(empty).count() == 0
 
     nulls = spark.createDataFrame(
         [(0, None)], "vec_id long, embedding array<float>")
@@ -2497,23 +2512,33 @@ def test_bloom_build_drops_null_keys(spark):
 
 
 def test_embedding_covariance_pandas_ragged_and_null_elements(spark):
-    """The production Gram twin must match the interpreted twin on
-    dirty input too: ragged dims (each row contributes its own i<=j
-    pairs) and NULL elements (skipped by sums, counted by n)."""
-    dirty = spark.createDataFrame(
-        [(0, [1.0, 2.0, 3.0]),
-         (1, [4.0, 5.0]),
-         (2, [1.0, None, 2.0]),
-         (3, [2.0, 1.0, 4.0])],
-        "vec_id long, embedding array<double>")
-    a = {(r["i"], r["j"]): (r["n"], r["cov"])
-         for r in similarity.embedding_covariance(dirty).collect()}
-    b = {(r["i"], r["j"]): (r["n"], r["cov"])
-         for r in similarity.embedding_covariance_pandas(dirty).collect()}
-    assert a == b
-    # dim (2,2) exists only for the three 3-dim rows
-    assert a[(2, 2)][0] == 3
-    assert a[(0, 0)][0] == 4
+    """The Gram covariance must match Spark's sum/count(*) semantics
+    (the pure-Python replay) on dirty input: ragged dims (each row
+    contributes its own i<=j pairs), NULL elements (skipped by sums,
+    counted by n; a cell with no non-NULL term is NULL) and a NaN
+    element (propagates into its cells)."""
+    from oracle_utils import covariance_replay
+
+    vecs = [[1.0, 2.0, 3.0], [4.0, 5.0], [1.0, None, 2.0],
+            [2.0, 1.0, 4.0], [2.0, 0.5, 1.0, None],
+            [float("nan"), 1.0, 0.5]]
+    dirty = spark.createDataFrame(list(enumerate(vecs)),
+                                  "vec_id long, embedding array<double>")
+
+    def cells(rows):
+        return {k: (n, _bits(c)) for k, (n, c) in rows.items()}
+
+    a = cells({(r["i"], r["j"]): (r["n"], r["cov"])
+               for r in similarity.embedding_covariance(dirty).collect()})
+    assert a == cells(covariance_replay(vecs))
+    # dim (2,2) exists only for the 3- and 4-dim rows
+    assert a[(2, 2)][0] == 5 and a[(0, 0)][0] == 6
+    assert a[(0, 0)][1] == "NaN" and a[(1, 2)][1] != "NaN"
+    assert a[(3, 3)] == (1, None)  # the one dim-3 element is NULL
+    assert _with_batch_size(
+        spark, 2, lambda: cells({
+            (r["i"], r["j"]): (r["n"], r["cov"])
+            for r in similarity.embedding_covariance(dirty).collect()})) == a
 
 
 def test_pca_components_recover_known_spectrum(spark):
@@ -2578,7 +2603,7 @@ def test_covariance_state_merges_across_runs(spark, emb, tmp_path):
         similarity.covariance_partial_state(
             spark.read.parquet(str(tmp_path / "run_a")).unionByName(
                 similarity.embedding_covariance_state(run_b))))
-    single = similarity.embedding_covariance_pandas(emb)
+    single = similarity.embedding_covariance(emb)
     a = {(r["i"], r["j"]): (r["n"], r["cov"]) for r in merged.collect()}
     b = {(r["i"], r["j"]): (r["n"], r["cov"]) for r in single.collect()}
     assert a == b
@@ -2613,7 +2638,7 @@ def test_covariance_three_run_chain_and_pca(spark, emb, tmp_path):
         similarity.covariance_partial_state(
             spark.read.parquet(str(tmp_path / "state_ab")).unionByName(
                 similarity.embedding_covariance_state(thirds[2]))))
-    single = similarity.embedding_covariance_pandas(emb)
+    single = similarity.embedding_covariance(emb)
     a = {(r["i"], r["j"]): (r["n"], r["cov"]) for r in chained.collect()}
     b = {(r["i"], r["j"]): (r["n"], r["cov"]) for r in single.collect()}
     assert a == b
@@ -2780,7 +2805,7 @@ def test_day2_pca_refresh_equals_scratch(spark, emb, tmp_path):
     refreshed = similarity.pca_components(
         similarity.covariance_finalize(merged).collect(), dim, k=4)
     scratch = similarity.pca_components(
-        similarity.embedding_covariance_pandas(emb).collect(), dim, k=4)
+        similarity.embedding_covariance(emb).collect(), dim, k=4)
     assert np.allclose(np.asarray(refreshed), np.asarray(scratch),
                        atol=1e-4)
 

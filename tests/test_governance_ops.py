@@ -91,10 +91,8 @@ def test_purge_skips_uncommitted_ledger_rows(spark, tables, tmp_path):
     # simulate the crash window: a ledger row appended inside
     # foreachBatch whose batch never committed (batch_id > frontier)
     now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-    p.copy_history.append(spark.createDataFrame(
-        [(victim, p.stage.url, p.trips_raw.path, 1, 0, now, frontier + 1)],
-        p.copy_history.schema,
-    ))
+    p.copy_history.write_rows(
+        [(victim, p.stage.url, p.trips_raw.path, 1, 0, now, frontier + 1)])
     # tamper the committed row for the same file out of the way: rebuild
     # the ledger with ONLY the uncommitted row for the victim file
     keep = p.copy_history.read().filter(
@@ -102,7 +100,7 @@ def test_purge_skips_uncommitted_ledger_rows(spark, tables, tmp_path):
     ).collect()
     p.copy_history.truncate()
     if keep:
-        p.copy_history.append(spark.createDataFrame(keep, p.copy_history.schema))
+        p.copy_history.write_rows(keep)
 
     purged = p.purge_files()
     remaining = {f.path for f in p.stage.list()}

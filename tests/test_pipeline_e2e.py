@@ -145,12 +145,13 @@ def test_record_failure_dropped_only_while_stopping():
 
 
 def test_concurrent_appends_to_one_table_are_safe(spark, tmp_path):
-    """The r11 staging-collision pin: concurrent append jobs into one
-    path share the committer's _temporary/0 staging dir, and one
-    commit's cleanup used to delete the other's in-flight attempt dir
-    (captured live from two task ticks appending task_history).
-    Table.append serializes per path; 12 appends from 4 threads must
-    all land."""
+    """The r11 staging-collision pin: concurrent Spark append jobs into
+    one path shared the committer's _temporary/0 staging dir, and one
+    commit's cleanup deleted the other's in-flight attempt dir
+    (captured live from two task ticks appending task_history). The
+    ledgers now append with Table.write_rows, which renames one
+    uniquely named file into place per call: 48 writes from 16 threads
+    must all land."""
     import concurrent.futures
 
     from pyspark.sql import types as T
@@ -160,14 +161,7 @@ def test_concurrent_appends_to_one_table_are_safe(spark, tmp_path):
     t = Table(spark, str(tmp_path / "ledger"), T.StructType([
         T.StructField("k", T.LongType()),
     ]))
-
-    def one(i):
-        t.append(spark.range(i, i + 1).select(F.col("id").alias("k")))
-
-    with concurrent.futures.ThreadPoolExecutor(max_workers=4) as ex:
-        list(ex.map(one, range(12)))
-    assert t.read().count() == 12
-    assert {r["k"] for r in t.read().collect()} == set(range(12))
+    t.write_rows([(i,) for i in range(12)])
 
     # the driver-side ledger writer (Table.write_rows) from more
     # threads than cores, with a short switch interval: every row lands

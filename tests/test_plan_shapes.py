@@ -112,12 +112,12 @@ def test_no_plan_goes_cartesian(spark, name):
 def test_semdedup_scores_pairs_per_cluster_group(spark):
     """SemDeDup is two Arrow stages around one shuffle on the cluster
     key: the narrow assignment, then one grouped numpy pass per cluster
-    (FlatMapGroupsInPandas). No pair join, no cached assignment, no
+    (FlatMapGroupsInArrow). No pair join, no cached assignment, no
     row-at-a-time Python UDF."""
     p = _plan(spark, "x_semdedup")
     assert p.count("hashpartitioning(") == 1
     assert "hashpartitioning(centroid_id" in p
-    assert "FlatMapGroupsInPandas" in p and "ArrowEvalPython" in p
+    assert "FlatMapGroupsInArrow" in p and "ArrowEvalPython" in p
     assert "Join" not in p and "BatchEvalPython" not in p
     # a test fixture may have cached the embeddings scan itself, which
     # then prints below the assignment; a cached assignment prints above
@@ -144,10 +144,10 @@ def test_dsir_scalar_totals_ride_a_broadcast(spark):
 
 
 def test_repetition_twin_single_doc_exchange(spark):
-    """The agg twin's window and groupBy share the doc key; the only
-    exchanges are the doc-key shuffle plus the Expand'd distinct-agg
-    re-shuffles — no nested loop anywhere."""
-    p = _plan(spark, "x_repetition_metrics_prod")
+    """repetition_metrics' window and groupBy share the doc key; the
+    only exchanges are the doc-key shuffle plus the Expand'd
+    distinct-agg re-shuffles — no nested loop anywhere."""
+    p = _plan(spark, "x_repetition_metrics")
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
     assert "Window" in p and "Expand" in p
@@ -290,8 +290,8 @@ def test_bpe_pair_counting_stays_in_hash_aggregate(spark):
 
 
 def test_cluster_quota_assignment_is_joinless(spark):
-    # ivf_assign inlines centroids as literals: the assignment must not
-    # plan a join (the cross-join + max_by alternative shuffles the
+    # ivf_assign holds the centroids driver-side: the assignment must
+    # not plan a join (the cross-join + max_by alternative shuffles the
     # corpus); the only joins allowed come from the quota phases
     p = _plan(spark, "x_cluster_quota")
     assert "CartesianProduct" not in p
@@ -515,11 +515,12 @@ def test_pmi_unigram_sides_broadcast_and_totals_one_row(spark):
 
 
 def test_embed_covariance_prod_is_arrow_plus_single_agg(spark):
-    """The production covariance twin must be mapInPandas (one Arrow
-    batch -> one Gram matrix) feeding a single hash agg over dim^2
-    groups — no join, no window, no per-element lambda forest."""
+    """The covariance lane (and its x_embed_covariance_prod alias) must
+    be mapInArrow (one Arrow batch -> one Gram matrix) feeding a single
+    hash agg over dim^2 groups — no join, no window, no per-element
+    lambda forest."""
     p = _plan(spark, "x_embed_covariance_prod")
-    assert "MapInPandas" in p or "ArrowEvalPython" in p
+    assert "MapInArrow" in p
     assert "HashAggregate" in p
     assert "Join" not in p
 

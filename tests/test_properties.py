@@ -207,22 +207,20 @@ def test_bigstar_components_match_union_find(spark, edges):
 )
 @_SLOW
 def test_repetition_agg_twin_matches_array_form(spark, texts):
-    """The shuffle-side repetition twin must equal the per-row array
-    form on arbitrary degenerate inputs (tiny alphabet forces heavy
-    n-gram repetition; '.'/' ' exercise tokenizer edges)."""
+    """The shuffle-side repetition operator must equal the per-doc
+    n-gram arrays of the pure-Python replay on arbitrary degenerate
+    inputs (tiny alphabet forces heavy n-gram repetition; '.'/' '
+    exercise tokenizer edges)."""
+    from oracle_utils import repetition_replay
     from snowflake_data_pipeline_demo_spark.operators import text as T
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     cols = ["dup_unigram_frac", "dup_bigram_frac", "dup_trigram_frac"]
-    a = {r["doc_id"]: tuple(r[c] for c in cols)
-         for r in df.select(
-             "doc_id", T.repetition_metrics("text").alias("r")
-         ).select("doc_id", *[f"r.{c}" for c in cols]).collect()}
     b = {r["doc_id"]: tuple(r[c] for c in cols)
-         for r in T.repetition_metrics_agg(df).collect()}
-    assert a == b
+         for r in T.repetition_metrics(df).collect()}
+    assert b == {i: repetition_replay(t) for i, t in enumerate(texts)}
 
 
 @given(

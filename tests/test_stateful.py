@@ -912,9 +912,10 @@ def test_streaming_profile_interoperates_with_batch_appends(
 
     # batch job appends its own shard rows directly
     hb = half_b.withColumn("n_chars", F.length("text").cast("long"))
-    hll.append(TX.token_hll_shard_sketches(hb, F.lit(99).cast("long")))
-    hist.append(TX.length_histogram_shard_sketches(
-        hb, F.lit(99).cast("long")))
+    for t, shard in ((hll, TX.token_hll_shard_sketches(hb, F.lit(99).cast("long"))),
+                     (hist, TX.length_histogram_shard_sketches(
+                         hb, F.lit(99).cast("long")))):
+        shard.select(*t.schema.fieldNames()).write.mode("append").parquet(t.path)
 
     after = {r["source"]: r["n_values"]
              for r in corpus_profile(hll, hist).collect()}

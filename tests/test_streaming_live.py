@@ -73,9 +73,8 @@ def test_live_pipe_and_tasks(spark, tables, tmp_path_factory):
     #    committer's `_temporary/0` staging dir and the first commit's
     #    cleanup deleted the second job's in-flight attempt dir
     #    (`chmod: cannot access ..._temporary/attempt_...`, captured
-    #    r11 in a green run — the failed batch replayed). Fixed first by
-    #    serializing Table.append per path (catalog._APPEND_LOCKS); the
-    #    ledger rows now bypass the committer entirely (Table.write_rows
+    #    r11 in a green run — the failed batch replayed). The ledger
+    #    rows now bypass the committer entirely (Table.write_rows
     #    renames one uniquely named file into place per row).
     # 4. The permission-shell variant of (1) INSIDE the engine — the
     #    purge AFTER hook's copy_history read raced the pipe's live

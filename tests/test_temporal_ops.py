@@ -362,8 +362,8 @@ def test_compact_partitioned_table(spark, tmp_path):
     ])
     t = Table(spark, str(tmp_path / "pt"), schema, partition_by=["day"])
     for i in range(4):  # 4 appends x 2 days -> >= 8 files
-        t.append(spark.createDataFrame(
-            [("d1", i), ("d2", i * 10)], schema).coalesce(1))
+        spark.createDataFrame([("d1", i), ("d2", i * 10)], schema).coalesce(1) \
+            .write.mode("append").partitionBy("day").parquet(t.path)
     before = sorted(map(tuple, t.read().collect()))
     assert len(t.data_files()) >= 8
     stats = t.compact(target_file_bytes=1 << 30)
