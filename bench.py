@@ -25,7 +25,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -55,7 +57,6 @@ HEADLINE = [
     "x_asof_join",
     "x_decontaminate",
     "x_chunk_tokens",
-    "x_sim_lsh_ann_prod",
     "x_tfidf_topk",
     "x_pack_sequences",
     "x_range_join",
@@ -122,7 +123,18 @@ HEADLINE = [
 
 
 def main() -> None:
+    """Runs the bench with its staged artifacts under one temp dir,
+    removed however the run ends."""
+    staging = tempfile.mkdtemp(prefix="bench_staging_")
+    try:
+        _bench(staging)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+
+
+def _bench(staging: str) -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from perfbench.trace import host_steal_s
     from snowflake_data_pipeline_demo_spark.caching import (
         release_lane_caches, release_stray_persistent_rdds,
     )
@@ -142,13 +154,11 @@ def main() -> None:
     # artifact once (untimed — it is the pipeline's cost, already
     # carried by x_dedup_pipeline_components) and bench only the
     # report-over-artifact path.
-    import tempfile
-
     from snowflake_data_pipeline_demo_spark.operators.dedup import (
         cluster_size_histogram,
     )
 
-    comp_path = tempfile.mkdtemp(prefix="bench_components_") + "/components"
+    comp_path = f"{staging}/components"
     QUERIES["x_dedup_pipeline_components"].builder(spark, SF_DIR).write.mode(
         "overwrite"
     ).parquet(comp_path)
@@ -180,7 +190,7 @@ def main() -> None:
         minhash_dedup_batch_fn,
     )
 
-    sm_tmp = tempfile.mkdtemp(prefix="bench_stream_minhash_")
+    sm_tmp = f"{staging}/stream_minhash"
     sm_clean = Table(spark, f"{sm_tmp}/clean", ST.StructType([
         ST.StructField("doc_id", ST.LongType()),
         ST.StructField("text", ST.StringType()),
@@ -223,7 +233,7 @@ def main() -> None:
         ngram_jaccard_pairs_probe,
     )
 
-    ci_tmp = tempfile.mkdtemp(prefix="bench_comp_inc_")
+    ci_tmp = f"{staging}/comp_inc"
     ci_docs = load(spark, SF_DIR, "documents").select("doc_id", "text")
     neardup_components(
         ci_docs.filter(F.col("doc_id") % 3 < 2), threshold=0.5
@@ -240,33 +250,11 @@ def main() -> None:
         )
     )
 
-    def _host_steal_sec() -> float | None:
-        """Cumulative hypervisor steal time (seconds) from the
-        aggregate cpu line of /proc/stat — field 8, in clock ticks.
-        The r09 round lost a day adjudicating a +19% cold total that
-        turned out to be bursty host steal (judge-corroborated: 4,102 s
-        cumulative over 6 h uptime); snapshotting steal around each
-        pass makes that call a mechanical read instead of five manual
-        reruns (r09 verdict ask #3). None on non-Linux hosts."""
-        try:
-            with open("/proc/stat") as f:
-                fields = f.readline().split()
-            return round(int(fields[8]) / os.sysconf("SC_CLK_TCK"), 1)
-        except Exception:
-            return None
-
-    def _host_uptime_sec() -> float | None:
-        try:
-            with open("/proc/uptime") as f:
-                return round(float(f.read().split()[0]), 1)
-        except Exception:
-            return None
-
     pass_steal: list[dict] = []
 
     def run_all() -> tuple[dict[str, float], float]:
         timings: dict[str, float] = {}
-        steal0 = _host_steal_sec()
+        steal0 = host_steal_s()
         t_all = time.time()
         builders = [(n, lambda n=n: QUERIES[n].builder(spark, SF_DIR))
                     for n in names] + list(extras.items())
@@ -301,12 +289,10 @@ def main() -> None:
         # in the pass fully executed above.
         release_stray_persistent_rdds(spark)
         wall = round(time.time() - t_all, 3)
-        steal1 = _host_steal_sec()
+        steal1 = host_steal_s()
         pass_steal.append({
             "wall_sec": wall,
-            "steal_sec": (round(steal1 - steal0, 1)
-                          if steal0 is not None and steal1 is not None
-                          else None),
+            "steal_sec": round(steal1 - steal0, 1),
         })
         return timings, wall
 
@@ -350,7 +336,7 @@ def main() -> None:
     sf_val = float(sf) if sf.replace(".", "").isdigit() else SF_DIR
     # r04 lesson: the driver keeps only the TAIL of stdout and parses the
     # last JSON line — the full two-map payload overflowed that buffer
-    # and the round's warm number was lost (BENCH_r04 parsed: null).
+    # and a run's warm number was lost (the parsed headline was null).
     # Emit (1) the full detail to a file, (2) cold detail as an EARLIER
     # stdout line (expendable if the tail truncates), and (3) LAST a
     # compact line: totals + warm per-query at 2dp, no whitespace.
@@ -392,11 +378,10 @@ def main() -> None:
         # cold pass, 1-3 the warm passes. steal_sec/wall_sec >~ 0.05
         # means the pass ran on a contended host and its wall numbers
         # carry environmental noise — read spreads before diffing
-        # rounds. host_steal_total/uptime give the session-wide rate.
+        # rounds. steal_total_sec is the host's cumulative steal.
         "host_steal": {
             "passes": pass_steal,
-            "steal_total_sec": _host_steal_sec(),
-            "uptime_sec": _host_uptime_sec(),
+            "steal_total_sec": round(host_steal_s(), 1),
         },
         "sf": sf_val,
     }

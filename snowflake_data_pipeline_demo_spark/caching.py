@@ -1,4 +1,4 @@
-"""Lane-scoped cache tracking.
+"""Lane-scoped cache and temp-dir tracking.
 
 Registry lanes cache materialization boundaries (the VARIANT parse
 boundary, LSH probe bases, winnow posting frames) because the lane's
@@ -14,6 +14,8 @@ next lane. Safe because every runner collects lane N's result before
 invoking lane N+1 — a tracked cache is never unpersisted while a
 not-yet-collected plan still needs it. Long-lived caches (streaming
 foreachBatch scratch that unpersists itself in-loop) stay untracked.
+Stateful lanes write their scratch tables under :func:`lane_tmpdir`,
+which the same release deletes.
 
 Long-lived sessions that call lane_cache'd operators OUTSIDE the
 registry (the incremental run-book scripts, ad-hoc batch loops) must
@@ -24,11 +26,14 @@ cache until drained. demo_incremental / the scale scripts do.
 """
 from __future__ import annotations
 
+import shutil
+import tempfile
 import threading
 
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
+_TMP_DIRS: list[str] = []
 # The drain-before-next-lane convention assumes sequential lane
 # execution; the lock doesn't make concurrent lanes CORRECT (lane A's
 # drain would still unpersist lane B's in-flight cache — a silent
@@ -44,6 +49,15 @@ def lane_cache(df: DataFrame) -> DataFrame:
     with _LOCK:
         _TRACKED.append(df)
     return df
+
+
+def lane_tmpdir(prefix: str) -> str:
+    """``tempfile.mkdtemp(prefix=prefix)``, deleted by the next
+    :func:`release_lane_caches` (so it must outlive only its own lane)."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    with _LOCK:
+        _TMP_DIRS.append(path)
+    return path
 
 
 def release_stray_persistent_rdds(spark) -> int:
@@ -73,9 +87,10 @@ def release_stray_persistent_rdds(spark) -> int:
 
 def release_lane_caches() -> int:
     """Unpersist every tracked cache (blocking=False: executors free
-    the blocks asynchronously; the JVM-side bookkeeping is immediate).
-    Returns the number released — bench.py reports it so cached-RDD
-    growth across a full sweep is observable, not assumed."""
+    the blocks asynchronously; the JVM-side bookkeeping is immediate),
+    then delete every :func:`lane_tmpdir`. Returns the number of caches
+    released — bench.py reports it so cached-RDD growth across a full
+    sweep is observable, not assumed."""
     n = 0
     while True:
         with _LOCK:
@@ -96,6 +111,11 @@ def release_lane_caches() -> int:
             # failures (r07 ADVICE).
             if not _owning_context_stopped(df):
                 raise
+    with _LOCK:
+        dirs = _TMP_DIRS[:]
+        _TMP_DIRS.clear()
+    for path in dirs:
+        shutil.rmtree(path, ignore_errors=True)
     return n
 
 

@@ -37,8 +37,7 @@ def curation_funnel(corpus: DataFrame, eval_docs: DataFrame,
     upstream stage per count (the old id-set checkpoint boundaries
     bounded the recompute but still paid four corpus passes and three
     eager-ish checkpoints). Measured at sf0.1: warm median
-    2.79 -> 1.99 s, min 2.68 -> 1.77 s (calm host),
-    plans/r12/x_curation_funnel_{before,after}.txt. drop_reasons
+    2.79 -> 1.99 s, min 2.68 -> 1.77 s (calm host). drop_reasons
     (below) has always had this shape; the funnel now shares it. The
     staged form remains exactly what a restartable warehouse run
     persists (stage tables) — that is a checkpointing choice the
@@ -130,8 +129,9 @@ def drop_reasons(corpus: DataFrame, eval_docs: DataFrame,
     min-id-per-content keeper policy as :func:`curation_funnel` and
     ``exact_dedup_clusters`` (the window's min is that operator's agg,
     re-attached without the separate fingerprint re-scan + content-key
-    join the old staged form paid: Scan 6 -> 3, joins 4 -> 1 + window —
-    plans/r12/x_drop_reasons_*.txt). Null-fp docs (null text) keep the
+    join the old staged form paid: the formatted plan went from 6 scans
+    and 4 joins to 3 scans, 1 join and the window). Null-fp docs (null
+    text) keep the
     old inner-join-on-fp semantics — excluded from the audit — via an
     explicit filter. The contamination verdict LEFT-joins the positive
     id set (:func:`~.decontam.contaminated_ids` — broadcast eval

@@ -481,9 +481,8 @@ def dup_ngram_coverage(df: DataFrame, text_col: str = "text",
     re-derived per consumer — two Window+Generate subtrees in the plan
     — and the dup-gram join carried every OCCURRENCE row; now the
     stitch runs once and the join carries distinct (doc, gram) rows:
-    Window 2 -> 1, Generate 2 -> 1, warm median 1.85 -> 1.43 s at
-    sf0.1 on a calm host,
-    plans/r12/x_dup_ngram_coverage_{before,after}.txt). The cross-doc
+    Window 2 -> 1, Generate 2 -> 1 in the formatted plan, warm median
+    1.85 -> 1.43 s at sf0.1 on a calm host). The cross-doc
     dup flag is one (gram) hash-agg — grams, never text, move — and
     the per-doc reduce is a doc-key agg over the same boundary. At
     warehouse scale the boundary is a staged gram table, like

@@ -10,14 +10,15 @@ Two paths, same contract:
   candidates. At 100 TB the bucket join replaces the full cross
   product — the cross-product side never materializes.
 
-:func:`ivf_assign` (nearest centroid) and :func:`embedding_covariance`
-each have one arm, an Arrow batch through numpy, gated by the same
-DuckDB oracle as the JVM expressions they reproduce bit for bit
-(:func:`cosine` rounded to 4 dp; Spark's ``sum``/``count(*)``).
+:func:`ivf_assign` (nearest centroid), :func:`lsh_signer` (the LSH
+buckets) and :func:`embedding_covariance` each have one arm, an Arrow
+batch through numpy, gated by the same DuckDB oracle as the JVM
+expressions they reproduce bit for bit (:func:`cosine` rounded to 4 dp;
+a left-fold projection's sign; Spark's ``sum``/``count(*)``).
 
-Hyperplanes are pseudo-random +/-1 vectors derived from md5(plane:dim),
-so signatures are deterministic and reproducible in the DuckDB oracle
-(no RNG state, no JVM-only hashing).
+Hyperplanes are pseudo-random +/-1 vectors derived from
+md5(plane:element), so signatures are deterministic and reproducible in
+the DuckDB oracle (no RNG state, no JVM-only hashing).
 
 Measured dead end (do not retry): unrolling the dot products into
 explicit GetArrayItem multiply-add chains (dim=64 terms) to escape the
@@ -30,12 +31,12 @@ the fastest JVM-side shape at embedding dims.
 
 from __future__ import annotations
 
+import functools
 import math
 from decimal import ROUND_HALF_UP, Decimal
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd  # module-level: pandas_udf type hints resolve here
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
@@ -117,13 +118,12 @@ def cosine_topk(
 
 
 def _plane_signs(p: int, dim: int) -> list[float]:
-    """The +/-1 hyperplane h_p: element d = +1 if the top bit of the
-    first hex digit of md5(p||':'||d) is set else -1. Computed
-    driver-side with hashlib — md5 over the same ASCII bytes is
-    bit-identical to both Spark's and DuckDB's md5, so the signatures
-    stay deterministic and oracle-reproducible while the per-row plan
-    never hashes anything (the hyperplanes are planes x dims literals,
-    broadcast with the plan)."""
+    """The first ``dim`` elements of the +/-1 hyperplane h_p: element d
+    is +1 if the top bit of the first hex digit of md5(p||':'||d) is set
+    else -1. Element d does not depend on ``dim``, so every prefix of a
+    plane is the plane of a shorter vector, and md5 over the same ASCII
+    bytes is bit-identical in hashlib and DuckDB, so the oracle rebuilds
+    the same planes."""
     import hashlib
 
     return [
@@ -133,71 +133,59 @@ def _plane_signs(p: int, dim: int) -> list[float]:
     ]
 
 
-def hyperplane_signature(vec: Column, dim: int, planes: int = 8,
-                         offset: int = 0) -> Column:
-    """P-bit signature: bit p = sign of <v, h_p> (hyperplanes from
-    :func:`_plane_signs`). ``offset`` shifts the plane indices so
-    independent tables (see :func:`lsh_ann_topk` ``tables``) draw
-    disjoint hyperplanes. The dot product folds left-to-right exactly
-    like the oracle's list_reduce, so float sums agree bitwise."""
-    bits = []
-    for p in range(offset, offset + planes):
-        h = F.array(*[F.lit(s) for s in _plane_signs(p, dim)])
-        proj = F.aggregate(
-            F.zip_with(vec, h, lambda v, s: v.cast("double") * s),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
+@functools.lru_cache(maxsize=64)
+def _planes(n: int, dim: int) -> np.ndarray:
+    """The ``(dim, n)`` matrix of hyperplanes 0..n-1 (read-only)."""
+    H = np.asarray([_plane_signs(p, dim) for p in range(n)], dtype=np.float64).T
+    H.flags.writeable = False
+    return H
 
 
-def lsh_signatures(vec: Column, dim: int, planes: int = 8,
-                   tables: int = 1) -> Column:
-    """Array of ``tables`` independent P-bit signatures (disjoint
-    hyperplane sets)."""
-    return F.array(
-        *[hyperplane_signature(vec, dim, planes, offset=t * planes)
-          for t in range(tables)]
-    )
+def _signature_bits(v: _Vectors, n: int) -> np.ndarray:
+    """The ``(rows, n)`` sign bits ``<v, h_p> >= 0`` for hyperplanes
+    0..n-1, each projection folded as Spark's ``aggregate`` folds it:
+    left to right from 0.0 over the row's own elements (the zero padding
+    adds nothing). BLAS computes all projections, and only those within
+    its rounding bound of 0 or not finite are re-folded in that order.
+    NaN sorts above 0 in Spark, so it gives bit 1; a NULL element makes
+    every projection NULL, so its row is all 0."""
+    w = v.X.shape[1]
+    H = _planes(n, w)
+    with np.errstate(invalid="ignore", over="ignore"):  # inf and NaN rows
+        P = v.X @ H
+        S = np.abs(v.X).sum(axis=1)
+        # both sums sit within w*eps*S of the exact one; a huge S may overflow
+        bound = np.where(S < 1e300, 4 * w * np.finfo(np.float64).eps * S, np.inf)
+        i, j = np.nonzero(~(np.abs(P) > bound[:, None]))
+        P[i, j] = _fold(v.X[i], H.T[j])
+    bits = (P >= 0) | np.isnan(P)
+    bits[v.void] = False
+    return bits
 
 
-def lsh_signatures_pandas(dim: int, planes: int = 8, tables: int = 1):
-    """PRODUCTION twin of :func:`lsh_signatures`: one Arrow-batched
-    pandas UDF computing all ``tables*planes`` projections as a single
-    numpy matmul (batch × dim) @ (dim × planes*tables), then packing
-    sign bits to the same array-of-bitstring layout.
+def lsh_signer(planes: int = 8, tables: int = 1):
+    """An Arrow-batched UDF mapping a vector column to ``array<string>``:
+    ``tables`` signatures of ``planes`` bits each, table t from the
+    disjoint hyperplanes ``t*planes .. t*planes+planes-1`` of
+    :func:`_plane_signs`. Each row projects on its own length (ragged
+    and empty rows are fine); a NULL row signs to NULL."""
+    from pyspark.sql.functions import arrow_udf
 
-    Same hyperplane family (md5-derived ±1 literals) — but float
-    SUMMATION ORDER differs from the left-fold HOF, so a projection
-    sitting within rounding error of 0 can flip a bit vs the oracle
-    variant; that is why this path is rows-only checked, like the
-    xxhash64 MinHash twin. Measured: replaces ``tables*planes``
-    interpreted HOF folds per row with one BLAS call per Arrow batch.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
+    n = planes * tables
 
-    H = np.asarray(
-        [_plane_signs(p, dim) for p in range(planes * tables)], dtype=np.float64
-    ).T  # (dim, planes*tables)
+    @arrow_udf("array<string>")
+    def sign(vecs: pa.Array) -> pa.Array:
+        bits = _signature_bits(_Vectors.of(vecs), n)
+        chars = np.where(bits, ord("1"), ord("0")).astype(np.uint8)
+        m = len(bits) * tables
+        strings = pa.StringArray.from_buffers(
+            m, pa.py_buffer(np.arange(0, m * planes + 1, planes, dtype=np.int32)),
+            pa.py_buffer(chars))
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(0, m + 1, tables, dtype=np.int32)), strings,
+            mask=vecs.is_null())
 
-    @pandas_udf("array<string>")
-    def sigs(vecs: pd.Series) -> pd.Series:
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        if len(X) == 0:
-            return pd.Series([], dtype=object)
-        bits = (X @ H) >= 0  # (batch, planes*tables)
-        out = []
-        for row in bits:
-            out.append([
-                "".join("1" if b else "0"
-                        for b in row[t * planes:(t + 1) * planes])
-                for t in range(tables)
-            ])
-        return pd.Series(out)
-
-    return sigs
+    return sign
 
 
 def _require_centroids(rows, caller: str) -> None:
@@ -468,7 +456,6 @@ def lsh_ann_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    signature_impl: str = "hof",
 ) -> DataFrame:
     """Approximate top-k: exact re-rank restricted to candidates sharing
     a bucket in at least one of ``tables`` hash tables (OR
@@ -476,21 +463,9 @@ def lsh_ann_topk(
     bigger buckets; more ``tables`` -> more chances to collide. At scale
     the (table, bucket) equi-join is a shuffle on a key that fans each
     vector out ``tables`` times — still linear, never the cross product.
-
-    ``signature_impl``: ``hof`` = oracle-portable left-fold expressions;
-    ``pandas`` = the production Arrow/numpy batch path
-    (:func:`lsh_signatures_pandas` — same hyperplanes, rows-only
-    checked)."""
-    # one tiny driver action to learn the embedding dim (dims are fixed
-    # per table; the hyperplane literals need it at plan build)
-    dim = corpus.select(F.size(F.col(vec_col)).alias("d")).first()["d"]
-    if signature_impl == "pandas":
-        udf = lsh_signatures_pandas(dim, planes, tables)
-        def sig(col): return udf(col)  # noqa: E306
-    elif signature_impl == "hof":
-        def sig(col): return lsh_signatures(col, dim, planes, tables)  # noqa: E306
-    else:
-        raise ValueError(f"unknown signature_impl: {signature_impl}")
+    Buckets come from :func:`lsh_signer`; building the plan runs no
+    Spark job."""
+    sig = lsh_signer(planes, tables)
     c = _nonnull(corpus, vec_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),

@@ -183,8 +183,7 @@ def tfidf_topk(df, text_col: str = "text", id_col: str = "doc_id",
     token-stream DF agg re-ran a corpus-wide partial-DISTINCT whose
     expanded (token, doc) state the TF frame already is; deriving DF
     from TF drops that second distinct pass. Wall-neutral at sf0.1
-    (warm median 1.34 -> 1.26 s, inside the lane's spread —
-    plans/r12/x_tfidf_topk_{before,after}.txt; a lane_cache boundary
+    (warm median 1.34 -> 1.26 s, inside the lane's spread; a lane_cache boundary
     on TF was also measured and stayed neutral, so TF is left lazy and
     the remaining duplicate scan is the documented price of the one
     lazy plan). The TF⋈DF join

@@ -24,7 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import lane_cache, release_lane_caches
+from ..caching import lane_cache, lane_tmpdir, release_lane_caches
 from ..operators.merge import merge_result
 from ..sources import testdata
 from .citibike import (
@@ -793,11 +793,9 @@ def f13_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _tmp_stage(spark: SparkSession, tag: str):
-    import tempfile
-
     from ..sources.stage import Stage
 
-    return Stage(spark, tempfile.mkdtemp(prefix=f"{tag}_stage_"))
+    return Stage(spark, lane_tmpdir(f"{tag}_stage_"))
 
 
 @query(

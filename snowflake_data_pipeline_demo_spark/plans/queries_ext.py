@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import lane_tmpdir
 from ..operators import (
     chunking, decontam, dedup, joins, multimodal, sampling, similarity, text,
 )
@@ -162,22 +163,30 @@ def x_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.exact_dedup_clusters(d)
 
 
-_MINHASH_SIG_SQL = f"""
+#: dedup.minhash_signatures' md5 family: seed ``h``, shingle ``x``
+_MD5_MINHASH = "CAST(concat('0x', substr(md5(CAST(h AS VARCHAR) || ':' || x), 1, 15)) AS BIGINT)"
+
+
+def _minhash_sig_sql(hash_sql: str = _MD5_MINHASH) -> str:
+    """DuckDB CTEs ending in ``sig(doc_id, sig)``: 16 MinHash seeds over
+    each doc's word 3-shingles, ``hash_sql`` hashing seed ``h`` (BIGINT)
+    and shingle ``x`` (VARCHAR)."""
+    return f"""
     WITH toks AS (SELECT doc_id, {_DTOKS} AS t FROM documents),
     sh AS (SELECT doc_id, {_DSHING} AS s FROM toks),
     sig AS (
       SELECT doc_id,
-             [list_min([CAST(concat('0x', substr(md5(CAST(h AS VARCHAR) || ':' || x), 1, 15)) AS BIGINT)
-               for x in s])
+             [list_min([{hash_sql} for x in s])
               for h in range(0, 16)] AS sig
       FROM sh
     )
 """
 
 
-@query(
-    "x_dedup_minhash_lsh",
-    oracle=_MINHASH_SIG_SQL + """
+def _minhash_lsh_oracle(hash_sql: str = _MD5_MINHASH) -> str:
+    """MinHash(16) + LSH(4 bands x 4 rows) candidate pairs with their
+    signature-estimated Jaccard, signatures by ``hash_sql``."""
+    return _minhash_sig_sql(hash_sql) + """
     , banded AS (
       SELECT doc_id, bnd,
              md5(array_to_string(sig[CAST(bnd*4+1 AS INT):CAST(bnd*4+4 AS INT)], ',')) AS key
@@ -193,7 +202,12 @@ _MINHASH_SIG_SQL = f"""
     FROM pairs p
     JOIN sig sa ON sa.doc_id = p.id_a
     JOIN sig sb ON sb.doc_id = p.id_b
-    """,
+    """
+
+
+@query(
+    "x_dedup_minhash_lsh",
+    oracle=_minhash_lsh_oracle(),
     survey_ref="north-star:dedup-minhash-lsh",
 )
 def x_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -301,10 +315,13 @@ def x_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_topk(e, q, k=5)
 
 
-@query(
-    "x_sim_lsh_ann",
-    oracle=f"""
-    WITH sigd AS (
+def _lsh_sig_sql(planes: int, tables: int) -> str:
+    """DuckDB rows ``(vec_id, embedding, t, bucket)``: table ``t``'s
+    signature of each ``embeddings`` row, as ``similarity.lsh_signer``
+    defines it. Each projection folds left to right from 0.0 over the
+    row's own elements; a NULL element makes it NULL (bit 0), and DuckDB,
+    like Spark, orders NaN above 0 (bit 1)."""
+    return f"""
       SELECT vec_id, embedding, t,
         array_to_string([CASE WHEN list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
           [CAST(embedding[CAST(i AS INT)] AS DOUBLE)
@@ -313,9 +330,12 @@ def x_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN 1.0 ELSE -1.0 END)
            for i in range(1, len(embedding)+1)]),
           (a,b) -> a+b) >= 0 THEN '1' ELSE '0' END
-           for p in range(CAST(t*8 AS INT), CAST(t*8+8 AS INT))], '') AS bucket
-      FROM embeddings, range(0, 2) r(t)
-    ),
+           for p in range(CAST(t*{planes} AS INT), CAST(t*{planes}+{planes} AS INT))], '') AS bucket
+      FROM embeddings, range(0, {tables}) r(t)"""
+
+
+_LSH_ANN_ORACLE = f"""
+    WITH sigd AS ({_lsh_sig_sql(8, 2)}),
     q AS (SELECT vec_id AS query_id, t, bucket FROM sigd WHERE vec_id < 10),
     c AS (SELECT vec_id AS neighbor_id, t, bucket FROM sigd),
     cand AS (
@@ -336,9 +356,14 @@ def x_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM scored
     )
     SELECT query_id, rank, neighbor_id, cos FROM ranked WHERE rank <= 5
-    """,
-    survey_ref="north-star:similarity-lsh-ann",
-)
+    """
+
+
+# x_sim_lsh_ann_prod: the former numpy-matmul arm, now the lane itself
+@query("x_sim_lsh_ann_prod", oracle=_LSH_ANN_ORACLE,
+       survey_ref="north-star:similarity-lsh-ann-production")
+@query("x_sim_lsh_ann", oracle=_LSH_ANN_ORACLE,
+       survey_ref="north-star:similarity-lsh-ann")
 def x_sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate top-5 (2 tables x 8 hyperplanes,
     OR-amplified)."""
@@ -793,8 +818,9 @@ def x_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_dedup_minhash_xxhash",
-    # xxhash64 has no DuckDB twin — rows-only check; the md5 variant
-    # above is the oracle-gated correctness gate for the same pipeline
+    # DuckDB has no xxhash64, so the oracle comparison is rows-only;
+    # tests/test_oracle_parity.py::test_minhash_xxhash_lane_matches_its_xxhash64_replay
+    # gates the lane against a pure-Python xxhash64 run inside DuckDB
     oracle=None,
     survey_ref="north-star:dedup-minhash-production",
 )
@@ -1091,27 +1117,6 @@ def x_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "x_sim_lsh_ann_prod",
-    # float summation order in the numpy matmul differs from the
-    # left-fold oracle expression, so near-zero projections can flip a
-    # bucket bit — rows-only check; x_sim_lsh_ann is the oracle-gated
-    # twin of the same pipeline
-    oracle=None,
-    survey_ref="north-star:similarity-lsh-ann-production",
-)
-def x_sim_lsh_ann_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION LSH ANN path: signatures via one Arrow-batched
-    numpy matmul per batch (lsh_signatures_pandas) instead of 16
-    interpreted HOF folds per row; identical bucketing/re-rank plan."""
-    e = testdata.load(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return similarity.lsh_ann_topk(e, q, k=5, planes=8, tables=2,
-                                   signature_impl="pandas")
-
-
-@query(
     "x_tfidf_topk",
     oracle=f"""
     WITH tok AS (
@@ -1336,7 +1341,7 @@ def x_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_dedup_minhash_incremental",
-    oracle=_MINHASH_SIG_SQL + """
+    oracle=_minhash_sig_sql() + """
     , banded AS (
       SELECT doc_id, bnd,
              md5(array_to_string(sig[CAST(bnd*4+1 AS INT):CAST(bnd*4+4 AS INT)], ',')) AS key
@@ -1639,7 +1644,7 @@ def x_embed_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_dedup_pipeline_components",
-    oracle=_MINHASH_SIG_SQL.replace("WITH toks", "WITH RECURSIVE toks") + """
+    oracle=_minhash_sig_sql().replace("WITH toks", "WITH RECURSIVE toks") + """
     , banded AS (
       SELECT doc_id, bnd,
              md5(array_to_string(sig[CAST(bnd*4+1 AS INT):CAST(bnd*4+4 AS INT)], ',')) AS key
@@ -1785,7 +1790,7 @@ def x_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_split_leakage",
-    oracle=_MINHASH_SIG_SQL + """
+    oracle=_minhash_sig_sql() + """
     , banded AS (
       SELECT doc_id, bnd,
              md5(array_to_string(sig[CAST(bnd*4+1 AS INT):CAST(bnd*4+4 AS INT)], ',')) AS key
@@ -1857,7 +1862,7 @@ def x_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_dedup_keep_longest",
-    oracle=_MINHASH_SIG_SQL.replace("WITH toks", "WITH RECURSIVE toks") + """
+    oracle=_minhash_sig_sql().replace("WITH toks", "WITH RECURSIVE toks") + """
     , banded AS (
       SELECT doc_id, bnd,
              md5(array_to_string(sig[CAST(bnd*4+1 AS INT):CAST(bnd*4+4 AS INT)], ',')) AS key
@@ -2408,8 +2413,9 @@ def x_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Registry lane serializes the array<long> ``ids`` to a ','-joined
     string: the driver's canonicalizer sorts raw pandas object columns
-    and cannot hash Python lists (CORRECTNESS_r04: TypeError unhashable
-    type 'list'). The operator itself still returns the array."""
+    and cannot hash Python lists (an array column fails it with
+    ``TypeError: unhashable type: 'list'``). The operator itself still
+    returns the array."""
     d = testdata.load(spark, sf_dir, "documents")
     out = text.tokens_to_ids(d, vocab_size=1000)
     return out.withColumn(
@@ -2586,7 +2592,8 @@ def x_pack_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Registry lane serializes the array<long> ``boundaries`` to a
     ','-joined string so the driver's canonicalizer can hash it
-    (CORRECTNESS_r04: TypeError unhashable type 'list'); the operator
+    (an array column fails it with ``TypeError: unhashable type:
+    'list'``); the operator
     itself still returns the array."""
     from ..operators import packing
 
@@ -3066,12 +3073,10 @@ def x_shard_manifest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     gapped shard dirs, text bytes intact. Promoted from a unit test
     (r05 verdict ask #8) so the driver grades the written artifact,
     not just the assignment frame."""
-    import tempfile
-
     from ..operators import packing
 
     d = testdata.load(spark, sf_dir, "documents")
-    path = tempfile.mkdtemp(prefix="shard_audit_") + "/shards"
+    path = lane_tmpdir("shard_audit_") + "/shards"
     packing.write_token_balanced_shards(d, path, budget=4096)
     back = spark.read.parquet(path)
     return (
@@ -3116,8 +3121,6 @@ def x_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     all three artifacts); the lane only adds count() actions per
     batch. Decisions are identical to the re-banding mode
     (tests/test_stateful.py pins the equivalence)."""
-    import tempfile
-
     from pyspark.sql import types as T
 
     from ..sources.catalog import Table
@@ -3136,7 +3139,7 @@ def x_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("band", T.IntegerType()),
         T.StructField("key", T.StringType()),
     ])
-    tmp = tempfile.mkdtemp(prefix="stream_minhash_")
+    tmp = lane_tmpdir("stream_minhash_")
     clean = Table(spark, f"{tmp}/clean", doc_schema)
     sigs = Table(spark, f"{tmp}/sigs", sig_schema)
     bands = Table(spark, f"{tmp}/bands", band_schema)
@@ -3207,14 +3210,12 @@ def x_hll_cross_run_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the entire point of sketch-based reports: each
     ingest run pays O(its own shard) and the corpus-wide report is a
     union over all runs' persisted sketches."""
-    import tempfile
-
     d = testdata.load(spark, sf_dir, "documents")
     run_a = d.filter(F.col("doc_id") % 2 == 0)
     run_b = d.filter(F.col("doc_id") % 2 == 1)
     shard = (F.col("doc_id") % 4).cast("long")
 
-    tmp = tempfile.mkdtemp(prefix="hll_runs_")
+    tmp = lane_tmpdir("hll_runs_")
     text.token_hll_shard_sketches(run_a, shard).write.mode(
         "overwrite"
     ).parquet(f"{tmp}/run_a_sketches")
@@ -3324,7 +3325,7 @@ def x_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_dedup_threshold_sweep",
-    oracle=_MINHASH_SIG_SQL + """
+    oracle=_minhash_sig_sql() + """
     , banded AS (
       SELECT doc_id, bnd,
              md5(array_to_string(sig[CAST(bnd*4+1 AS INT):CAST(bnd*4+4 AS INT)], ',')) AS key
@@ -3705,8 +3706,6 @@ def x_bloom_cross_run_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     target FPR — see bloom_shard_blocks' honest scale accounting), a
     broadcast join-free probe while m stays low-gigabytes, and
     merge-by-bit_or across ingest runs forever."""
-    import tempfile
-
     d = testdata.load(spark, sf_dir, "documents")
     keyed = d.select(
         "doc_id", "source", text.content_fingerprint("text").alias("fp")
@@ -3714,7 +3713,7 @@ def x_bloom_cross_run_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_a = keyed.filter(F.col("doc_id") % 3 == 0)
     run_b = keyed.filter(F.col("doc_id") % 3 == 1)
 
-    tmp = tempfile.mkdtemp(prefix="bloom_runs_")
+    tmp = lane_tmpdir("bloom_runs_")
     dedup.bloom_shard_blocks(
         run_a, "fp", m_bits=_BLOOM_M, k=_BLOOM_K
     ).write.mode("overwrite").parquet(f"{tmp}/run_a_blocks")
@@ -3807,8 +3806,6 @@ def x_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: frequency answers for ANY later candidate set at
     O(depth*width) state per run, merged by counter addition forever —
     the frequency twin of the HLL distinct-count lane."""
-    import tempfile
-
     d = testdata.load(spark, sf_dir, "documents")
     toks = d.select(F.explode(text.tokens("text")).alias("tok"))
     exact = (
@@ -3818,7 +3815,7 @@ def x_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
     )
 
-    tmp = tempfile.mkdtemp(prefix="cms_runs_")
+    tmp = lane_tmpdir("cms_runs_")
     shard = (F.col("doc_id") % 4).cast("long")
     text.token_cms_shard_sketches(
         d.filter(F.col("doc_id") % 2 == 0), shard,
@@ -4119,15 +4116,13 @@ def x_stream_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     envelope boolean, the x_hll_cross_run_merge pattern. This is the
     lane that proves the CONTINUOUS ingest keeps the same state the
     batch sketch operators persist."""
-    import tempfile
-
     from pyspark.sql import types as T
 
     from ..sources.catalog import Table
     from ..streaming.profile import corpus_profile, profile_batch_fn
 
     d = testdata.load(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="stream_profile_")
+    tmp = lane_tmpdir("stream_profile_")
     hll = Table(spark, f"{tmp}/hll", T.StructType([
         T.StructField("source", T.StringType()),
         T.StructField("shard", T.LongType()),
@@ -4304,13 +4299,11 @@ def x_dedup_components_incremental(spark: SparkSession,
     never re-read. The oracle is the full-recompute fixpoint, so the
     hash gate IS the equivalence proof: contracting each old component
     to a star preserves connectivity and min-id labels."""
-    import tempfile
-
     d = testdata.load(spark, sf_dir, "documents")
     hist = d.filter(F.col("doc_id") % 3 < 2)
     batch = d.filter(F.col("doc_id") % 3 == 2)
 
-    tmp = tempfile.mkdtemp(prefix="comp_state_")
+    tmp = lane_tmpdir("comp_state_")
     dedup.neardup_components(hist, threshold=0.5).write.mode(
         "overwrite"
     ).parquet(f"{tmp}/components")

@@ -41,8 +41,8 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
             df[c] = s.dt.strftime("%Y-%m-%d %H:%M:%S.%f")
         elif s.dtype == object:
             # The DRIVER's canonicalizer sorts raw object columns and
-            # crashes on unhashable values (lists/dicts/ndarrays) —
-            # CORRECTNESS_r04 x_token_ids/x_pack_boundaries. Mirror that
+            # crashes on unhashable values (lists/dicts/ndarrays), as
+            # array-valued x_token_ids/x_pack_boundaries once did. Mirror that
             # strictness here instead of silently str-mapping, so a
             # registry query that would fail the driver fails locally.
             bad = s.map(lambda v: isinstance(v, (list, dict, set))
@@ -57,11 +57,14 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns), ignore_index=True)
 
 
-def compare(spark_df, oracle_sql: str, sf_dir: str) -> list[str]:
-    """Returns a list of mismatch descriptions (empty = match)."""
+def compare(spark_df, oracle_sql: str, sf_dir: str,
+            con: duckdb.DuckDBPyConnection | None = None) -> list[str]:
+    """Returns a list of mismatch descriptions (empty = match). ``con``
+    runs the oracle instead of a fresh :func:`duckdb_conn` (one with
+    Python functions registered, say)."""
     problems: list[str] = []
     sp = spark_df.toPandas()
-    con = duckdb_conn(sf_dir)
+    con = con or duckdb_conn(sf_dir)
     du = con.execute(oracle_sql).fetchdf()
 
     if len(sp) != len(du):
@@ -339,3 +342,82 @@ def covariance_replay(vectors) -> dict:
             else bigdecimal_round(sp / n - (si / n) * (sj / n)))
         for k, (n, sp, si, sj) in sums.items()
     }
+
+
+def lsh_replay(vec, planes: int, tables: int) -> list[str]:
+    """``similarity.lsh_signer`` for one vector in pure Python: table t's
+    bit p is the sign of the projection on hyperplane ``t*planes + p``
+    (element d is +1 when md5("plane:d")'s first hex digit is >= 8, else
+    -1), folded left to right from 0.0 over the vector's own elements. A
+    NULL element makes the projection NULL (bit 0); NaN counts as >= 0
+    (bit 1), as Spark orders it."""
+    import hashlib
+
+    out = []
+    for t in range(tables):
+        bits = ""
+        for p in range(t * planes, (t + 1) * planes):
+            acc = 0.0
+            for d, x in enumerate(vec):
+                if x is None:
+                    acc = None
+                    break
+                h = int(hashlib.md5(f"{p}:{d}".encode()).hexdigest()[0], 16)
+                acc += x * (1.0 if h >= 8 else -1.0)
+            bits += "1" if acc is not None and (acc >= 0 or math.isnan(acc)) else "0"
+        out.append(bits)
+    return out
+
+
+_XXP1, _XXP2, _XXP3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_XXP4, _XXP5, _M64 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5, (1 << 64) - 1
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return _rotl64((acc + lane * _XXP2) & _M64, 31) * _XXP1 & _M64
+
+
+def xxh64(data: bytes, seed: int) -> int:
+    """XXH64 (the public xxHash spec) of ``data``, unsigned."""
+    n, i, seed = len(data), 0, seed & _M64
+
+    def word(k: int) -> int:
+        return int.from_bytes(data[i:i + k], "little")
+
+    if n >= 32:
+        v = [(seed + _XXP1 + _XXP2) & _M64, (seed + _XXP2) & _M64, seed,
+             (seed - _XXP1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                v[j] = _xxh64_round(v[j], word(8))
+                i += 8
+        h = sum(_rotl64(x, r) for x, r in zip(v, (1, 7, 12, 18))) & _M64
+        for x in v:
+            h = ((h ^ _xxh64_round(0, x)) * _XXP1 + _XXP4) & _M64
+    else:
+        h = (seed + _XXP5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h = (_rotl64(h ^ _xxh64_round(0, word(8)), 27) * _XXP1 + _XXP4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h = (_rotl64(h ^ (word(4) * _XXP1 & _M64), 23) * _XXP2 + _XXP3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl64(h ^ (b * _XXP5 & _M64), 11) * _XXP1 & _M64
+    for shift, prime in ((33, _XXP2), (29, _XXP3)):
+        h = ((h ^ (h >> shift)) * prime) & _M64
+    return h ^ (h >> 32)
+
+
+def spark_xxhash64(i: int, s: str) -> int:
+    """Spark's ``xxhash64(lit(i), s)`` for an int ``i`` and a string
+    ``s``: the children hash in order from seed 42, each result seeding
+    the next, an int as its 4 little-endian bytes and a string as its
+    UTF-8 bytes; the result is a signed long."""
+    h = xxh64(s.encode("utf-8"), xxh64((i & 0xFFFFFFFF).to_bytes(4, "little"), 42))
+    return h - (1 << 64) if h >= 1 << 63 else h

@@ -257,12 +257,24 @@ def _queries_frame(d):
     return d.select(F.col("vec_id").alias("query_id"), "embedding")
 
 
+def _first(s, d, vec):
+    """``d`` in one partition behind a first row ``(0, vec)``."""
+    return s.createDataFrame([(0, vec)], d.schema).unionByName(d).coalesce(1)
+
+
 _EMB_CASES = {
     "cosine_topk": lambda s, d: similarity.cosine_topk(
         d, _queries_frame(d), k=3
     ),
     "lsh_ann_topk": lambda s, d: similarity.lsh_ann_topk(
         d, _queries_frame(d), k=3, planes=4, tables=2
+    ),
+    # nothing reads the embedding dim off a NULL or short first row
+    "lsh_ann_topk_null_first": lambda s, d: similarity.lsh_ann_topk(
+        _first(s, d, None), _queries_frame(d), k=3, planes=4, tables=2
+    ),
+    "lsh_ann_topk_short_first": lambda s, d: similarity.lsh_ann_topk(
+        _first(s, d, [1.0, 0.0]), _queries_frame(d), k=3, planes=4, tables=2
     ),
     "ivf_topk": lambda s, d: similarity.ivf_topk(
         d, _queries_frame(d), _cent(s), k=3, nprobe=2
@@ -296,6 +308,8 @@ def test_embedding_operator_survives_degenerate_vectors(spark, demb, name):
     rows = out.collect()
     if name == "kmeans_centroids":
         assert len(rows) == 2  # zero vectors must not collapse training
+    if name.startswith("lsh_ann_topk"):
+        assert {r["neighbor_id"] for r in rows} - {0}
     if name == "semdedup":
         # zero and empty vectors score 0.0 against every centroid: lowest
         # centroid id, cos 0.0, never a duplicate; NULL rows are dropped

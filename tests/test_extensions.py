@@ -448,6 +448,80 @@ def test_ivf_assign_matches_replay(spark, emb):
     assert _with_batch_size(spark, 2, run) == want
 
 
+_NAN, _INF = float("nan"), float("inf")
+_LSH_ROWS = [
+    (1, [1.0, 2.0, 3.0, 4.0]),
+    (2, [1.0, 2.0]),                        # shorter than the rest
+    (3, []),
+    (4, [1.0, -2.0, 3.0, -4.0, 5.0, -6.0]),  # longer than the rest
+    (5, [_NAN, 1.0, 0.0, 0.0]),
+    (6, [1.0, None, 0.0, 0.0]),             # NULL element
+    (7, [_INF, 1.0, 0.0, 0.0]),
+    (8, [_INF, -_INF, 0.0, 0.0]),           # NaN where the signs meet
+    (9, [0.0, 0.0, 0.0, 0.0]),
+    (10, [1e-30, -1e-30, 1e-30, -1e-30]),
+    (11, [-1e-30, 0.0, 0.0, 0.0]),
+    (12, [1e300, 1e300, -1e300, 1e300]),    # a partial sum overflows
+    # cancellation: the fold rounds the 1.0 away, so summing in another
+    # order flips bits (one-row BLAS does here, as does a 1024-wide gemm)
+    (13, [1e16, 1.0, 1e16]),
+    (14, [1.0] + [0.0] * 1020 + [1e16, 1e16, 0.0]),
+]
+
+
+def test_lsh_signer_matches_replay_and_oracle(spark):
+    """lsh_signer equals the pure-Python left-fold replay and the lane
+    oracle's DuckDB signature CTE bit for bit on the adversarial frame
+    (ragged, empty, NaN, inf, NULL element, zero, tiny, overflowing and
+    cancelling rows), also with 2-row Arrow batches; a NULL row signs
+    to NULL."""
+    import math
+
+    import duckdb
+    import pyarrow as pa
+    from oracle_utils import lsh_replay
+
+    from snowflake_data_pipeline_demo_spark.plans.queries_ext import (
+        _lsh_sig_sql,
+    )
+
+    planes, tables = 4, 2
+    want = {i: lsh_replay(v, planes, tables) for i, v in _LSH_ROWS}
+    assert want[2] == ["1100", "1110"] and want[3] == ["1111", "1111"]
+    assert want[5] == ["1111", "1111"] and want[6] == ["0000", "0000"]
+    for i in (13, 14):  # the left fold's sign is not the exact one
+        v = dict(_LSH_ROWS)[i]
+        exact = ["".join(
+            "1" if math.fsum(x * h for x, h in zip(
+                v, similarity._plane_signs(p, len(v)))) >= 0 else "0"
+            for p in range(t * planes, (t + 1) * planes)) for t in range(tables)]
+        assert exact != want[i]
+
+    con = duckdb.connect()
+    con.register("embeddings", pa.table({
+        "vec_id": [i for i, _ in _LSH_ROWS],
+        "embedding": pa.array([v for _, v in _LSH_ROWS], pa.list_(pa.float64())),
+    }))
+    oracle: dict = {}
+    for i, t, bucket in sorted(con.execute(
+            f"SELECT vec_id, t, bucket FROM ({_lsh_sig_sql(planes, tables)})").fetchall()):
+        oracle.setdefault(i, []).append(bucket)
+    assert oracle == want
+
+    # one partition, so the batches (all rows; then pairs) are fixed
+    frame = spark.createDataFrame(
+        _LSH_ROWS + [(15, None)], "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    sign = similarity.lsh_signer(planes, tables)
+
+    def run():
+        return {r["vec_id"]: r["sig"] for r in frame.select(
+            "vec_id", sign("embedding").alias("sig")).collect()}
+
+    assert run() == {**want, 15: None}
+    assert _with_batch_size(spark, 2, run) == {**want, 15: None}
+
+
 # ---------------------------------------------------------------------------
 # large-star/small-star components (round 4)
 # ---------------------------------------------------------------------------
@@ -606,10 +680,12 @@ def test_repetition_agg_matches_array_form(spark, docs):
     assert b[9006][0] == 0.8
 
 
-def test_lazy_plan_construction(spark, docs):
-    """tfidf_topk / unigram_logprob / secure_trips_view must not run any
-    Spark job while the plan is being BUILT (scalar subqueries replaced
-    the former count()/first()/collect() at construction)."""
+def test_lazy_plan_construction(spark, docs, emb):
+    """tfidf_topk / unigram_logprob / secure_trips_view / lsh_ann_topk
+    must not run any Spark job while the plan is being BUILT (scalar
+    subqueries replaced the former count()/first()/collect() at
+    construction; LSH signs each row on its own length, so it needs no
+    embedding-dim probe)."""
     from snowflake_data_pipeline_demo_spark.plans.citibike import (
         security_fixture,
     )
@@ -623,6 +699,8 @@ def test_lazy_plan_construction(spark, docs):
         text.tfidf_topk(docs)
         text.unigram_logprob(docs)
         security_fixture(spark, region)
+        similarity.lsh_ann_topk(emb, emb.select(
+            F.col("vec_id").alias("query_id"), "embedding"))
         jobs = sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setJobGroup(None, None)

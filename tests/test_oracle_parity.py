@@ -48,15 +48,50 @@ def test_entry_smoke(spark):
     ("x_semdedup_prod", "x_semdedup"),
     ("x_repetition_metrics_prod", "x_repetition_metrics"),
     ("x_embed_covariance_prod", "x_embed_covariance"),
+    ("x_sim_lsh_ann_prod", "x_sim_lsh_ann"),
 ])
 def test_deleted_arm_name_aliases_its_lane(alias, lane):
     """A deleted arm's lane name stays registered (the name set is a
     contract) as an alias of the surviving builder and its oracle; the
-    registry keeps 129 names, 122 of them DuckDB-gated."""
+    registry keeps 129 names, 123 of them DuckDB-gated."""
     q = _registry()
     assert q[alias].builder.__wrapped__ is q[lane].builder.__wrapped__
     assert q[alias].oracle == q[lane].oracle is not None
-    assert (len(q), sum(x.oracle is not None for x in q.values())) == (129, 122)
+    assert (len(q), sum(x.oracle is not None for x in q.values())) == (129, 123)
+
+
+def test_minhash_xxhash_lane_matches_its_xxhash64_replay(spark):
+    """x_dedup_minhash_xxhash stays rows-only in the registry (DuckDB has
+    no xxhash64), so it is gated here: the pure-Python spark_xxhash64
+    first equals Spark's xxhash64 on multi-byte and 32+ byte strings,
+    then runs as a DuckDB function inside the md5 lane's oracle, and the
+    lane must equal that oracle."""
+    from duckdb.typing import BIGINT, INTEGER, VARCHAR
+    from oracle_utils import compare, duckdb_conn, spark_xxhash64
+    from pyspark.sql import functions as F
+
+    from snowflake_data_pipeline_demo_spark.plans.oracle_round import (
+        spark_round_oracle,
+    )
+    from snowflake_data_pipeline_demo_spark.plans.queries_ext import (
+        _minhash_lsh_oracle,
+    )
+
+    words = ["", "a", "abc", "héllo wörld", "日本語のテキスト", "emoji 🙂 ok",
+             "x" * 31, "y" * 32, "the quick brown fox jumps over the lazy dog"]
+    df = spark.createDataFrame([(w,) for w in words], "s string")
+    for i in (0, 7, 15):
+        got = [r[0] for r in df.select(F.xxhash64(F.lit(i), "s")).collect()]
+        assert got == [spark_xxhash64(i, w) for w in words], i
+
+    con = duckdb_conn(SF_ORACLE)
+    con.create_function("spark_xxhash64", spark_xxhash64, [INTEGER, VARCHAR], BIGINT)
+    oracle = spark_round_oracle(
+        _minhash_lsh_oracle("spark_xxhash64(CAST(h AS INTEGER), x)"))
+    lane = _registry()["x_dedup_minhash_xxhash"].builder(spark, SF_ORACLE)
+    assert con.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0] > 0
+    problems = compare(lane, oracle, SF_ORACLE, con=con)
+    assert not problems, problems
 
 
 def test_oracle_keys_subset_of_queries():
@@ -71,8 +106,8 @@ def test_oracle_keys_subset_of_queries():
 def test_registry_schema_is_driver_hashable(spark, name):
     """The driver's canonicalizer (pandas sort_values over raw object
     columns) crashes on container values — every ORACLE-GATED registry
-    query must emit only atomic columns (CORRECTNESS_r04 regression:
-    x_token_ids/x_pack_boundaries shipped array<long>). Rows-only
+    query must emit only atomic columns (x_token_ids and
+    x_pack_boundaries once shipped array<long> and crashed it). Rows-only
     queries are exempt: the driver never canonicalizes them. Reads the
     schema test_query_matches_oracle recorded; builds the lane only
     when that test did not run (a ``-k`` selection)."""

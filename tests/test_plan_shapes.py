@@ -569,6 +569,35 @@ def test_lane_caches_drain_between_registry_lanes(spark):
         "a lane cached outside lane_cache tracking"
 
 
+#: the lanes that write scratch tables (stage files, sketch runs, state)
+_STATEFUL_LANES = [
+    "s6_stage_select", "s7_metadata_filename", "x_shard_manifest_audit",
+    "x_stream_minhash_dedup", "x_hll_cross_run_merge",
+    "x_bloom_cross_run_probe", "x_cms_heavy_hitters",
+    "x_stream_corpus_profile", "x_dedup_components_incremental",
+]
+
+
+def test_stateful_lanes_leave_tmpdir_as_it_was(spark, tmp_path, monkeypatch):
+    """Each stateful lane writes under a caching.lane_tmpdir, and the
+    release that runs before the next lane deletes it: building and
+    collecting every stateful lane leaves TMPDIR as it was."""
+    import tempfile
+
+    from snowflake_data_pipeline_demo_spark.caching import (
+        release_lane_caches,
+    )
+
+    release_lane_caches()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in _STATEFUL_LANES:
+        QUERIES[name].builder(spark, SF).write.format("noop").mode(
+            "overwrite").save()
+        assert list(tmp_path.iterdir()), name  # the lane did write there
+        release_lane_caches()
+        assert not list(tmp_path.iterdir()), name
+
+
 def test_stray_persistent_rdd_sweep_reaches_local_checkpoints():
     """release_stray_persistent_rdds must free what neither
     spark.catalog.clearCache() nor release_lane_caches can reach:

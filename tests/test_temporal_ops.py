@@ -161,25 +161,6 @@ def test_pack_sequences_boundaries(spark):
     assert got[(2, 1)]["pack_offset"] == 32
 
 
-def test_lsh_ann_pandas_signatures_match_hof(spark):
-    """The production (numpy matmul) signature path must agree with the
-    oracle-portable HOF path except for measure-zero near-boundary bit
-    flips — on the testdata sample they agree exactly."""
-    from snowflake_data_pipeline_demo_spark.operators import similarity
-    from snowflake_data_pipeline_demo_spark.sources import testdata
-
-    e = testdata.load(spark, "/root/testdata/sf0.001", "embeddings")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    hof = similarity.lsh_ann_topk(e, q, k=5, planes=8, tables=2)
-    prod = similarity.lsh_ann_topk(e, q, k=5, planes=8, tables=2,
-                                   signature_impl="pandas")
-    a = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in hof.collect()}
-    b = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in prod.collect()}
-    agree = sum(a[k] == b.get(k) for k in a)
-    assert agree / len(a) >= 0.95
-
-
 def test_asof_join_matches_pandas_merge_asof(spark):
     """Independent reference: pandas.merge_asof on a seeded random
     event set must agree exactly (inclusive direction='backward' is the
