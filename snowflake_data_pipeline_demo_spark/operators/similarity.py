@@ -269,7 +269,9 @@ class _Vectors(NamedTuple):
         X[row[keep], pos[keep]] = np.where(valid, vals, 0.0)[keep]
         void = np.zeros(len(lens), dtype=bool)
         void[row[~valid]] = True
-        return cls(X, lens, np.sqrt(_fold(X, X)), void)
+        with np.errstate(over="ignore"):  # Spark overflows to Infinity silently
+            norm = np.sqrt(_fold(X, X))
+        return cls(X, lens, norm, void)
 
     def __getitem__(self, rows) -> "_Vectors":
         return _Vectors(self.X[rows], self.lens[rows], self.norm[rows],

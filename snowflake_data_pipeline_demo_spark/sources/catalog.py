@@ -16,7 +16,8 @@ parquet append + anti-join express exactly (operators/merge.py).
 Scale notes:
 - the few rows a trigger writes from the driver (ledger rows, new
   dimension keys) go through ``Table.write_rows``: one pyarrow file
-  renamed into place, no Spark job and no committer.
+  renamed into place, no Spark job and no committer; ``Table.read_arrow``
+  reads such small tables (ledgers, dimension keys) back the same way.
 - ``Table.read`` is a schema'd parquet scan: Catalyst gets pushdown +
   column pruning for free, and streaming readers (streaming/streams.py)
   can treat the same directory as a file-source CDC log because the
@@ -32,6 +33,7 @@ import os
 import uuid
 
 import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -224,6 +226,37 @@ class Table:
             # Partitioned tables keep partition discovery instead.
             r = r.option("recursiveFileLookup", "true")
         return r.parquet(self.path)
+
+    def read_arrow(self, columns: list[str]) -> pa.Table:
+        """Driver-side read of ``columns`` with pyarrow, no Spark job:
+        every data file under the table, skipping ``_``/``.`` names at
+        any depth as :meth:`read` does.
+
+        A file that a concurrent write removes between the listing and
+        the read (a replayed batch-keyed write replacing its subdir)
+        raises ``FileNotFoundError``; the read is retried, at most 3
+        times in all. Types outside :data:`_ARROW_TYPES` raise
+        ``TypeError``."""
+        if self.partition_by:
+            raise ValueError("read_arrow requires a non-partitioned table")
+        schema = _arrow_schema(T.StructType([self.schema[c] for c in columns]))
+        fs, root = pafs.FileSystem.from_uri(self._norm_path)
+        attempts = 3
+        while True:
+            try:
+                files = [
+                    f.path for f in fs.get_file_info(pafs.FileSelector(
+                        root, recursive=True, allow_not_found=True))
+                    if f.type == pafs.FileType.File
+                    and not any(part.startswith(("_", ".")) for part in
+                                f.path[len(root):].strip("/").split("/"))
+                ]
+                return ds.dataset(files, schema=schema, format="parquet",
+                                  filesystem=fs).to_table()
+            except FileNotFoundError:
+                attempts -= 1
+                if not attempts:
+                    raise
 
     def overwrite_subdir(self, df: DataFrame, subdir: str) -> None:
         """Idempotent write unit: (re)write ``{path}/{subdir}`` whole.

@@ -23,6 +23,11 @@ pyarrow:
   driver's UTC clock.
 - task_history: each task trigger appends its one row with the append
   form (a uniquely named file, so concurrent tasks never collide).
+
+copy_history is also read back on the driver with pyarrow
+(``Table.read_arrow``), again with no Spark job: purge reads the
+loaded files it may delete, and the pipe's ``status()`` its
+loaded-file set.
 """
 
 from __future__ import annotations

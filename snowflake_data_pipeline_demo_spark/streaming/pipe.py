@@ -185,12 +185,13 @@ class Pipe:
     # -- T7: system$pipe_status() -------------------------------------------
     def status(self) -> dict:
         """``parse_json(system$pipe_status())`` analog (dp_demo.sql:52,
-        132): executionState + pendingFileCount (staged minus loaded)."""
+        132): executionState + pendingFileCount (staged minus loaded).
+        The loaded files are read from copy_history with pyarrow on the
+        driver (no Spark job)."""
         staged = {f.path for f in self.stage.list()}
-        loaded = {
-            r["file_name"]
-            for r in self.copy_history.read().select("file_name").distinct().collect()
-        }
+        loaded = set(
+            self.copy_history.read_arrow(["file_name"]).column("file_name").to_pylist()
+        )
         return {
             "executionState": "RUNNING" if self.query and self.query.isActive else "PAUSED",
             "pendingFileCount": len(staged - loaded),

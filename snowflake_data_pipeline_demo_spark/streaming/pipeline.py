@@ -13,23 +13,32 @@ This module is the dp_demo.sql run-book as an engine object:
 5. purge (T10): delete staged files recorded error-free in copy_history
 
 Scale notes: every task body is a declarative DataFrame plan over the
-micro-batch, which each trigger caches so its source is scanned once;
-merges anti-join against dim tables (broadcast-sized) and collect only
-the new dimension rows; nothing collects fact rows to the driver. The
-per-trigger bookkeeping is written from the driver without Spark jobs
-(copy_history and task_history rows, new dimension rows:
-``Table.write_rows``), and push_trips counts its rows with an
-``Observation`` on its write instead of a second action.
+micro-batch that runs as ONE Spark job, so the source is scanned once
+and nothing is cached; its Columns are built once per pipeline, not per
+trigger. A body returns ``None`` when its job saw no rows, which the
+task records as SKIPPED (the stream_has_data guard, streaming/tasks.py).
+push_trips counts its rows with an ``Observation`` on its write; the
+merges dedupe the batch in their one job and anti-join it on the driver
+against dimension keys read with pyarrow (operators/merge.py). Nothing
+collects fact rows to the driver. The per-trigger bookkeeping is
+written from the driver without Spark jobs (copy_history and
+task_history rows, new dimension rows: ``Table.write_rows``), and purge
+reads copy_history with pyarrow, so it runs no Spark job either.
 """
 
 from __future__ import annotations
 
+import datetime as dt
+
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.merge import insert_only_merge
+from ..operators.merge import distinct_rows, insert_rows
 from ..sources.catalog import (
     Catalog, PROGRAMS_SCHEMA, STATIONS_SCHEMA, TRIP_DOC_SCHEMA, TRIPS_SCHEMA,
+    Table,
 )
 from ..sources.stage import Stage
 from .history import COPY_HISTORY_SCHEMA, TASK_HISTORY_SCHEMA
@@ -46,6 +55,42 @@ RAW_SCHEMA = T.StructType([T.StructField("v", TRIP_DOC_SCHEMA)])
 def _v(field: str, cast_to: str | None = None) -> F.Column:
     c = F.col("v").getField(field)
     return c.cast(cast_to) if cast_to else c
+
+
+def _trip_columns() -> list[F.Column]:
+    """push_trips' projection: the 10 variant path-casts
+    (dp_setup.sql:192-203)."""
+    from ..functions.variant import epoch_micros_to_ntz
+
+    return [
+        _v("tripduration", "int").alias("tripduration"),
+        # wire timestamps are epoch-micros longs; this is the
+        # ::timestamp_ntz cast edge (dp_setup.sql:194-195)
+        epoch_micros_to_ntz(_v("starttime")).alias("starttime"),
+        epoch_micros_to_ntz(_v("stoptime")).alias("stoptime"),
+        _v("start_station_id", "int").alias("start_station_id"),
+        _v("end_station_id", "int").alias("end_station_id"),
+        _v("bikeid", "int").alias("bikeid"),
+        _v("usertype").alias("usertype"),
+        _v("birth_year", "int").alias("birth_year"),
+        _v("gender", "int").alias("gender"),
+        _v("program_id", "int").alias("program_id"),
+    ]
+
+
+def _station_legs() -> F.Column:
+    """push_stations' start and end legs (dp_setup.sql:227-245) as one
+    generator column, so one scan of the batch yields both."""
+    def leg(side: str) -> F.Column:
+        name = _v(f"{side}_station_name")
+        return F.struct(
+            _v(f"{side}_station_id", "int").alias("station_id"),
+            name.alias("station_name"),
+            _v(f"{side}_station_latitude", "double").alias("station_latitude"),
+            _v(f"{side}_station_longitude", "double").alias("station_longitude"),
+            F.concat(F.lit("Station at "), name).alias("station_comment"),
+        )
+    return F.inline(F.array(leg("start"), leg("end")))
 
 
 class CitibikePipeline:
@@ -78,6 +123,16 @@ class CitibikePipeline:
         self.new_programs = TableStream(spark, "new_programs", self.trips_raw, self.checkpoints)
         self.new_stations = TableStream(spark, "new_stations", self.trips_raw, self.checkpoints)
 
+        # the task bodies' projections are built once: building their
+        # Columns is one py4j call per expression node (~0.1 s for
+        # push_trips'), too much to pay again on every trigger
+        self._trip_cols = _trip_columns()
+        self._program_cols = [
+            _v("program_id", "int").alias("program_id"),
+            _v("program_name").alias("program_name"),
+        ]
+        self._station_legs = _station_legs()
+
         self.runner = TaskRunner()
         self.push_trips = self.runner.register(Task(
             "push_trips", self.new_trips, self._push_trips, self.task_history))
@@ -90,104 +145,72 @@ class CitibikePipeline:
 
     # -- task bodies ---------------------------------------------------------
 
-    def _push_trips(self, batch: DataFrame, batch_id: int) -> int:
+    def _push_trips(self, batch: DataFrame, batch_id: int) -> int | None:
         """INSERT-SELECT with the 10 variant path-casts
         (dp_setup.sql:192-203)."""
-        from ..functions.variant import epoch_micros_to_ntz
-
-        rows = batch.select(
-            _v("tripduration", "int").alias("tripduration"),
-            # wire timestamps are epoch-micros longs; this is the
-            # ::timestamp_ntz cast edge (dp_setup.sql:194-195)
-            epoch_micros_to_ntz(_v("starttime")).alias("starttime"),
-            epoch_micros_to_ntz(_v("stoptime")).alias("stoptime"),
-            _v("start_station_id", "int").alias("start_station_id"),
-            _v("end_station_id", "int").alias("end_station_id"),
-            _v("bikeid", "int").alias("bikeid"),
-            _v("usertype").alias("usertype"),
-            _v("birth_year", "int").alias("birth_year"),
-            _v("gender", "int").alias("gender"),
-            _v("program_id", "int").alias("program_id"),
-        )
         # the row count rides on the write job (no second action)
         seen = Observation()
-        rows = rows.observe(seen, F.count(F.lit(1)).alias("n"))
+        rows = batch.select(*self._trip_cols).observe(
+            seen, F.count(F.lit(1)).alias("n"))
         # batch-keyed idempotent write: a replay after a crash in the
         # write-to-commit window converges instead of duplicating (the
         # merge consumers are naturally idempotent; this INSERT is not)
         self.trips.overwrite_subdir(rows, f"batch_{batch_id}")
-        return seen.get["n"]
+        return seen.get["n"] or None
 
-    def _push_programs(self, batch: DataFrame, batch_id: int) -> int:
+    def _push_programs(self, batch: DataFrame, batch_id: int) -> int | None:
         """MERGE ... WHEN NOT MATCHED INSERT on program_id
-        (dp_setup.sql:211-219)."""
-        src = batch.select(
-            _v("program_id", "int").alias("program_id"),
-            _v("program_name").alias("program_name"),
-        ).distinct()
-        return insert_only_merge(self.programs, src, ["program_id"])
+        (dp_setup.sql:211-219); the merge dedupes the source."""
+        src = batch.select(*self._program_cols)
+        return self._merge(self.programs, src, ["program_id"])
 
-    def _push_stations(self, batch: DataFrame, batch_id: int) -> int:
+    def _push_stations(self, batch: DataFrame, batch_id: int) -> int | None:
         """UNION(-distinct) of start/end projections + MERGE on
-        station_id (dp_setup.sql:227-245)."""
-        def leg(side: str) -> DataFrame:
-            return batch.select(
-                _v(f"{side}_station_id", "int").alias("station_id"),
-                _v(f"{side}_station_name").alias("station_name"),
-                _v(f"{side}_station_latitude", "double").alias("station_latitude"),
-                _v(f"{side}_station_longitude", "double").alias("station_longitude"),
-                F.concat(F.lit("Station at "), _v(f"{side}_station_name"))
-                .alias("station_comment"),
-            )
-        src = leg("start").union(leg("end")).distinct()
-        return insert_only_merge(self.stations, src, ["station_id"])
+        station_id (dp_setup.sql:227-245): both legs come out of one
+        scan of the batch, and the merge dedupes them."""
+        src = batch.select(self._station_legs)
+        return self._merge(self.stations, src, ["station_id"])
+
+    @staticmethod
+    def _merge(table: Table, src: DataFrame, keys: list[str]) -> int | None:
+        """operators.merge.insert_only_merge in its two steps, so that a
+        batch with no rows (``None``: SKIPPED) is told apart from one
+        whose keys are all known (0 rows inserted)."""
+        rows = distinct_rows(src.select(*table.schema.names))
+        return insert_rows(table, rows, keys) if rows else None
 
     # -- purge (T10, dp_setup.sql:101-130) -----------------------------------
 
     def purge_files(self, lookback_hours: int = 10) -> int:
         """Delete staged files that copy_history shows loaded with
-        error_count=0 (idempotent; rm errors swallowed like the SP's
-        try/catch). Restart-safe: a ledger row is only trusted when its
-        batch_id is at or below the pipe checkpoint's commits/ frontier
-        — ledger appends happen inside foreachBatch BEFORE the commit,
-        so a crash in between leaves a 'loaded' row for a batch that
-        will replay; purging its file would make the replay read a
-        deleted file (data loss with ignoreMissingFiles)."""
+        error_count=0 within the lookback (idempotent; a failed rm is
+        retried next tick, like the SP's try/catch loop). Restart-safe:
+        a ledger row is only trusted when its batch_id is at or below
+        the pipe checkpoint's commits/ frontier — ledger appends happen
+        inside foreachBatch BEFORE the commit, so a crash in between
+        leaves a 'loaded' row for a batch that will replay; purging its
+        file would make the replay read a deleted file (data loss with
+        ignoreMissingFiles).
+
+        No Spark job: the ledger is read with pyarrow on the driver
+        (``Table.read_arrow``, which retries a read that races a
+        replayed batch replacing its ledger file)."""
         frontier = self.pipe.last_committed_batch()
         if frontier is None:
             return 0
-        cutoff = F.current_timestamp() - F.expr(f"INTERVAL {lookback_hours} HOURS")
-        # The ledger scan can race a live write on local fs (the same
-        # transient channel Table._has_data absorbs — Spark's own file
-        # index stats children the writer is deleting; captured when
-        # the ledger was a Spark write with _temporary staging, still
-        # possible for files a replayed batch replaces). Purge is
-        # idempotent and its contract eventual (files not purged this
-        # tick purge next tick), so a bounded retry is the correct
-        # absorption — a propagated transient here killed the whole
-        # task query in the r12 live-load capture.
-        for attempt in range(3):
-            try:
-                loaded = (
-                    self.copy_history.read()
-                    .filter(
-                        (F.col("error_count") == 0)
-                        & (F.col("last_load_time") >= cutoff)
-                        & (F.col("batch_id") <= frontier)
-                    )
-                    .select("file_name").distinct().collect()
-                )
-                break
-            except Exception as ex:  # noqa: BLE001 - transient-only, re-raised
-                s = str(ex)
-                transient = "_temporary" in s or "file permissions" in s
-                if attempt == 2 or not transient:
-                    raise
-        staged = {f.path for f in self.stage.list()}
+        cutoff = pa.scalar(
+            dt.datetime.now(dt.timezone.utc) - dt.timedelta(hours=lookback_hours),
+            pa.timestamp("us", tz="UTC"))
+        loaded = self.copy_history.read_arrow(
+            ["file_name", "error_count", "last_load_time", "batch_id"],
+        ).filter((pc.field("error_count") == 0)
+                 & (pc.field("last_load_time") >= cutoff)
+                 & (pc.field("batch_id") <= frontier))
+        staged = {f.path.removeprefix("file:") for f in self.stage.list()}
         purged = 0
-        for r in loaded:
-            name = r["file_name"].removeprefix("file:")
-            if name in staged or f"file:{name}" in staged:
+        for name in set(loaded["file_name"].to_pylist()):
+            name = name.removeprefix("file:")
+            if name in staged:
                 purged += int(self.stage.rm(name))
         return purged
 

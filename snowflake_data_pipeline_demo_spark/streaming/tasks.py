@@ -10,9 +10,12 @@ Spark-native: a Task wraps one stream consumer:
 ``stream.read() -> writeStream.trigger(processingTime).foreachBatch(fn)``.
 
 - the 1-minute schedule -> ``trigger(processingTime='60 seconds')``
-- the stream_has_data guard -> ``batch.isEmpty()`` on the cached
-  micro-batch; an empty one is recorded as SKIPPED exactly like the
-  reference (dp_demo.sql:170 shows SKIPPED rows).
+- the stream_has_data guard -> the body itself: each body runs ONE
+  Spark job over the micro-batch and returns ``None`` when that job saw
+  no rows, which records the trigger as SKIPPED exactly like the
+  reference (dp_demo.sql:170 shows SKIPPED rows). A separate
+  ``isEmpty()`` would be a second job, and a second scan unless the
+  batch were cached.
 - AFTER chaining (T5) -> ``after`` callbacks run at the end of the
   parent's foreachBatch, in-transaction-order like Snowflake's DAG.
 - resume/suspend (T6) -> start()/stop() of the streaming query.
@@ -41,7 +44,7 @@ class Task:
         self,
         name: str,
         stream: TableStream,
-        body: Callable[[DataFrame, int], int],
+        body: Callable[[DataFrame, int], int | None],
         task_history: Table,
         schedule: str = "60 seconds",
     ):
@@ -62,36 +65,30 @@ class Task:
     def _on_batch(self, batch: DataFrame, batch_id: int) -> None:
         self._fired = True
         scheduled = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        # cached so the body's jobs and this guard scan the source once
-        # (the progress numInputRows counts every scan of it)
-        batch = batch.cache()
         try:
-            if batch.isEmpty():
-                self._record("SKIPPED", scheduled, batch_id, 0, None)
-                return
-            try:
-                processed = self.body(batch, batch_id)
-            except Exception as e:  # noqa: BLE001 - ledger then re-raise
-                # re-raise ALWAYS (a partial body must never let the
-                # epoch commit), but skip the FAILED ledger row while
-                # suspending: the interrupt that killed the body would
-                # make it a spurious FAILED-for-a-benign-stop entry,
-                # contradicted by the replay's SUCCEEDED row
-                if not self._stopping:
-                    self._record("FAILED", scheduled, batch_id, 0,
-                                 str(e)[:500])
-                raise
-            if not self._record("SUCCEEDED", scheduled, batch_id,
-                                processed, None):
-                # record dropped mid-suspension: do NOT run AFTER hooks
-                # on a thread whose job group stop() just cancelled —
-                # their Spark actions would raise across the
-                # tearing-down callback connection (r11 review)
-                return
-            for hook in self.after:
-                hook()
-        finally:
-            batch.unpersist()
+            processed = self.body(batch, batch_id)
+        except Exception as e:  # noqa: BLE001 - ledger then re-raise
+            # re-raise ALWAYS (a partial body must never let the
+            # epoch commit), but skip the FAILED ledger row while
+            # suspending: the interrupt that killed the body would
+            # make it a spurious FAILED-for-a-benign-stop entry,
+            # contradicted by the replay's SUCCEEDED row
+            if not self._stopping:
+                self._record("FAILED", scheduled, batch_id, 0, str(e)[:500])
+            raise
+        if processed is None:
+            # the body's job saw no rows: stream_has_data was false
+            self._record("SKIPPED", scheduled, batch_id, 0, None)
+            return
+        if not self._record("SUCCEEDED", scheduled, batch_id, processed,
+                            None):
+            # record dropped mid-suspension: do NOT run AFTER hooks
+            # on a thread whose job group stop() just cancelled —
+            # their Spark actions would raise across the
+            # tearing-down callback connection (r11 review)
+            return
+        for hook in self.after:
+            hook()
 
     def _record(self, state: str, scheduled, batch_id: int, rows: int,
                 error: str | None) -> bool:

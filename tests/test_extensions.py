@@ -522,6 +522,20 @@ def test_lsh_signer_matches_replay_and_oracle(spark):
     assert _with_batch_size(spark, 2, run) == {**want, 15: None}
 
 
+def test_vectors_norm_overflows_to_inf_silently():
+    """A squared element above ~1e154 overflows the norm fold to inf
+    without a RuntimeWarning, as Spark's double arithmetic does."""
+    import warnings
+
+    import pyarrow as pa
+
+    arr = pa.array([[1e300, 1e300, -1e300, 1e300]], pa.list_(pa.float64()))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        v = similarity._Vectors.of(arr)
+    assert v.norm.tolist() == [float("inf")]
+
+
 # ---------------------------------------------------------------------------
 # large-star/small-star components (round 4)
 # ---------------------------------------------------------------------------

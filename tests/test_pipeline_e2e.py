@@ -242,18 +242,19 @@ def _probe_job_id(sc) -> int:
     return new
 
 
-#: Spark jobs per task trigger, without the AFTER purge (push_trips:
-#: the isEmpty guard and its write; the merges: the guard plus the
-#: collect of the anti-join, whose AQE stages run as their own jobs)
-_TASK_JOB_BUDGET = {"push_trips": 2, "push_programs": 4, "push_stations": 4}
+#: Spark jobs per task trigger, without the AFTER purge: each body's
+#: one job over the micro-batch (push_trips' write, the merges' noop
+#: write carrying the dedupe), which also serves as the
+#: stream_has_data guard
+_TASK_JOB_BUDGET = {"push_trips": 1, "push_programs": 1, "push_stations": 1}
 
 
 def test_task_triggers_scan_once_within_job_budget(spark, tables, tmp_path):
-    """Each task caches its micro-batch, so the source is scanned once:
-    every task query's progress numInputRows sums to the raw row count
-    (an uncached batch is re-scanned by each job and over-counts, which
-    the live drain wait keys on). One trigger per task, bracketed by
-    probe jobs, stays within the job budget."""
+    """Each task runs one job over its micro-batch, so the source is
+    scanned once: every task query's progress numInputRows sums to the
+    raw row count (a batch read by two jobs is counted twice, which the
+    live drain wait keys on). One trigger per task, bracketed by probe
+    jobs, stays within the job budget, and purge runs no Spark job."""
     p = CitibikePipeline(spark, str(tmp_path))
     docs = trip_docs(tables["lineitem"], tables["supplier"], tables["nation"])
     days = [r["day"] for r in docs.select("day").distinct().orderBy("day").limit(5).collect()]
@@ -263,7 +264,7 @@ def test_task_triggers_scan_once_within_job_budget(spark, tables, tmp_path):
         stream_data(docs.filter(F.col("day").isin(days[:4])), p.stage, days[0], days[3])
         p.run_available()
         # the next day is one micro-batch per task; the purge AFTER hook
-        # is left out of the budget (it scans the ledger, not the batch)
+        # is taken out here and timed on its own below
         stream_data(docs.filter(F.col("day") == days[4]), p.stage, days[4], days[4])
         p.pipe.run_available()
         p.push_trips.after = []
@@ -273,6 +274,9 @@ def test_task_triggers_scan_once_within_job_budget(spark, tables, tmp_path):
             first = _probe_job_id(sc)
             task.run_available()
             jobs[name] = _probe_job_id(sc) - first - 1
+        first = _probe_job_id(sc)
+        purged = p.purge_files()
+        jobs["purge"] = _probe_job_id(sc) - first - 1
         raw = p.trips_raw.count()
         names = [f"task_{t}_once" for t in p.runner.tasks]
         deadline = time.time() + 30
@@ -282,4 +286,47 @@ def test_task_triggers_scan_once_within_job_budget(spark, tables, tmp_path):
     finally:
         spark.streams.removeListener(lis)
     assert {n: sum(lis.rows.get(n, [])) for n in names} == dict.fromkeys(names, raw)
-    assert all(jobs[t] <= _TASK_JOB_BUDGET[t] for t in jobs), jobs
+    assert all(jobs[t] <= _TASK_JOB_BUDGET[t] for t in _TASK_JOB_BUDGET), jobs
+    assert purged == 1 and jobs["purge"] == 0, (purged, jobs)
+    assert p.stage.list() == []
+
+
+def test_zero_row_batch_is_skipped_by_every_task(spark, tmp_path):
+    """An empty staged JSON file lands as a zero-row raw batch. Each
+    task's one job sees no rows, so each records exactly one SKIPPED row
+    for that micro-batch (dp_demo.sql:170), no SUCCEEDED row, and the
+    merges append nothing to the dimensions."""
+    p = CitibikePipeline(spark, str(tmp_path))
+    os.makedirs(f"{p.stage.url}/snowpipe_demo_empty")
+    open(f"{p.stage.url}/snowpipe_demo_empty/day.json", "w").close()
+    p.pipe.run_available()
+    assert p.trips_raw.data_files(), "the pipe wrote no raw batch file"
+    assert p.trips_raw.count() == 0
+    p.runner.run_available_all()
+    rows = sorted((r["name"], r["state"], r["batch_id"], r["rows_processed"])
+                  for r in p.task_history.read().collect())
+    assert rows == [(t, "SKIPPED", 0, 0) for t in sorted(p.runner.tasks)]
+    assert p.programs.data_files() == [] and p.stations.data_files() == []
+    assert p.trips.count() == 0
+
+
+def test_purge_retries_a_failed_rm(spark, tables, tmp_path):
+    """A staged file whose rm fails on one tick is purged on the next."""
+    p = CitibikePipeline(spark, str(tmp_path))
+    p.push_trips.after = []
+    docs = trip_docs(tables["lineitem"], tables["supplier"], tables["nation"])
+    days = [r["day"] for r in docs.select("day").distinct().orderBy("day").limit(2).collect()]
+    stream_data(docs.filter(F.col("day").isin(days)), p.stage, days[0], days[1])
+    p.pipe.run_available()
+    staged = [f.path for f in p.stage.list()]
+    assert len(staged) == 2
+    victim = staged[0].removeprefix("file:")
+    rm = p.stage.rm
+    p.stage.rm = lambda name: False if name == victim else rm(name)
+    try:
+        assert p.purge_files() == 1
+    finally:
+        del p.stage.rm  # back to the class method
+    assert [f.path.removeprefix("file:") for f in p.stage.list()] == [victim]
+    assert p.purge_files() == 1
+    assert p.stage.list() == []

@@ -62,6 +62,50 @@ def test_insert_only_merge_is_target_wins_union(spark, target_keys, source_keys)
     assert all(merged[k] == f"t{k}" for k in target_keys)  # target wins
 
 
+_KEYS = st.one_of(st.none(), st.integers(0, 12))
+
+
+@given(
+    st.lists(st.tuples(_KEYS, st.sampled_from("ab")), max_size=10),
+    st.lists(st.tuples(_KEYS, st.sampled_from("ab")), max_size=16),
+)
+@_SLOW
+def test_insert_only_merge_appends_merge_result(spark, tmp_path, target_rows,
+                                                source_rows):
+    """insert_only_merge (one dedupe job, driver anti-join) appends the
+    rows of merge_result (dropDuplicates + Spark anti-join) when the
+    source holds duplicate and NULL keys: the same keys, NULL ones
+    included (a NULL key never matches), each with one of its source
+    rows (merge_result keeps an arbitrary one per key)."""
+    import uuid
+
+    from pyspark.sql import types as T
+
+    from snowflake_data_pipeline_demo_spark.operators.merge import (
+        insert_only_merge, merge_result,
+    )
+    from snowflake_data_pipeline_demo_spark.sources.catalog import Table
+
+    schema = T.StructType([T.StructField("k", T.LongType()),
+                           T.StructField("payload", T.StringType())])
+    table = Table(spark, str(tmp_path / uuid.uuid4().hex), schema)
+    if target_rows:
+        table.write_rows(target_rows)
+    source = spark.createDataFrame(source_rows, schema)
+    want = merge_result(table.read(), source, ["k"]).collect()
+    n = insert_only_merge(table, source, ["k"])
+    got = [tuple(r) for r in table.read().collect()]
+    for r in target_rows:
+        got.remove(r)
+
+    def keys(rows):
+        return sorted((r[0] is None, r[0] or 0) for r in rows)
+
+    assert n == len(got)
+    assert keys(got) == keys(want)
+    assert set(got) <= set(source_rows)
+
+
 @given(st.dates(min_value=dt.date(1900, 1, 1), max_value=dt.date(2199, 12, 31)))
 @_SLOW
 def test_to_date_auto_formats_agree(spark, d):

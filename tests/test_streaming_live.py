@@ -91,9 +91,11 @@ def test_live_pipe_and_tasks(spark, tables, tmp_path_factory):
     #    1-in-8). Fixed at the root: _has_data now BFS-walks with
     #    listStatus, pruning `_`/`.` names BEFORE descending (never
     #    enters _temporary, never loads permissions), with the retry
-    #    broadened to both transient signatures; purge_files wraps its
-    #    ledger collect in the same bounded absorption (purge's
-    #    contract is eventual — a skipped tick purges next tick).
+    #    broadened to both transient signatures. purge_files now
+    #    reads the ledger with pyarrow (Table.read_arrow, no Spark
+    #    scan), whose bounded retry absorbs a ledger file that vanishes
+    #    mid-read (purge's contract is eventual — a skipped tick purges
+    #    next tick).
     root = str(tmp_path_factory.mktemp("live"))
     p = CitibikePipeline(spark, root)
     docs = trip_docs(tables["lineitem"], tables["supplier"], tables["nation"])
