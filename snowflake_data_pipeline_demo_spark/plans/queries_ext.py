@@ -3078,7 +3078,9 @@ def x_shard_manifest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = testdata.load(spark, sf_dir, "documents")
     path = lane_tmpdir("shard_audit_") + "/shards"
     packing.write_token_balanced_shards(d, path, budget=4096)
-    back = spark.read.parquet(path)
+    # the files hold d's columns; shard is discovered from the shard=N
+    # directory names, as it would be under inference
+    back = spark.read.schema(d.schema).parquet(path)
     return (
         back.select(
             F.col("shard").cast("long").alias("shard"),
@@ -3118,8 +3120,8 @@ def x_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape is the operator's INDEXED mode (O(batch) signing, the
     probe a pure equi-join against the persisted banded-key table —
     history is never re-banded; batch-keyed idempotent writes across
-    all three artifacts); the lane only adds count() actions per
-    batch. Decisions are identical to the re-banding mode
+    all three artifacts); the lane only counts each batch's rows, with
+    pyarrow on the driver. Decisions are identical to the re-banding mode
     (tests/test_stateful.py pins the equivalence)."""
     from pyspark.sql import types as T
 
@@ -3171,11 +3173,13 @@ def x_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i, b in enumerate((b0, b1, b2)):
         fn(b, i)
         n_in = n_ins[i]
-        # count only the batch's own subdir (O(batch)); the cumulative
-        # index size is the running sum of per-batch novel signatures —
-        # never a re-scan of the whole index per batch.
-        n_kept = spark.read.parquet(f"{tmp}/clean/batch={i}").count()
-        index_size += spark.read.parquet(f"{tmp}/sigs/batch={i}").count()
+        # count only the batch's own subdir (O(batch), no Spark job);
+        # the cumulative index size is the running sum of per-batch
+        # novel signatures — never a re-scan of the whole index per batch.
+        n_kept = Table(spark, f"{tmp}/clean/batch={i}", doc_schema) \
+            .read_arrow(["doc_id"]).num_rows
+        index_size += Table(spark, f"{tmp}/sigs/batch={i}", sig_schema) \
+            .read_arrow(["doc_id"]).num_rows
         rows.append((i, n_in, n_kept, n_in - n_kept, index_size))
     return spark.createDataFrame(
         rows, "batch_id long, n_in long, n_kept long, n_dropped long, "
@@ -3216,12 +3220,11 @@ def x_hll_cross_run_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard = (F.col("doc_id") % 4).cast("long")
 
     tmp = lane_tmpdir("hll_runs_")
-    text.token_hll_shard_sketches(run_a, shard).write.mode(
-        "overwrite"
-    ).parquet(f"{tmp}/run_a_sketches")
+    sketches_a = text.token_hll_shard_sketches(run_a, shard)
+    sketches_a.write.mode("overwrite").parquet(f"{tmp}/run_a_sketches")
 
     # ---- run B: merge persisted run-A sketches with its own ----
-    persisted = spark.read.parquet(f"{tmp}/run_a_sketches")
+    persisted = spark.read.schema(sketches_a.schema).parquet(f"{tmp}/run_a_sketches")
     merged = text.hll_merge_estimate(
         persisted.unionByName(text.token_hll_shard_sketches(run_b, shard))
     )
@@ -3714,11 +3717,10 @@ def x_bloom_cross_run_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_b = keyed.filter(F.col("doc_id") % 3 == 1)
 
     tmp = lane_tmpdir("bloom_runs_")
-    dedup.bloom_shard_blocks(
-        run_a, "fp", m_bits=_BLOOM_M, k=_BLOOM_K
-    ).write.mode("overwrite").parquet(f"{tmp}/run_a_blocks")
+    blocks_a = dedup.bloom_shard_blocks(run_a, "fp", m_bits=_BLOOM_M, k=_BLOOM_K)
+    blocks_a.write.mode("overwrite").parquet(f"{tmp}/run_a_blocks")
 
-    persisted = spark.read.parquet(f"{tmp}/run_a_blocks")
+    persisted = spark.read.schema(blocks_a.schema).parquet(f"{tmp}/run_a_blocks")
     # bloom_probe bit_or-merges the cross-run union internally — no
     # caller-side bloom_merge needed (it would just run the same
     # O(m/32) aggregation twice)
@@ -3817,13 +3819,14 @@ def x_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tmp = lane_tmpdir("cms_runs_")
     shard = (F.col("doc_id") % 4).cast("long")
-    text.token_cms_shard_sketches(
+    cms_a = text.token_cms_shard_sketches(
         d.filter(F.col("doc_id") % 2 == 0), shard,
         depth=_CMS_D, width=_CMS_W,
-    ).write.mode("overwrite").parquet(f"{tmp}/run_a_cms")
+    )
+    cms_a.write.mode("overwrite").parquet(f"{tmp}/run_a_cms")
 
     merged = text.cms_merge(
-        spark.read.parquet(f"{tmp}/run_a_cms").unionByName(
+        spark.read.schema(cms_a.schema).parquet(f"{tmp}/run_a_cms").unionByName(
             text.token_cms_shard_sketches(
                 d.filter(F.col("doc_id") % 2 == 1), shard,
                 depth=_CMS_D, width=_CMS_W,
@@ -4304,10 +4307,9 @@ def x_dedup_components_incremental(spark: SparkSession,
     batch = d.filter(F.col("doc_id") % 3 == 2)
 
     tmp = lane_tmpdir("comp_state_")
-    dedup.neardup_components(hist, threshold=0.5).write.mode(
-        "overwrite"
-    ).parquet(f"{tmp}/components")
-    persisted = spark.read.parquet(f"{tmp}/components")
+    components = dedup.neardup_components(hist, threshold=0.5)
+    components.write.mode("overwrite").parquet(f"{tmp}/components")
+    persisted = spark.read.schema(components.schema).parquet(f"{tmp}/components")
 
     # the incremental probe: only batch shingles join the corpus —
     # history-history pairs are never built (review fix; the

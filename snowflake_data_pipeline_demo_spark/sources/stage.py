@@ -83,19 +83,30 @@ class Stage:
 
     # -- S3: LIST @stage ---------------------------------------------------
     def list(self, prefix: str = "") -> list[StageFile]:
-        """Recursive file listing, like ``LIST @stage/prefix``."""
+        """Recursive file listing, like ``LIST @stage/prefix``.
+
+        A walk with ``listStatus`` that prunes ``_``/``.`` names before
+        descending: ``_SUCCESS``, ``.crc`` files and ``_temporary/``
+        dirs of writes in progress are left out at any depth, as the
+        pipe's file source leaves them out. Not ``listFiles``: it builds
+        a ``LocatedFileStatus`` per file, which loads the file's
+        permissions, and Hadoop's local filesystem forks ``ls -ld`` for
+        that when libhadoop is not loaded."""
         p = self._jvm.org.apache.hadoop.fs.Path(f"{self.url}/{prefix}" if prefix else self.url)
         if not self._fs.exists(p):
             return []
         out: list[StageFile] = []
-        it = self._fs.listFiles(p, True)
-        while it.hasNext():
-            st = it.next()
-            path = st.getPath().toString()
-            name = path.rsplit("/", 1)[-1]
-            if name.startswith(("_", ".")):  # _SUCCESS, .crc, checkpoints
-                continue
-            out.append(StageFile(path, st.getLen(), st.getModificationTime()))
+        stack = [p]
+        while stack:
+            for st in self._fs.listStatus(stack.pop()):
+                jpath = st.getPath()
+                path = jpath.toString()
+                if path.rsplit("/", 1)[-1].startswith(("_", ".")):
+                    continue
+                if st.isDirectory():
+                    stack.append(jpath)
+                else:
+                    out.append(StageFile(path, st.getLen(), st.getModificationTime()))
         return sorted(out, key=lambda f: f.path)
 
     def list_df(self, prefix: str = "") -> DataFrame:

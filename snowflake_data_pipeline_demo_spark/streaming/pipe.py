@@ -24,7 +24,8 @@ replay after a crash in the write-to-commit window, a batch whose
 ``_SUCCESS`` marker already exists is SKIPPED (no new files, so
 downstream file-source streams see nothing new either); a half-written
 batch is overwritten and converges. The ledger rows (one per file,
-counted from the cached batch) are written from the driver with the
+counted from the cached batch; a staged file with no rows gets a
+``row_count = 0`` row) are written from the driver with the
 batch-keyed form of ``Table.write_rows``, so replays update-in-place
 instead of duplicating.
 
@@ -46,6 +47,7 @@ from pyspark.sql.types import StructType
 from ..sources.catalog import Table
 from ..sources.stage import Stage
 from .history import COPY_HISTORY_SCHEMA
+from .streams import file_log, last_committed_batch
 
 
 class Pipe:
@@ -106,11 +108,16 @@ class Pipe:
                     ),
                     sub,
                 )
-            counts = batch.groupBy("metadata$filename").count().collect()
+            counts = dict(batch.groupBy("metadata$filename").count().collect())
+            # a file with no rows has no group above; the batch's files
+            # come from the source's checkpoint log, because
+            # batch.inputFiles() is empty here (the batch is a LogicalRDD)
+            for path, _ in file_log(self.checkpoint_dir, batch_id):
+                counts.setdefault(path, 0)
             now = dt.datetime.now(dt.timezone.utc)
             self.copy_history.write_rows(
-                [(r[0], self.stage.url, self.raw_table.path, r[1], 0, now,
-                  batch_id) for r in counts],
+                [(name, self.stage.url, self.raw_table.path, n, 0, now,
+                  batch_id) for name, n in counts.items()],
                 sub,
             )
         finally:
@@ -178,8 +185,6 @@ class Pipe:
     def last_committed_batch(self) -> int | None:
         """The pipe checkpoint's transactional frontier (see module
         docstring: ledger rows beyond it are from uncommitted batches)."""
-        from .streams import last_committed_batch
-
         return last_committed_batch(self.checkpoint_dir)
 
     # -- T7: system$pipe_status() -------------------------------------------

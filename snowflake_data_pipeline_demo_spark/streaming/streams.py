@@ -43,6 +43,44 @@ def last_committed_batch(checkpoint_dir: str) -> int | None:
     return max(ids) if ids else None
 
 
+#: the forms a local path takes: ``/x``, ``file:/x`` (Hadoop's
+#: ``Path.toString``, ``_metadata.file_path``), ``file:///x`` (the
+#: file-source log)
+_LOCAL_PREFIX = "^(file:)?/+"
+
+
+def file_log(checkpoint_dir: str, batch_id: int | None = None) -> list[tuple[str, int]]:
+    """``(path, batchId)`` of each entry in a file-source checkpoint's
+    ``sources/0`` log, local paths in the ``file:/x`` form. Every
+    ``N.compact`` file lists each entry through N again, so an entry may
+    come more than once. With ``batch_id``, only that batch's entries,
+    read from the one log file that holds them (``N`` or ``N.compact``).
+    """
+    src = os.path.join(checkpoint_dir, "sources", "0")
+    if not os.path.isdir(src):
+        return []
+    names = sorted(os.listdir(src)) if batch_id is None else [
+        str(batch_id), f"{batch_id}.compact"]
+    out = []
+    for fn in names:
+        p = os.path.join(src, fn)
+        if fn.startswith(".") or not os.path.isfile(p):
+            continue
+        with open(p) as fh:
+            for line in fh:
+                line = line.strip()
+                if not line or line.startswith("v"):
+                    continue
+                try:
+                    entry = json.loads(line)
+                except json.JSONDecodeError:
+                    continue
+                path = entry.get("path", "")
+                if path and (batch_id is None or entry["batchId"] == batch_id):
+                    out.append((re.sub(_LOCAL_PREFIX, "file:/", path), entry["batchId"]))
+    return out
+
+
 class TableStream:
     """A named, independently-bookmarked change stream on a table."""
 
@@ -77,38 +115,17 @@ class TableStream:
         consumed-by-DML). Filtering by entry, not by log file name,
         matters for ``N.compact``: it is written when batch N starts and
         lists every entry through N."""
-
-        def norm(p: str) -> str:
-            # file:///x, file:/x, /x -> /x
-            return re.sub(r"^file:/+", "/", p)
-
         frontier = last_committed_batch(self.checkpoint_dir)
-        seen: set[str] = set()
-        src = os.path.join(self.checkpoint_dir, "sources", "0")
-        if frontier is not None and os.path.isdir(src):
-            for fn in sorted(os.listdir(src)):
-                p = os.path.join(src, fn)
-                if not os.path.isfile(p) or fn.startswith("."):
-                    continue
-                with open(p) as fh:
-                    for line in fh:
-                        line = line.strip()
-                        if not line or line.startswith("v"):
-                            continue
-                        try:
-                            entry = json.loads(line)
-                        except json.JSONDecodeError:
-                            continue
-                        path = entry.get("path", "")
-                        if path and entry["batchId"] <= frontier:
-                            seen.add(norm(path))
+        seen = set() if frontier is None else {
+            path for path, b in file_log(self.checkpoint_dir) if b <= frontier
+        }
         total = self.table.read().count()
         if not seen:
             return total
         consumed = (
             self.table.read()
             .withColumn(
-                "__f", F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
+                "__f", F.regexp_replace(F.col("_metadata.file_path"), _LOCAL_PREFIX, "file:/")
             )
             .filter(F.col("__f").isin(list(seen)))
             .count()

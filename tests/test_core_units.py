@@ -48,6 +48,35 @@ def test_stage_roundtrip(spark, tmp_path):
     assert stage.list() == []
 
 
+def test_stage_list_walks_nested_prefixes(spark, tmp_path):
+    """LIST walks nested day prefixes and leaves out what the pipe's
+    file source cannot see either: ``_SUCCESS``, ``.crc`` files and a
+    ``_temporary/`` dir of a write in progress, at any depth. Each
+    entry carries the file's size and mtime; the output is sorted."""
+    import os
+
+    root = tmp_path / "stage"
+    stage = Stage(spark, str(root))
+    want = []
+    for rel, body in [("2020/01/day1.json", "{}\n"), ("2020/02/day2.json", "{}\n{}\n"),
+                      ("top.json", "")]:
+        f = root / rel
+        f.parent.mkdir(parents=True, exist_ok=True)
+        f.write_text(body)
+        want.append((f"file:{f}", len(body), int(os.stat(f).st_mtime * 1000)))
+    for rel in ("2020/01/_SUCCESS", "2020/01/.day1.json.crc",
+                "2020/02/_temporary/0/part-0.json", "_temporary/x.json"):
+        f = root / rel
+        f.parent.mkdir(parents=True, exist_ok=True)
+        f.write_text("{}\n")
+    got = stage.list()
+    assert [(f.path, f.size) for f in got] == sorted((p, n) for p, n, _ in want)
+    mtimes = {p: m for p, _, m in want}
+    assert all(abs(f.mtime_ms - mtimes[f.path]) <= 1000 for f in got)
+    assert [f.path for f in stage.list("2020")] == sorted(p for p, _, _ in want[:2])
+    assert stage.list("missing") == []
+
+
 def test_catalog_append_truncate(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path / "wh"))
     t = cat.create_table("modelled.programs", PROGRAMS_SCHEMA)
@@ -328,6 +357,59 @@ def test_loader_contract_normalizes_testdata_schemas(spark):
             el.elementType, (T.FloatType, T.DoubleType)), sf
         li = load(spark, sf, "lineitem")
         assert "l_shipdate" in li.columns and "l_quantity" in li.columns, sf
+
+
+def _jobs_run(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = "testdata-load-jobs"
+    sc.setJobGroup(group, "count the jobs of one call")
+    before = set(sc.statusTracker().getJobIdsForGroup(group))
+    try:
+        out = fn()
+        return out, len(set(sc.statusTracker().getJobIdsForGroup(group)) - before)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_testdata_load_infers_each_file_version_once(spark, tmp_path):
+    """The second load of an unchanged file runs no Spark job (the first
+    infers its schema) and gives the same schema and rows. A file
+    replaced at the same path with another column is inferred again,
+    and a TIMESTAMP(NANOS) ts still comes back as a TIMESTAMP on the
+    memoized read."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from snowflake_data_pipeline_demo_spark.sources.testdata import load
+
+    sf = str(tmp_path)
+    ns = 1_600_000_000_123_456_000
+    pq.write_table(pa.table({
+        "id": pa.array([1, 2, None], pa.int64()),
+        "ts": pa.array([ns, ns + 1_000, None], pa.timestamp("ns")),
+    }), f"{sf}/events.parquet")
+    first, _ = _jobs_run(spark, lambda: load(spark, sf, "events"))
+    want = sorted(map(tuple, first.collect()), key=repr)
+    second, jobs = _jobs_run(spark, lambda: load(spark, sf, "events"))
+    assert jobs == 0
+    assert second.schema == first.schema
+    assert isinstance(second.schema["ts"].dataType, T.TimestampType)
+    assert sorted(map(tuple, second.collect()), key=repr) == want
+    micros = sorted(r[0] for r in second.selectExpr("unix_micros(ts)").collect()
+                    if r[0] is not None)
+    assert micros == [ns // 1000, ns // 1000 + 1]
+
+    pq.write_table(pa.table({"id": pa.array([7], pa.int64()),
+                             "name": pa.array(["x"])}), f"{sf}/new.parquet")
+    os.replace(f"{sf}/new.parquet", f"{sf}/events.parquet")
+    third, jobs = _jobs_run(spark, lambda: load(spark, sf, "events"))
+    assert jobs == 1
+    assert third.columns == ["id", "name"]
+    assert [tuple(r) for r in third.collect()] == [(7, "x")]
 
 
 def test_stage_multi_format_roundtrip(spark, tmp_path):

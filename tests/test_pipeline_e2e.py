@@ -292,22 +292,30 @@ def test_task_triggers_scan_once_within_job_budget(spark, tables, tmp_path):
 
 
 def test_zero_row_batch_is_skipped_by_every_task(spark, tmp_path):
-    """An empty staged JSON file lands as a zero-row raw batch. Each
-    task's one job sees no rows, so each records exactly one SKIPPED row
-    for that micro-batch (dp_demo.sql:170), no SUCCEEDED row, and the
-    merges append nothing to the dimensions."""
+    """An empty staged JSON file lands as a zero-row raw batch with a
+    ``row_count = 0`` copy_history row, so the pipe counts it loaded
+    and purge deletes it. Each task's one job sees no rows, so each
+    records exactly one SKIPPED row for that micro-batch
+    (dp_demo.sql:170), no SUCCEEDED row, and the merges append nothing
+    to the dimensions."""
     p = CitibikePipeline(spark, str(tmp_path))
     os.makedirs(f"{p.stage.url}/snowpipe_demo_empty")
     open(f"{p.stage.url}/snowpipe_demo_empty/day.json", "w").close()
+    (staged,) = [f.path for f in p.stage.list()]
     p.pipe.run_available()
     assert p.trips_raw.data_files(), "the pipe wrote no raw batch file"
     assert p.trips_raw.count() == 0
+    assert [(r["file_name"], r["row_count"], r["batch_id"])
+            for r in p.copy_history.read().collect()] == [(staged, 0, 0)]
+    assert p.pipe.status()["pendingFileCount"] == 0
     p.runner.run_available_all()
     rows = sorted((r["name"], r["state"], r["batch_id"], r["rows_processed"])
                   for r in p.task_history.read().collect())
     assert rows == [(t, "SKIPPED", 0, 0) for t in sorted(p.runner.tasks)]
     assert p.programs.data_files() == [] and p.stations.data_files() == []
     assert p.trips.count() == 0
+    assert p.purge_files() == 1
+    assert p.stage.list() == []
 
 
 def test_purge_retries_a_failed_rm(spark, tables, tmp_path):
