@@ -47,7 +47,7 @@ from pyspark.sql.types import StructType
 from ..sources.catalog import Table
 from ..sources.stage import Stage
 from .history import COPY_HISTORY_SCHEMA
-from .streams import file_log, last_committed_batch
+from .streams import file_log, last_committed_batch, staged_path
 
 
 class Pipe:
@@ -193,10 +193,9 @@ class Pipe:
         132): executionState + pendingFileCount (staged minus loaded).
         The loaded files are read from copy_history with pyarrow on the
         driver (no Spark job)."""
-        staged = {f.path for f in self.stage.list()}
-        loaded = set(
-            self.copy_history.read_arrow(["file_name"]).column("file_name").to_pylist()
-        )
+        staged = {staged_path(f.path) for f in self.stage.list()}
+        loaded = {staged_path(n) for n in
+                  self.copy_history.read_arrow(["file_name"]).column("file_name").to_pylist()}
         return {
             "executionState": "RUNNING" if self.query and self.query.isActive else "PAUSED",
             "pendingFileCount": len(staged - loaded),

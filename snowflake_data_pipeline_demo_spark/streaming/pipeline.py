@@ -43,7 +43,7 @@ from ..sources.catalog import (
 from ..sources.stage import Stage
 from .history import COPY_HISTORY_SCHEMA, TASK_HISTORY_SCHEMA
 from .pipe import Pipe
-from .streams import TableStream
+from .streams import TableStream, staged_path
 from .tasks import Task, TaskRunner
 
 from pyspark.sql import types as T
@@ -206,10 +206,9 @@ class CitibikePipeline:
         ).filter((pc.field("error_count") == 0)
                  & (pc.field("last_load_time") >= cutoff)
                  & (pc.field("batch_id") <= frontier))
-        staged = {f.path.removeprefix("file:") for f in self.stage.list()}
+        staged = {staged_path(f.path) for f in self.stage.list()}
         purged = 0
-        for name in set(loaded["file_name"].to_pylist()):
-            name = name.removeprefix("file:")
+        for name in {staged_path(n) for n in loaded["file_name"].to_pylist()}:
             if name in staged:
                 purged += int(self.stage.rm(name))
         return purged

@@ -23,6 +23,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,6 +48,15 @@ def last_committed_batch(checkpoint_dir: str) -> int | None:
 #: ``Path.toString``, ``_metadata.file_path``), ``file:///x`` (the
 #: file-source log)
 _LOCAL_PREFIX = "^(file:)?/+"
+
+
+def staged_path(name: str) -> str:
+    """A staged file's path in the one form that ``Stage.list`` paths and
+    copy_history ``file_name``s are compared in, and that ``Stage.rm``
+    takes: URL-decoded, a local path without its ``file:`` scheme. The
+    ledger holds Spark's URL-encoded form (``day%201``), ``Stage.list``
+    Hadoop's decoded ``Path.toString`` (``day 1``)."""
+    return re.sub(_LOCAL_PREFIX, "/", unquote(name))
 
 
 def file_log(checkpoint_dir: str, batch_id: int | None = None) -> list[tuple[str, int]]:

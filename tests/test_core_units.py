@@ -4,6 +4,7 @@ scalars, variant) — the pieces the driver gate doesn't see directly."""
 from __future__ import annotations
 
 import datetime as dt
+import zipimport
 
 import pyspark.sql.functions as F
 import pytest
@@ -560,3 +561,140 @@ def test_env_extra_conf_parses_semicolon_pairs(monkeypatch):
     }
     monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF")
     assert _env_extra_conf() == {}
+
+
+#: CPython 3.12+ re-reads a zip importer's directory lazily, so the
+#: worker daemon wraps nothing there
+_LAZY_ZIPIMPORT = hasattr(zipimport.zipimporter, "_get_files")
+
+
+def _write_zip(path, modules: dict[str, str]) -> None:
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as z:
+        for name, src in modules.items():
+            z.writestr(f"{name}.py", src)
+
+
+@pytest.mark.skipif(_LAZY_ZIPIMPORT, reason="zipimporter invalidates lazily")
+def test_pyworker_rereads_a_zip_only_when_it_changed(tmp_path, monkeypatch):
+    """The worker daemon's ``zipimporter.invalidate_caches`` re-reads an
+    archive's directory only after the archive changed or when it can no
+    longer be stat'ed, and a changed archive's new module imports."""
+    import importlib
+    import os
+    import sys
+
+    from snowflake_data_pipeline_demo_spark import pyworker
+
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {"graft_zip_a": "X = 1\n"})
+    monkeypatch.syspath_prepend(archive)
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        zipimport.zipimporter.invalidate_caches)
+    reads = []
+    original = pyworker._original
+    monkeypatch.setattr(pyworker, "_original", lambda self: (
+        reads.append(self.archive), original(self)))
+    try:
+        assert importlib.import_module("graft_zip_a").X == 1
+        pyworker.install()
+        assert zipimport.zipimporter.invalidate_caches is pyworker.invalidate_caches
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        assert archive not in reads
+        _write_zip(archive, {"graft_zip_a": "X = 1\n", "graft_zip_b": "Y = 2\n"})
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 1
+        assert importlib.import_module("graft_zip_b").Y == 2
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 1
+        os.remove(archive)  # an archive that cannot be stat'ed is re-read
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 3
+    finally:
+        sys.modules.pop("graft_zip_a", None)
+        sys.modules.pop("graft_zip_b", None)
+
+
+def test_pyworker_leaves_a_lazy_zipimporter_alone(monkeypatch):
+    """On a CPython whose ``zipimporter`` already invalidates lazily
+    (it has ``_get_files``), ``install`` wraps nothing."""
+    from snowflake_data_pipeline_demo_spark import pyworker
+
+    before = zipimport.zipimporter.invalidate_caches
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", before)
+    monkeypatch.setattr(zipimport.zipimporter, "_get_files",
+                        lambda self: {}, raising=False)
+    pyworker.install()
+    assert zipimport.zipimporter.invalidate_caches is before
+
+
+def test_python_workers_fork_from_the_engine_daemon(spark, tmp_path):
+    """Workers carry the daemon's wrapper, and a ``.py`` file added with
+    ``addPyFile`` after the workers started imports inside a UDF."""
+    sc = spark.sparkContext
+
+    def wrapper_module(_):
+        import zipimport
+
+        return zipimport.zipimporter.invalidate_caches.__module__
+
+    assert sc.parallelize([0], 1).map(wrapper_module).collect() == [
+        "zipimport" if _LAZY_ZIPIMPORT else "snowflake_data_pipeline_demo_spark.pyworker"]
+    mod = tmp_path / "graft_added_after_start.py"
+    mod.write_text("VALUE = 42\n")
+    sc.addPyFile(str(mod))
+
+    def added_value(_):
+        import graft_added_after_start
+
+        return graft_added_after_start.VALUE
+
+    assert sc.parallelize([0, 1], 2).map(added_value).collect() == [42, 42]
+
+
+_OUTSIDE_CHECKOUT = """
+import sys
+sys.path.insert(0, {repo!r})
+from snowflake_data_pipeline_demo_spark.operators import similarity, text
+from snowflake_data_pipeline_demo_spark.session import get_spark
+spark = get_spark("outside_checkout")
+docs = spark.createDataFrame({docs!r}, "doc_id long, text string")
+print(sorted(map(tuple, text.winnow_fingerprints(docs).collect())))
+vecs = spark.createDataFrame({vecs!r}, "vec_id long, embedding array<double>")
+print(sorted(map(tuple, similarity.ivf_assign(vecs, vecs.selectExpr(
+    "vec_id AS centroid_id", "embedding")).collect())))
+"""
+
+
+def test_engine_udfs_run_from_outside_the_checkout(spark, tmp_path):
+    """A driver whose working directory is not the checkout, with only
+    its ``sys.path`` pointing there, starts Python workers that import
+    the engine: the daemon and the UDFs' pickled functions both need
+    the package on the workers' path."""
+    import os
+    import subprocess
+    import sys
+
+    from snowflake_data_pipeline_demo_spark.operators import similarity, text
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    docs = [(1, "the quick brown fox jumps"), (2, "over the lazy dog again")]
+    vecs = [(1, [1.0, 0.0]), (2, [0.6, 0.8])]
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _OUTSIDE_CHECKOUT.format(repo=repo, docs=docs, vecs=vecs)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    d = spark.createDataFrame(docs, "doc_id long, text string")
+    v = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    expected = [
+        sorted(map(tuple, text.winnow_fingerprints(d).collect())),
+        sorted(map(tuple, similarity.ivf_assign(v, v.selectExpr(
+            "vec_id AS centroid_id", "embedding")).collect())),
+    ]
+    assert out.stdout.splitlines()[-2:] == [str(rows) for rows in expected]

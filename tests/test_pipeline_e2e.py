@@ -338,3 +338,24 @@ def test_purge_retries_a_failed_rm(spark, tables, tmp_path):
     assert [f.path.removeprefix("file:") for f in p.stage.list()] == [victim]
     assert p.purge_files() == 1
     assert p.stage.list() == []
+
+
+def test_url_encoded_ledger_names_are_purged(spark, tables, tmp_path):
+    """The ledger holds Spark's URL-encoded file names (``day%201``) and
+    ``Stage.list`` Hadoop's decoded paths (``day 1``): a staged file
+    whose path holds a space or a ``%`` still counts as loaded and is
+    purged."""
+    p = CitibikePipeline(spark, str(tmp_path / "sp ace%x"))
+    p.push_trips.after = []  # purge below, not chained to push_trips
+    doc = trip_docs(tables["lineitem"], tables["supplier"],
+                    tables["nation"]).select("v").first()["v"]
+    os.makedirs(f"{p.stage.url}/day 1%x")
+    open(f"{p.stage.url}/day 1%x/a b.json", "w").close()
+    os.makedirs(f"{p.stage.url}/day2")
+    with open(f"{p.stage.url}/day2/f.json", "w") as f:
+        f.write(doc + "\n")
+    p.run_available()
+    assert sorted(r["row_count"] for r in p.copy_history.read().collect()) == [0, 1]
+    assert p.pipe.status()["pendingFileCount"] == 0
+    assert p.purge_files() == 2
+    assert p.stage.list() == []
